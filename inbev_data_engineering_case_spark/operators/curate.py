@@ -153,8 +153,10 @@ def curate_corpus(
     ``asset_near_dup`` (default None = off) is the IMAGE-side near-dup
     gate a multimodal corpus needs beside the text one: pass the asset
     table (``asset_id`` aligned with ``id_col``, ``media_type``,
-    ``payload``) and every document whose image is a non-survivor of
-    its perceptual-hash cluster drops in the same pass
+    ``payload``; binary PNM decodes, any other image format
+    dead-letters and so survives the gate) and every document whose
+    image is a non-survivor of its perceptual-hash cluster drops in
+    the same pass
     (``multimodal.image_near_dup_keep``: dHash → Hamming-bucketed
     pairs at ``asset_max_hamming``/``asset_bucket_bits`` → components
     → min-id survivor — the text survivor policy applied to pixels).

@@ -697,7 +697,9 @@ def _truncate_lineage(
 # hop and jump joins broadcast the label side (the edge list — the big
 # side at scale — is never shuffled per round) and above it the plan is
 # byte-identical to before. 2M (node, comp) rows ≈ 32 MB framed — half
-# the session's 64 MB autoBroadcastJoinThreshold.
+# the session's 64 MB autoBroadcastJoinThreshold. ``F.broadcast`` is a
+# hint that bypasses that threshold, so this fixed constant is the only
+# bound on the broadcast size; callers cannot raise it.
 COMPONENTS_BROADCAST_NODE_LIMIT = 2_000_000
 
 
@@ -706,7 +708,6 @@ def dedup_components_with_stats(
     max_iter: int = 25,
     reliable_checkpoint: bool | None = None,
     require_convergence: bool = False,
-    broadcast_node_limit: int = COMPONENTS_BROADCAST_NODE_LIMIT,
 ) -> tuple[DataFrame, int]:
     """Connected components of the near-dup pair graph → ((node, comp),
     rounds_run) with comp = min node id reachable.
@@ -832,7 +833,7 @@ def dedup_components_with_stats(
     # count is EXACT (measured by the init aggregate), so the gate is
     # data-adaptive: a billion-node production graph keeps the shuffle
     # joins untouched.
-    small = n_nodes is not None and n_nodes <= broadcast_node_limit
+    small = n_nodes is not None and n_nodes <= COMPONENTS_BROADCAST_NODE_LIMIT
 
     def maybe_broadcast(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if small else df

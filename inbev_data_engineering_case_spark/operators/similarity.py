@@ -145,13 +145,16 @@ def _vec_dim(df: DataFrame, vec_col: str) -> int | None:
     probe while any structurally different frame probes fresh; the
     cache lives on the session object (dies with it — nothing persists
     across bench invocations) and an empty-input None is never cached
-    (a state table rebuilt under the same path may fill later).
+    (a state table rebuilt under the same path may fill later). A file
+    scan's plan does not change when its path is overwritten, so the
+    key also carries the sorted ``inputFiles()`` (empty for non-file
+    plans): rewritten files get new names and probe fresh.
     In production the dimensionality is pipeline config; this keeps
     its discovery at config cost instead of one job per operator call.
     """
     spark = df.sparkSession
     try:
-        key = (df.semanticHash(), vec_col)
+        key = (df.semanticHash(), tuple(sorted(df.inputFiles())), vec_col)
     except Exception:  # noqa: BLE001 — exotic plan: just probe
         key = None
     cache = getattr(spark, "_graft_vec_dim_cache", None)

@@ -111,9 +111,11 @@ def star_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: read_parquet_table(spark, sf_dir, t) for t in STAR_TABLES}
 
 
-# file-extension -> media_type for the binary-asset landing scan. Content
-# magic still wins at decode time (operators/multimodal.py dispatches on
-# payload bytes), this only routes the metadata.
+# file-extension -> media_type for the binary-asset landing scan. This only
+# routes the metadata: landing decodes nothing. At decode time content magic
+# wins (operators/multimodal.py dispatches on payload bytes), and only
+# binary PNM images and RIFF/WAVE audio decode; every other image, audio or
+# video format below lands as-is and dead-letters as ``decoder_gap``.
 _EXT_MEDIA_TYPES = {
     "bmp": "image/bmp",
     "png": "image/png",

@@ -15,7 +15,6 @@ from inbev_data_engineering_case_spark.operators.dedup import (
 from inbev_data_engineering_case_spark.operators.multimodal import (
     assets_from_documents,
     decode_features,
-    resize_assets,
     sample_frames,
     target_rows_per_partition,
 )
@@ -173,26 +172,6 @@ def test_multimodal_plumbing(spark, docs):
 def test_target_rows_per_partition():
     assert target_rows_per_partition(2 * 1024 * 1024) == 128
     assert target_rows_per_partition(0) >= 1
-
-
-def test_resize_assets_pads_and_truncates(spark, docs):
-    documents = docs.withColumn("source", F.lit("unit")).withColumn(
-        "lang", F.lit("en")
-    ).withColumn("n_chars", F.length("text"))
-    assets = assets_from_documents(documents)
-    out = {r["asset_id"]: r for r in resize_assets(assets, target_bytes=16).collect()}
-    for r in out.values():
-        assert len(bytes(r["payload"])) == 16
-        assert r["meta"]["n_bytes"] == 16
-    long_text = docs.filter(F.col("doc_id") == 1).first()["text"]
-    assert bytes(out[1]["payload"]) == long_text.encode()[:16]  # truncated
-    # the real branch treats non-media payloads the same way (no decoder
-    # to apply): truncate/pad, metadata recomputed
-    real = {
-        r["asset_id"]: r
-        for r in resize_assets(assets, target_bytes=16, real_decoder=True).collect()
-    }
-    assert bytes(real[1]["payload"]) == long_text.encode()[:16]
 
 
 def test_sample_frames_is_one_to_many(spark, docs):
@@ -405,41 +384,26 @@ def test_stdlib_real_decoder_wav_end_to_end(spark):
     assert out[3]["checksum"] == zlib.crc32(blob) % 1_000_003
     assert 0.0 < out[3]["feature"][1] < 1.0  # repetitive text compresses
 
-    # compressed images / video remain the honest stub: PIL/ffmpeg absent
+    # every other image format and every video payload: decoder gap
     import pytest as _pytest
 
-    with _pytest.raises(
-        NotImplementedError, match="requires a codec library"
-    ):
+    with _pytest.raises(NotImplementedError, match="binary PNM"):
         _stdlib_featurize("image/png", b"\x89PNG")
-    with _pytest.raises(NotImplementedError, match="ffmpeg"):
+    with _pytest.raises(NotImplementedError, match="video"):
         _stdlib_featurize("video/mp4", b"\x00\x00\x00 ftypisom")
 
 
-def _make_bmp(
-    pixels_bgr: list[list[tuple[int, int, int]]], top_down: bool = False
-) -> bytes:
-    """Assemble a 24bpp BI_RGB BMP from a row-major pixel grid (stored
-    bottom-up unless top_down, matching the format)."""
-    import struct
-
-    height, width = len(pixels_bgr), len(pixels_bgr[0])
-    row_stride = ((width * 3 + 3) // 4) * 4
-    raster = b""
-    rows = pixels_bgr if top_down else list(reversed(pixels_bgr))
-    for row in rows:
-        raw = b"".join(bytes(px) for px in row)
-        raster += raw.ljust(row_stride, b"\xAA")  # junk padding on purpose
-    hdr_h = -height if top_down else height
-    info = struct.pack("<IiiHHIIiiII", 40, width, hdr_h, 1, 24, 0,
-                       len(raster), 2835, 2835, 0, 0)
-    file_hdr = struct.pack("<2sIHHI", b"BM", 14 + 40 + len(raster), 0, 0, 54)
-    return file_hdr + info + raster
+def _make_pnm(pixels) -> bytes:
+    """Binary PNM from an (h, w, c) uint8 array: P6 for 3 channels, P5
+    for 1."""
+    h, w, c = pixels.shape
+    magic = b"P6" if c == 3 else b"P5"
+    return magic + b"\n%d %d\n255\n" % (w, h) + pixels.tobytes()
 
 
 def test_stdlib_image_decoders():
-    """BMP and binary-PNM decode natively: dimensions, mean pixel, and a
-    padding-insensitive crc32 — no PIL involved."""
+    """Binary PNM decodes natively: dimensions, mean sample, and a crc32
+    of the raster — no PIL involved."""
     import zlib
 
     import pytest as _pytest
@@ -447,20 +411,6 @@ def test_stdlib_image_decoders():
     from inbev_data_engineering_case_spark.operators.multimodal import (
         _stdlib_featurize,
     )
-
-    # 2x3 BMP, known bytes: mean over the UNPADDED raster only
-    grid = [
-        [(0, 0, 0), (255, 255, 255), (10, 20, 30)],
-        [(100, 110, 120), (1, 2, 3), (200, 210, 220)],
-    ]
-    flat = [b for row in grid for px in row for b in px]
-    want_mean = sum(flat) / len(flat)
-    checksum, feat = _stdlib_featurize("image/bmp", _make_bmp(grid))
-    assert feat == [3.0, 2.0, 24.0, want_mean]
-
-    # top-down variant: same pixels, same mean, same dimensions
-    _, feat_td = _stdlib_featurize("image/bmp", _make_bmp(grid, top_down=True))
-    assert feat_td[:3] == [3.0, 2.0, 24.0] and feat_td[3] == want_mean
 
     # P6 PPM with a header comment; checksum is crc32 of the raster
     raster = bytes(range(2 * 2 * 3))
@@ -476,319 +426,38 @@ def test_stdlib_image_decoders():
 
     # malformed payloads fail loud, not wrong
     with _pytest.raises(ValueError, match="truncated"):
-        _stdlib_featurize("image/bmp", _make_bmp(grid)[:-4])
+        _stdlib_featurize("image/x-portable-pixmap", ppm[:-4])
     with _pytest.raises(ValueError, match="maxval"):
         _stdlib_featurize("image/x-portable-pixmap", b"P6 1 1 65535 \x00\x00")
 
 
 def test_stdlib_image_decode_through_spark(spark):
-    """The BMP branch through the real mapInPandas path (not just the inner
+    """The PNM branch through the real mapInPandas path (not just the inner
     function): q_multimodal_features' plumbing with real_decoder=True."""
     from inbev_data_engineering_case_spark.operators.multimodal import (
         decode_features,
     )
 
-    bmp = _make_bmp([[(5, 5, 5), (10, 10, 10)]])
+    pgm = b"P5\n2 1\n255\n" + bytes([5, 10])
     assets = spark.createDataFrame(
-        [(1, "image/bmp", bmp, {"n_bytes": len(bmp), "source": "t"})],
+        [(1, "image/x-portable-graymap", pgm,
+          {"n_bytes": len(pgm), "source": "t"})],
         "asset_id long, media_type string, payload binary, "
         "meta struct<n_bytes:long, source:string>",
     )
     row = decode_features(assets, real_decoder=True).collect()[0]
-    assert row["feature"] == [2.0, 1.0, 24.0, 7.5]
-
-
-def _make_png(rows, color_type, filters, palette=None) -> bytes:
-    """Assemble a real PNG: per-row forward filtering (the encoder side of
-    the spec's five filters, so the decoder's unfilter paths all get
-    exercised), zlib-compressed scanlines, CRC'd chunks."""
-    import struct
-    import zlib
-
-    channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}[color_type]
-
-    def px_bytes(px):
-        return bytes([px]) if isinstance(px, int) else bytes(px)
-
-    raw_rows = [b"".join(px_bytes(px) for px in row) for row in rows]
-    bpp, stride = channels, len(raw_rows[0])
-    prev = bytes(stride)
-    scan = b""
-    for raw, f in zip(raw_rows, filters):
-        if f == 0:
-            filt = raw
-        elif f == 1:  # Sub
-            filt = bytes(
-                (raw[x] - (raw[x - bpp] if x >= bpp else 0)) & 0xFF
-                for x in range(stride)
-            )
-        elif f == 2:  # Up
-            filt = bytes((raw[x] - prev[x]) & 0xFF for x in range(stride))
-        elif f == 3:  # Average
-            filt = bytes(
-                (raw[x] - (((raw[x - bpp] if x >= bpp else 0) + prev[x]) >> 1))
-                & 0xFF
-                for x in range(stride)
-            )
-        else:  # Paeth
-            filt = b""
-            for x in range(stride):
-                a = raw[x - bpp] if x >= bpp else 0
-                b_ = prev[x]
-                c = prev[x - bpp] if x >= bpp else 0
-                p = a + b_ - c
-                pa, pb, pc = abs(p - a), abs(p - b_), abs(p - c)
-                pred = a if pa <= pb and pa <= pc else (b_ if pb <= pc else c)
-                filt += bytes([(raw[x] - pred) & 0xFF])
-        scan += bytes([f]) + filt
-        prev = raw
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + ctype
-            + data
-            + struct.pack(">I", zlib.crc32(ctype + data))
-        )
-
-    ihdr = struct.pack(">IIBBBBB", stride // channels, len(rows), 8,
-                       color_type, 0, 0, 0)
-    body = chunk(b"IHDR", ihdr)
-    if palette is not None:
-        body += chunk(b"PLTE", bytes(v for rgb in palette for v in rgb))
-    body += chunk(b"IDAT", zlib.compress(scan)) + chunk(b"IEND", b"")
-    return b"\x89PNG\r\n\x1a\n" + body
-
-
-def test_stdlib_png_decoder():
-    """PNG decodes for real — zlib inflate + all five unfilter paths; the
-    fingerprint is over decoded pixels, so two encodings of the same image
-    (different filter choices) hash identically."""
-    import zlib
-
-    import pytest as _pytest
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _stdlib_featurize,
-    )
-
-    # 3x5 RGB gradient: filters None/Sub/Up on one encoding, Avg/Paeth/Sub
-    # on another — identical decoded raster, identical checksum
-    rows = [
-        [((r * 40 + c * 31) % 256, (r * 7 + c * 11) % 256, (r + c * 90) % 256)
-         for c in range(5)]
-        for r in range(3)
-    ]
-    flat = [v for row in rows for px in row for v in px]
-    want_mean = sum(flat) / len(flat)
-    want_crc = zlib.crc32(bytes(flat)) % 1_000_003
-    enc_a = _make_png(rows, color_type=2, filters=[0, 1, 2])
-    enc_b = _make_png(rows, color_type=2, filters=[3, 4, 1])
-    for enc in (enc_a, enc_b):
-        checksum, feat = _stdlib_featurize("image/png", enc)
-        assert feat == [5.0, 3.0, 3.0, want_mean]
-        assert checksum == want_crc
-    assert enc_a != enc_b  # genuinely different byte streams
-
-    # grayscale with Paeth + RGBA with Average: channel counts flow through
-    gray = [[10, 200, 30], [250, 5, 128]]
-    _, feat = _stdlib_featurize("image/png", _make_png(gray, 0, [4, 4]))
-    assert feat == [3.0, 2.0, 1.0, (10 + 200 + 30 + 250 + 5 + 128) / 6]
-    rgba = [[(1, 2, 3, 255), (9, 8, 7, 0)]]
-    _, feat = _stdlib_featurize("image/png", _make_png(rgba, 6, [3]))
-    assert feat[:3] == [2.0, 1.0, 4.0]
-
-    # palette expands through PLTE before the stats
-    pal = [(255, 0, 0), (0, 255, 0)]
-    png_p = _make_png([[0, 1], [1, 0]], 3, [0, 2], palette=pal)
-    checksum, feat = _stdlib_featurize("image/png", png_p)
-    assert feat == [2.0, 2.0, 3.0, 510 / 6.0]
-    expanded = bytes([255, 0, 0, 0, 255, 0, 0, 255, 0, 255, 0, 0])
-    assert checksum == zlib.crc32(expanded) % 1_000_003
-
-    # malformed/unsupported fail loud (cut reaches into the IDAT data;
-    # a clipped IEND alone is tolerated, as it should be)
-    with _pytest.raises(ValueError, match="truncated"):
-        _stdlib_featurize("image/png", enc_a[:-17])
-    import struct as _struct
-
-    bad_depth = bytearray(_make_png(gray, 0, [0, 0]))
-    bad_depth[24] = 16  # IHDR bit_depth byte
-    bad_depth[29:33] = _struct.pack(
-        ">I", zlib.crc32(bytes(bad_depth[12:29]))
-    )
-    with _pytest.raises(ValueError, match="bit_depth"):
-        _stdlib_featurize("image/png", bytes(bad_depth))
-    # JPEG now routes to the native decoder: a corrupt stream fails loud
-    # (ValueError -> dead-letter), not as a capability gap
-    with _pytest.raises(ValueError, match="truncated|marker"):
-        _stdlib_featurize("image/jpeg", b"\xff\xd8\xff\xe0 not decodable")
-
-
-def test_png_roundtrip_property():
-    """Encoder(test)→decoder(engine) round-trip under hypothesis: any pixel
-    grid, any per-row filter choice, any supported channel count must
-    decode back to exactly the input pixels — the unfilter math (incl. the
-    sequential Average/Paeth paths) is bit-exact, not approximately right."""
-    import numpy as np
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _png_decode,
-    )
-
-    @settings(max_examples=30, deadline=None)
-    @given(data=st.data())
-    def check(data):
-        h = data.draw(st.integers(1, 5))
-        w = data.draw(st.integers(1, 5))
-        color_type, ch = data.draw(
-            st.sampled_from([(0, 1), (2, 3), (6, 4)])
-        )
-        px = data.draw(
-            st.lists(
-                st.lists(
-                    st.tuples(*([st.integers(0, 255)] * ch)),
-                    min_size=w, max_size=w,
-                ),
-                min_size=h, max_size=h,
-            )
-        )
-        rows = [[p[0] for p in row] for row in px] if ch == 1 else px
-        filters = data.draw(
-            st.lists(st.integers(0, 4), min_size=h, max_size=h)
-        )
-        decoded, channels = _png_decode(_make_png(rows, color_type, filters))
-        assert channels == ch
-        want = np.array(
-            [[list(p) for p in row] for row in px], dtype=np.uint8
-        )
-        assert np.array_equal(decoded, want)
-
-    check()
-
-
-def _make_y4m(width: int, height: int, lumas: list[int]) -> bytes:
-    """Assemble a C420 YUV4MPEG2 stream: one constant-luma frame per entry
-    (chroma planes fixed at 128)."""
-    head = b"YUV4MPEG2 W%d H%d F25:1 Ip A1:1 C420\n" % (width, height)
-    n_luma = width * height
-    n_chroma = n_luma // 2
-    return head + b"".join(
-        b"FRAME\n" + bytes([y]) * n_luma + bytes([128]) * n_chroma
-        for y in lumas
-    )
-
-
-def test_y4m_demux_featurize_and_frame_sample(spark):
-    """Uncompressed video decodes for real: the Y4M featurizer reports
-    true dimensions/frame-count/mean-luma, and sample_frames' real branch
-    demuxes at FRAME boundaries keeping original frame indices."""
-    import pytest as _pytest
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _stdlib_featurize,
-        sample_frames,
-    )
-
-    y4m = _make_y4m(4, 2, lumas=[0, 100, 200, 50, 250])
-    checksum, feat = _stdlib_featurize("video/x-y4m", y4m)
-    assert feat == [4.0, 2.0, 5.0, (0 + 100 + 200 + 50 + 250) / 5]
-
-    assets = spark.createDataFrame(
-        [(7, "video/x-y4m", y4m, {"n_bytes": len(y4m), "source": "t"})],
-        "asset_id long, media_type string, payload binary, "
-        "meta struct<n_bytes:long, source:string>",
-    )
-    frames = sorted(
-        sample_frames(assets, every_n=2, real_decoder=True).collect(),
-        key=lambda r: r["frame_idx"],
-    )
-    assert [r["frame_idx"] for r in frames] == [0, 2, 4]
-    # each kept frame is the raw planar payload: 8 luma + 4 chroma bytes
-    assert all(r["n_bytes"] == 4 * 2 * 3 // 2 for r in frames)
-    assert bytes(frames[1]["frame"])[:8] == bytes([200]) * 8
-
-    with _pytest.raises(ValueError, match="FRAME marker"):
-        _stdlib_featurize("video/x-y4m", y4m + b"JUNK")
-    with _pytest.raises(NotImplementedError, match="ffmpeg"):
-        _stdlib_featurize("video/mp4", b"\x00\x00\x00 ftypisom")
-
-
-def test_resize_assets_real_decoders(spark):
-    """The real resize branch decodes → resamples → re-encodes: images
-    come back as smaller PNM rasters (media_type updated), WAV comes back
-    frame-decimated with duration preserved."""
-    import io
-    import wave
-
-    import numpy as np
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        resize_assets,
-    )
-
-    bmp = _make_bmp([[(90, 90, 90)] * 4 for _ in range(4)])  # 4x4 constant
-    png = _make_png([[(10, 20, 30)] * 6 for _ in range(6)], 2, [0] * 6)
-    pcm = (np.sin(np.arange(4000) / 20) * 9000).astype("<i2")
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(8000)
-        w.writeframes(pcm.tobytes())
-    wav = buf.getvalue()
-
-    assets = spark.createDataFrame(
-        [
-            (1, "image/bmp", bmp, {"n_bytes": len(bmp), "source": "t"}),
-            (2, "image/png", png, {"n_bytes": len(png), "source": "t"}),
-            (3, "audio/wav", wav, {"n_bytes": len(wav), "source": "t"}),
-        ],
-        "asset_id long, media_type string, payload binary, "
-        "meta struct<n_bytes:long, source:string>",
-    )
-    out = {
-        r["asset_id"]: r
-        for r in resize_assets(
-            assets, target_bytes=2000, real_decoder=True
-        ).collect()
-    }
-
-    # 4x4x3 = 48 bytes already fits 2000 -> no upsampling, same pixels
-    p1 = bytes(out[1]["payload"])
-    assert out[1]["media_type"] == "image/x-portable-pixmap"
-    assert p1.startswith(b"P6\n4 4\n255\n")
-    assert set(p1.split(b"255\n", 1)[1]) == {90}  # BGR->RGB of a constant
-
-    # 6x6 PNG -> PNM, still 6x6 (108 bytes fit), RGB order preserved
-    p2 = bytes(out[2]["payload"])
-    assert p2.startswith(b"P6\n6 6\n255\n")
-    assert p2.split(b"255\n", 1)[1][:3] == bytes([10, 20, 30])
-
-    # image genuinely shrinks when over budget: 6x6 -> 2x2 under 12 bytes
-    small = {
-        r["asset_id"]: r
-        for r in resize_assets(
-            assets.filter("asset_id = 2"), target_bytes=12, real_decoder=True
-        ).collect()
-    }
-    assert bytes(small[2]["payload"]).startswith(b"P6\n2 2\n255\n")
-
-    # WAV: 8000 bytes of PCM -> k=4 decimation, frame rate 8000->2000,
-    # duration 0.5 s preserved
-    with wave.open(io.BytesIO(bytes(out[3]["payload"]))) as r:
-        assert r.getframerate() == 2000
-        assert r.getnframes() == 1000
-        kept = np.frombuffer(r.readframes(1000), dtype="<i2")
-    assert np.array_equal(kept, pcm[::4])
+    assert row["feature"] == [2.0, 1.0, 1.0, 7.5]
 
 
 def test_read_binary_assets_lands_real_media(spark, tmp_path):
     """The binaryFile landing scan → asset schema → real decoder, end to
     end: files on disk come back as typed assets whose payloads genuinely
-    decode; the size cap prunes oversized files at the source."""
+    decode (or dead-letter as a decoder gap when the extension names a
+    format the decoders refuse); the size cap prunes oversized files at
+    the source."""
+    import io
+    import wave
+
     from inbev_data_engineering_case_spark.operators.multimodal import (
         ASSET_SCHEMA,
         decode_features,
@@ -797,10 +466,18 @@ def test_read_binary_assets_lands_real_media(spark, tmp_path):
         read_binary_assets,
     )
 
-    bmp = _make_bmp([[(9, 9, 9), (9, 9, 9)]])
-    y4m = _make_y4m(2, 2, lumas=[10, 20])
-    (tmp_path / "a.bmp").write_bytes(bmp)
-    (tmp_path / "b.y4m").write_bytes(y4m)
+    ppm = b"P6\n2 1\n255\n" + bytes([9] * 6)
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as w:
+        w.setnchannels(1)
+        w.setsampwidth(2)
+        w.setframerate(8000)
+        w.writeframes(b"\x10\x00" * 800)
+    wav = buf.getvalue()
+    flac = b"fLaC" + bytes(60)
+    (tmp_path / "a.ppm").write_bytes(ppm)
+    (tmp_path / "b.wav").write_bytes(wav)
+    (tmp_path / "c.flac").write_bytes(flac)
     (tmp_path / "huge.bin").write_bytes(b"\0" * 4096)
 
     assets = read_binary_assets(spark, str(tmp_path), max_bytes=2048)
@@ -808,17 +485,21 @@ def test_read_binary_assets_lands_real_media(spark, tmp_path):
     # source-derived columns are conservatively nullable)
     assert assets.schema.simpleString() == ASSET_SCHEMA.simpleString()
     rows = {r["media_type"]: r for r in assets.collect()}
-    assert set(rows) == {"image/bmp", "video/x-y4m"}  # huge.bin pruned
-    assert bytes(rows["image/bmp"]["payload"]) == bmp
-    assert rows["video/x-y4m"]["meta"]["n_bytes"] == len(y4m)
-    assert rows["image/bmp"]["meta"]["source"].endswith("a.bmp")
+    # huge.bin pruned; the extension routes the media type
+    assert set(rows) == {"image/x-portable-pixmap", "audio/wav", "audio/flac"}
+    assert bytes(rows["image/x-portable-pixmap"]["payload"]) == ppm
+    assert rows["audio/wav"]["meta"]["n_bytes"] == len(wav)
+    assert rows["image/x-portable-pixmap"]["meta"]["source"].endswith("a.ppm")
 
     feats = {
-        r["media_type"]: r["feature"]
+        r["media_type"]: r
         for r in decode_features(assets, real_decoder=True).collect()
     }
-    assert feats["image/bmp"] == [2.0, 1.0, 24.0, 9.0]
-    assert feats["video/x-y4m"] == [2.0, 2.0, 2.0, 15.0]
+    assert feats["image/x-portable-pixmap"]["feature"] == [2.0, 1.0, 3.0, 9.0]
+    assert feats["audio/wav"]["feature"] == [0.1, 8000.0, 1.0, 16.0]
+    # FLAC lands but does not decode: a decoder gap, not corrupt
+    assert not feats["audio/flac"]["decode_ok"]
+    assert feats["audio/flac"]["reason"] == "decoder_gap"
 
     # asset ids are a pure function of the path: stable across re-listing
     ids_a = sorted(r["asset_id"] for r in assets.collect())
@@ -827,6 +508,294 @@ def test_read_binary_assets_lands_real_media(spark, tmp_path):
         for r in read_binary_assets(spark, str(tmp_path), max_bytes=2048).collect()
     )
     assert ids_a == ids_b
+
+
+# ---------------------------------------------------------------------------
+# RIFF/WAVE: integer/float PCM and G.711 A-law / µ-law (companding is
+# formula-defined — no tables)
+# ---------------------------------------------------------------------------
+
+
+def _pcm(n=2000, seed=7, scale=300):
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    p = np.cumsum(rng.integers(-scale, scale, size=n)).astype(np.int64)
+    return np.clip(p, -32768, 32767).astype(np.int32)
+
+
+def _raw_wav(fmt_tag, data, nch=1, rate=8000, bits=8):
+    import struct
+
+    block = max(1, nch * (bits // 8))
+    fmt = struct.pack(
+        "<HHIIHH", fmt_tag, nch, rate, rate * block, block, bits
+    )
+    out = b"WAVE"
+    out += b"fmt " + struct.pack("<I", len(fmt)) + fmt
+    out += b"data" + struct.pack("<I", len(data)) + data
+    return b"RIFF" + struct.pack("<I", len(out)) + out
+
+
+def test_wav_truncation_is_corrupt_not_wrong_duration(spark):
+    """A WAV whose data chunk is shorter than its header promises, and a
+    RIFF/WAVE container with no fmt/data chunks, are both corrupt — never
+    a decoded row with a wrong duration."""
+    import io
+    import wave
+
+    from inbev_data_engineering_case_spark.operators.multimodal import (
+        decode_features,
+    )
+
+    pcm = _pcm(2000)
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as w:
+        w.setnchannels(1)
+        w.setsampwidth(2)
+        w.setframerate(8000)
+        w.writeframes(pcm.astype("<i2").tobytes())
+    wav = buf.getvalue()
+    truncated = wav[: len(wav) - 1500]  # header still promises 2000 frames
+    bad_wav = b"RIFF" + b"\x10\x00\x00\x00" + b"WAVEjunkjunk"
+    assets = spark.createDataFrame(
+        [
+            (1, "audio/wav", truncated,
+             {"n_bytes": len(truncated), "source": "t"}),
+            (2, "audio/wav", bad_wav,
+             {"n_bytes": len(bad_wav), "source": "t"}),
+        ],
+        "asset_id long, media_type string, payload binary, "
+        "meta struct<n_bytes:long, source:string>",
+    )
+    rows = {
+        r["asset_id"]: r
+        for r in decode_features(assets, real_decoder=True).collect()
+    }
+    for i in (1, 2):
+        assert not rows[i]["decode_ok"] and rows[i]["reason"] == "corrupt"
+
+
+def test_g711_tables_pin_standard_endpoints():
+    import numpy as np
+
+    from inbev_data_engineering_case_spark.operators.multimodal import (
+        _g711_table,
+    )
+
+    ulaw, alaw = _g711_table("ulaw"), _g711_table("alaw")
+    # the canonical G.711 identities every published codec agrees on
+    assert ulaw[0xFF] == 0 and ulaw[0x7F] == 0      # ±zero codes
+    assert ulaw[0x80] == 32124 and ulaw[0x00] == -32124  # max magnitude
+    assert alaw[0xD5] == 8 and alaw[0x55] == -8     # smallest magnitudes
+    assert alaw[0xAA] == 32256 and alaw[0x2A] == -32256
+    # each law is a bijection onto symmetric magnitudes, monotone per
+    # segment: positive µ-law codes 0x80..0xFF decode strictly
+    # decreasing in magnitude
+    pos = ulaw[0x80:0x100].astype(np.int64)
+    assert (np.diff(pos) < 0).all() and (pos >= 0).all()
+    neg = ulaw[0x00:0x80].astype(np.int64)
+    assert (np.diff(neg) > 0).all() and (neg <= 0).all()
+    # A-law: sign bit (post-0x55-inversion invariant) splits the code
+    # space into exact magnitude mirrors
+    assert (alaw[0x80:0x100].astype(np.int64)
+            == -alaw[0x00:0x80].astype(np.int64)).all()
+
+
+def test_g711_compander_round_trip_tolerance():
+    """Encode via nearest-code search against OUR decode table, decode
+    back: the error must stay within each segment's half-step — the
+    defining property of the companding curve."""
+    import numpy as np
+
+    from inbev_data_engineering_case_spark.operators.multimodal import (
+        _g711_table,
+    )
+
+    rng = np.random.default_rng(11)
+    x = rng.integers(-32124, 32124, size=4000).astype(np.int64)
+    for law in ("ulaw", "alaw"):
+        table = _g711_table(law).astype(np.int64)
+        order = np.argsort(table)
+        sorted_vals = table[order]
+        idx = np.clip(
+            np.searchsorted(sorted_vals, x), 1, len(sorted_vals) - 1
+        )
+        pick = np.where(
+            np.abs(sorted_vals[idx] - x) < np.abs(sorted_vals[idx - 1] - x),
+            idx, idx - 1,
+        )
+        decoded = sorted_vals[pick]
+        err = np.abs(decoded - x)
+        # both laws' top segment steps by 8<<7 / 16<<6 = 1024 between
+        # adjacent codes -> nearest-code error is at most the 512
+        # half-step (hit exactly at boundary ties)
+        assert err.max() <= 512, law
+
+
+def test_g711_wav_decode_features(spark):
+    """G.711 WAVs decode through the expansion tables (the magic wins over
+    a wrong label); ADPCM and mp3 are honest decoder gaps."""
+    import zlib
+
+    import numpy as np
+
+    from inbev_data_engineering_case_spark.operators.multimodal import (
+        _g711_table,
+        decode_features,
+    )
+
+    # a µ-law byte stream whose expansion we know exactly
+    codes = bytes([0xFF, 0x80, 0x00, 0xD5, 0x40, 0xC0] * 400)
+    ulaw_wav = _raw_wav(7, codes)
+    alaw_wav = _raw_wav(6, codes)
+    adpcm_wav = _raw_wav(2, b"\x00" * 256, bits=4)
+    mp3ish = b"ID3\x04\x00\x00\x00\x00\x00\x00" + b"\xff\xfb" * 40
+    assets = spark.createDataFrame(
+        [
+            (1, "audio/wav", ulaw_wav,
+             {"n_bytes": len(ulaw_wav), "source": "t"}),
+            (2, "audio/basic", alaw_wav,  # mislabeled: magic wins
+             {"n_bytes": len(alaw_wav), "source": "t"}),
+            (3, "audio/wav", adpcm_wav,
+             {"n_bytes": len(adpcm_wav), "source": "t"}),
+            (4, "audio/mpeg", mp3ish,
+             {"n_bytes": len(mp3ish), "source": "t"}),
+        ],
+        "asset_id long, media_type string, payload binary, "
+        "meta struct<n_bytes:long, source:string>",
+    )
+    out = {
+        r["asset_id"]: r
+        for r in decode_features(assets, real_decoder=True).collect()
+    }
+    table = _g711_table("ulaw")
+    want = table[np.frombuffer(codes, dtype=np.uint8)]
+    assert out[1]["decode_ok"]
+    assert out[1]["checksum"] == zlib.crc32(
+        want.astype("<i2").tobytes()
+    ) % 1_000_003
+    assert out[1]["feature"][:3] == [2400 / 8000, 8000.0, 1.0]
+    assert out[2]["decode_ok"]  # A-law under a wrong label still decodes
+    # ADPCM needs spec-literal step tables, mp3 a codec: decoder gaps
+    for gap in (3, 4):
+        assert not out[gap]["decode_ok"]
+        assert out[gap]["reason"] == "decoder_gap"
+
+
+def test_wav_flavors_sloppy_trailer_extensible_float(spark):
+    """A sloppy trailer chunk after the audio must not corrupt-file a
+    decodable WAV (the walk stops once fmt+data are in hand, first data
+    chunk wins — the stdlib convention); WAVE_FORMAT_EXTENSIBLE PCM
+    decodes natively (stdlib wave rejects the container before Python
+    3.12); IEEE-float WAV decodes as the uncompressed formula-free
+    format it is; 8-bit (stored unsigned) and 24-bit PCM fingerprint
+    their signed samples."""
+    import struct
+    import zlib
+
+    import numpy as np
+
+    from inbev_data_engineering_case_spark.operators.multimodal import (
+        _featurize_wav,
+        decode_features,
+    )
+
+    pcm = _pcm(800)
+    # hand-assembled PCM16 with an overshooting LIST trailer
+    base = _raw_wav(1, pcm.astype("<i2").tobytes(), bits=16)
+    sloppy = base + b"LIST" + struct.pack("<I", 99999) + b"INFO"
+    cs_clean, feats_clean = _featurize_wav(base)
+    cs_sloppy, feats_sloppy = _featurize_wav(sloppy)
+    assert (cs_clean, feats_clean) == (cs_sloppy, feats_sloppy)
+
+    # two data chunks: FIRST wins (stdlib convention)
+    two = base + b"data" + struct.pack("<I", 4) + b"\x01\x02\x03\x04"
+    assert _featurize_wav(two) == (cs_clean, feats_clean)
+
+    # extensible container wrapping PCM16
+    block = 2
+    # tag nch rate byterate block bits cbSize(22) validBits mask,
+    # then the SubFormat GUID whose first two LE bytes are tag 1 (PCM)
+    fmt = struct.pack(
+        "<HHIIHHHHIH", 0xFFFE, 1, 8000, 8000 * block, block, 16, 22, 16,
+        0x4, 1,
+    ) + b"\x00" * 14
+    body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+    body += b"data" + struct.pack(
+        "<I", len(pcm.astype("<i2").tobytes())
+    ) + pcm.astype("<i2").tobytes()
+    ext = b"RIFF" + struct.pack("<I", len(body)) + body
+    assert _featurize_wav(ext) == (cs_clean, feats_clean)
+
+    # float32 WAV: native [-1, 1] scale
+    f32 = (pcm.astype(np.float32) / 32768.0).tobytes()
+    fwav = _raw_wav(3, f32, bits=32)
+    cs_f, feats_f = _featurize_wav(fwav)
+    assert feats_f[:3] == [0.1, 8000.0, 1.0]
+    assert 0.0 < feats_f[3] < 1.0  # native float scale
+
+    # 8-bit PCM is stored UNSIGNED: the fingerprint is over signed bytes
+    p8 = (pcm // 256).astype(np.int8)
+    w8 = _raw_wav(1, (p8.astype(np.int16) + 128).astype(np.uint8).tobytes())
+    cs8, feats8 = _featurize_wav(w8)
+    assert cs8 == zlib.crc32(p8.tobytes()) % 1_000_003
+    assert feats8[3] == float(np.abs(p8.astype(np.int64)).mean())
+    # 24-bit PCM sign-extends from three little-endian bytes
+    p24 = pcm.astype(np.int64) * 200
+    le3 = np.frombuffer(p24.astype("<i4").tobytes(), dtype=np.uint8)
+    le3 = le3.reshape(-1, 4)[:, :3].tobytes()
+    cs24, feats24 = _featurize_wav(_raw_wav(1, le3, bits=24))
+    assert cs24 == zlib.crc32(le3) % 1_000_003
+    assert feats24[3] == float(np.abs(p24).mean())
+
+    # end-to-end: all flavors green through the mapInPandas boundary
+    assets = spark.createDataFrame(
+        [(i + 1, "audio/wav", p, {"n_bytes": len(p), "source": "t"})
+         for i, p in enumerate([sloppy, ext, fwav])],
+        "asset_id long, media_type string, payload binary, "
+        "meta struct<n_bytes:long, source:string>",
+    )
+    rows = decode_features(assets, real_decoder=True).collect()
+    assert all(r["decode_ok"] for r in rows)
+
+
+def test_wav_taxonomy_and_bit_depth_validation():
+    """The corrupt-vs-decoder_gap taxonomy must hold at the edges, and
+    unsupported sample widths must fail loud."""
+    import struct
+
+    from inbev_data_engineering_case_spark.operators.multimodal import (
+        _featurize_wav,
+    )
+
+    # odd-length stereo ADPCM: capability gap, NOT corrupt (the frame
+    # check must not fire before the tag dispatch)
+    adpcm_odd = _raw_wav(2, b"\x00" * 257, nch=2, bits=4)
+    with pytest.raises(NotImplementedError):
+        _featurize_wav(adpcm_odd)
+
+    # extensible fmt missing its SubFormat GUID: truncation = corrupt,
+    # not 'tag 65534 requires codec tables'
+    fmt16 = struct.pack("<HHIIHH", 0xFFFE, 1, 8000, 16000, 2, 16)
+    body = b"WAVE" + b"fmt " + struct.pack("<I", 16) + fmt16
+    body += b"data" + struct.pack("<I", 4) + b"\x00" * 4
+    with pytest.raises(ValueError, match="extensible"):
+        _featurize_wav(b"RIFF" + struct.pack("<I", len(body)) + body)
+
+    # NaN float samples: corrupt, never a NaN feature with decode_ok
+    nanwav = _raw_wav(3, struct.pack("<4f", 0.5, float("nan"), 0.1, 0.2),
+                      bits=32)
+    with pytest.raises(ValueError, match="non-finite"):
+        _featurize_wav(nanwav)
+
+    # 16-bit float and 12-bit PCM are unsupported widths: corrupt
+    f16 = _raw_wav(3, b"\x00" * 8, bits=16)
+    with pytest.raises(ValueError, match="float bit depth"):
+        _featurize_wav(f16)
+    p12 = _raw_wav(1, b"\x00" * 12, bits=12)
+    with pytest.raises(ValueError, match="PCM bit depth"):
+        _featurize_wav(p12)
 
 
 def test_train_ivf_centroids_rejects_huge_k(spark):
@@ -877,6 +846,23 @@ def test_ann_multiprobe_recall_monotone(spark):
 
     c1, c3 = Counter(a for a, _ in p1), Counter(a for a, _ in p3)
     assert all(c3[qid] >= n for qid, n in c1.items())
+
+
+def test_vec_dim_memo_sees_an_overwritten_parquet_path(spark, tmp_path):
+    """The _vec_dim memo is keyed on the plan AND the scanned files: a
+    parquet path overwritten with vectors of a different dimension in the
+    same session probes the new dimension, not the cached one."""
+    from inbev_data_engineering_case_spark.operators.similarity import (
+        _vec_dim,
+    )
+
+    path = str(tmp_path / "emb")
+    for d in (4, 8):
+        spark.createDataFrame(
+            [(j, [float(j + i) for i in range(d)]) for j in range(3)],
+            "vec_id long, embedding array<double>",
+        ).write.mode("overwrite").parquet(path)
+        assert _vec_dim(spark.read.parquet(path), "embedding") == d
 
 
 def test_signlsh_literal_weights_match_runtime_path(spark):
@@ -2523,37 +2509,27 @@ def test_hot_bucket_guard_simhash_star_links(spark):
 
 
 def test_decode_errors_dead_letter_not_raise(spark):
-    """A codec-bound (JPEG) or corrupt asset must survive as a flagged row
-    — null features, decode_ok=false, message in `error` — instead of
-    killing the job; strict=True restores the raise. The expected error
-    class depends on the capability probes: with no PIL/ffmpeg the
-    decoders refuse with NotImplementedError; with a backend present
-    these deliberately-corrupt payloads fail inside it instead — either
-    way the row is dead-lettered, never raised."""
+    """An unsupported (JPEG, MP4) or corrupt (truncated PNM) asset must
+    survive as a flagged row — null features, decode_ok=false, message in
+    `error` — instead of killing the job; strict=True restores the
+    raise."""
     import pytest as _pytest
     from pyspark.errors import PythonException
 
     from inbev_data_engineering_case_spark.operators.multimodal import (
-        _optional_ffmpeg,
         decode_features,
-        resize_assets,
-        sample_frames,
     )
 
-    # the corrupt JPEG now always fails INSIDE a decoder (native baseline
-    # or PIL), so a ValueError/OSError — matched by "Error" — either way
-    img_err = "Error"
-    vid_err = (
-        "NotImplementedError" if _optional_ffmpeg() is None else "Error"
-    )
-
-    bmp = _make_bmp([[(5, 5, 5), (10, 10, 10)]])
+    pgm = b"P5\n2 1\n255\n" + bytes([5, 10])
     jpeg = b"\xff\xd8\xff\xe0 not decodable"
     assets = spark.createDataFrame(
         [
-            (1, "image/bmp", bmp, {"n_bytes": len(bmp), "source": "t"}),
+            (1, "image/x-portable-graymap", pgm,
+             {"n_bytes": len(pgm), "source": "t"}),
             (2, "image/jpeg", jpeg, {"n_bytes": len(jpeg), "source": "t"}),
             (3, "video/mp4", b"\x00\x00\x00 ftyp", {"n_bytes": 8, "source": "t"}),
+            (4, "image/x-portable-graymap", pgm[:-1],
+             {"n_bytes": len(pgm) - 1, "source": "t"}),
         ],
         "asset_id long, media_type string, payload binary, "
         "meta struct<n_bytes:long, source:string>",
@@ -2564,743 +2540,106 @@ def test_decode_errors_dead_letter_not_raise(spark):
         for r in decode_features(assets, real_decoder=True).collect()
     }
     assert feats[1]["decode_ok"] and feats[1]["error"] is None
-    assert feats[1]["feature"] == [2.0, 1.0, 24.0, 7.5]
-    for bad, expect in ((2, img_err), (3, vid_err)):
+    assert feats[1]["feature"] == [2.0, 1.0, 1.0, 7.5]
+    for bad, expect in (
+        (2, "NotImplementedError"),
+        (3, "NotImplementedError"),
+        (4, "ValueError"),
+    ):
         assert not feats[bad]["decode_ok"]
         assert feats[bad]["checksum"] is None
         assert feats[bad]["feature"] is None
         assert expect in feats[bad]["error"]
 
-    resized = {
-        r["asset_id"]: r
-        for r in resize_assets(assets, 2000, real_decoder=True).collect()
-    }
-    assert resized[1]["decode_ok"]
-    assert not resized[2]["decode_ok"]
-    assert bytes(resized[2]["payload"]) == jpeg  # original kept for retry
-
-    frames = sample_frames(assets, real_decoder=True).collect()
-    bad_rows = [r for r in frames if not r["decode_ok"]]
-    assert {r["asset_id"] for r in bad_rows} == {3}  # only video demuxes
-    assert bad_rows[0]["frame_idx"] == -1 and bad_rows[0]["frame"] is None
-
     with _pytest.raises(PythonException, match="Error"):
         decode_features(assets, real_decoder=True, strict=True).collect()
 
 
-def test_decode_reason_codes_size_the_decoder_gap(spark):
-    """Reason-coded dead-letters: an ARITHMETIC-CODED JPEG (real
-    baseline stream re-marked SOF0->SOF9 — structurally valid header;
-    the decoder refuses at the SOF before entropy decode) lands as
-    reason='decoder_gap', a corrupt stream as reason='corrupt', a good
-    asset as reason NULL — so a corpus QA report can size the decoder
-    gap separately from junk data. A PROGRESSIVE (SOF2) stream, the
-    gap this report sized in r8, now DECODES natively (r9) — its row
-    is reason NULL. decode_reason_report turns the rest into per-kind
-    exact-ppm corpus shares, arithmetic JPEG on its own line."""
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _jpeg_encode_baseline,
-        _jpeg_encode_progressive,
-        decode_features,
-        decode_reason_report,
+def _make_png_1x1() -> bytes:
+    """A valid 1x1 8-bit grayscale PNG (IHDR, one zlib IDAT, IEND)."""
+    import struct
+    import zlib
+
+    def chunk(ctype: bytes, data: bytes) -> bytes:
+        return (
+            struct.pack(">I", len(data)) + ctype + data
+            + struct.pack(">I", zlib.crc32(ctype + data))
+        )
+
+    ihdr = struct.pack(">IIBBBBB", 1, 1, 8, 0, 0, 0, 0)
+    return (
+        b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
+        + chunk(b"IDAT", zlib.compress(b"\x00\x7f")) + chunk(b"IEND", b"")
     )
 
-    baseline = _jpeg_encode_baseline(_jpeg_gradient(16, 16), quality=90)
-    assert b"\xff\xc0" in baseline
-    arithmetic = baseline.replace(b"\xff\xc0", b"\xff\xc9", 1)
-    progressive = _jpeg_encode_progressive(
-        _jpeg_gradient(16, 16), quality=90
+
+def test_decode_reason_codes_size_the_decoder_gap(spark):
+    """Reason-coded dead-letters: every image, audio or video format
+    outside binary PNM and RIFF/WAVE — here one payload per magic prefix
+    (JPEG, PNG, GIF, WebP, HEIF, FLAC, Y4M, AVI, MP4, WebM) — lands as reason='decoder_gap', a corrupt stream of
+    a supported format as reason='corrupt', a good asset as reason NULL,
+    so a corpus QA report can size the decoder gap separately from junk
+    data. decode_reason_report turns them into per-kind exact-ppm corpus
+    shares, and image_dhash dead-letters a valid PNG instead of
+    raising."""
+    from inbev_data_engineering_case_spark.operators.multimodal import (
+        decode_features,
+        decode_reason_report,
+        image_dhash,
     )
-    corrupt = b"\xff\xd8\xff\xe0 not decodable"
-    bmp = _make_bmp([[(5, 5, 5), (10, 10, 10)]])
+
+    tail = bytes(range(64))
+    gaps = [
+        ("image/jpeg", b"\xff\xd8\xff\xe0" + tail),
+        ("image/png", _make_png_1x1()),
+        ("image/gif", b"GIF89a" + tail),
+        ("image/webp", b"RIFF\x44\x00\x00\x00WEBPVP8L" + tail),
+        ("image/heic", b"\x00\x00\x00\x18ftypheic" + tail),
+        ("audio/flac", b"fLaC" + tail),
+        ("video/x-y4m", b"YUV4MPEG2 W2 H2 F25:1 C420\nFRAME\n" + tail),
+        ("video/x-msvideo", b"RIFF\x44\x00\x00\x00AVI LIST" + tail),
+        ("video/mp4", b"\x00\x00\x00\x18ftypisom" + tail),
+        ("video/webm", b"\x1aE\xdf\xa3" + tail),
+    ]
+    pgm = b"P5\n2 1\n255\n" + bytes([5, 10])
+    payloads = gaps + [
+        ("image/x-portable-graymap", pgm),
+        ("image/x-portable-graymap", pgm[:-1]),
+    ]
     assets = spark.createDataFrame(
         [
-            (1, "image/jpeg", arithmetic, {"n_bytes": len(arithmetic), "source": "t"}),
-            (2, "image/jpeg", corrupt, {"n_bytes": len(corrupt), "source": "t"}),
-            (3, "image/bmp", bmp, {"n_bytes": len(bmp), "source": "t"}),
-            (4, "image/jpeg", baseline, {"n_bytes": len(baseline), "source": "t"}),
-            (5, "image/jpeg", progressive, {"n_bytes": len(progressive), "source": "t"}),
+            (i, mt, p, {"n_bytes": len(p), "source": "t"})
+            for i, (mt, p) in enumerate(payloads, start=1)
         ],
         "asset_id long, media_type string, payload binary, "
         "meta struct<n_bytes:long, source:string>",
     )
     feats = decode_features(assets, real_decoder=True)
     rows = {r["asset_id"]: r for r in feats.collect()}
-    assert rows[1]["reason"] == "decoder_gap"
-    assert "arithmetic" in rows[1]["error"]
-    assert rows[2]["reason"] == "corrupt"
-    assert rows[3]["reason"] is None and rows[3]["decode_ok"]
-    assert rows[4]["reason"] is None and rows[4]["decode_ok"]
-    assert rows[5]["reason"] is None and rows[5]["decode_ok"]
+    for i in range(1, len(gaps) + 1):
+        assert not rows[i]["decode_ok"], rows[i]["media_type"]
+        assert rows[i]["reason"] == "decoder_gap", rows[i]["media_type"]
+    assert rows[11]["reason"] is None and rows[11]["decode_ok"]
+    assert rows[12]["reason"] == "corrupt"
 
     report = decode_reason_report(feats).collect()
     by_key = {(r["media_type"], r["reason"]): r for r in report}
-    gap = by_key[("image/jpeg", "decoder_gap")]
-    assert gap["n_assets"] == 1 and gap["share_ppm"] == 200_000
-    assert "arithmetic" in gap["detail"]
-    assert by_key[("image/jpeg", "corrupt")]["share_ppm"] == 200_000
-    assert by_key[("image/bmp", "ok")]["n_assets"] == 1
-    assert by_key[("image/jpeg", "ok")]["n_assets"] == 2
-    assert by_key[("image/jpeg", "ok")]["detail"] is None
-    assert sum(r["n_assets"] for r in report) == 5
-
-
-def test_jpeg_featurize_through_pil_when_available(spark):
-    """Capability-routed codec decode: with PIL importable a real JPEG
-    featurizes (and resizes) through the same mapInPandas plumbing, same
-    normalized-raster feature shape as the stdlib decoders. Skips where
-    PIL is absent — there the dead-letter test above covers the fallback
-    arm of the same probe."""
-    import io
-
-    image_mod = pytest.importorskip(
-        "PIL.Image", reason="PIL not installed; stdlib fallback covered "
-        "by test_decode_errors_dead_letter_not_raise"
-    )
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        decode_features,
-        resize_assets,
-    )
-
-    im = image_mod.new("RGB", (6, 4), (10, 20, 30))
-    buf = io.BytesIO()
-    im.save(buf, "JPEG")
-    jpeg = buf.getvalue()
-    assets = spark.createDataFrame(
-        [(1, "image/jpeg", jpeg, {"n_bytes": len(jpeg), "source": "t"})],
-        "asset_id long, media_type string, payload binary, "
-        "meta struct<n_bytes:long, source:string>",
-    )
-
-    r = decode_features(assets, real_decoder=True).collect()[0]
-    assert r["decode_ok"] and r["error"] is None
-    w, h, bpp, mean_px = r["feature"]
-    assert (w, h, bpp) == (6.0, 4.0, 24.0)
-    assert 0.0 < mean_px < 255.0
-
-    rz = resize_assets(assets, 2000, real_decoder=True).collect()[0]
-    assert rz["decode_ok"]  # decoded via PIL, re-encoded to PNM
-
-
-def _jpeg_gradient(h, w):
-    """Smooth RGB gradient — JPEG-friendly content with a known mean."""
-    import numpy as np
-
-    yy, xx = np.mgrid[0:h, 0:w]
-    return np.stack(
-        [
-            xx * 255 // max(w - 1, 1),
-            yy * 255 // max(h - 1, 1),
-            (xx + yy) * 255 // max(w + h - 2, 1),
-        ],
-        axis=-1,
-    ).astype(np.uint8)
-
-
-def test_jpeg_native_roundtrip_444():
-    """Native encoder → native decoder at 4:4:4: non-multiple-of-8
-    dimensions, high quality — every pixel within a few quantization
-    levels, dimensions exact."""
-    import numpy as np
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _jpeg_decode,
-        _jpeg_encode_baseline,
-    )
-
-    img = _jpeg_gradient(41, 53)
-    out = _jpeg_decode(_jpeg_encode_baseline(img, quality=95))
-    assert out.shape == img.shape
-    diff = np.abs(out.astype(int) - img.astype(int))
-    assert diff.max() <= 6 and diff.mean() < 1.5
-
-
-def test_jpeg_native_roundtrip_420_restarts_identical():
-    """4:2:0 chroma subsampling decodes (upsample path), and restart
-    intervals are pure framing: the decoded raster with DRI 1/3/7 is
-    bit-identical to the no-restart stream of the same coefficients."""
-    import numpy as np
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _jpeg_decode,
-        _jpeg_encode_baseline,
-    )
-
-    img = _jpeg_gradient(37, 61)
-    base = _jpeg_decode(_jpeg_encode_baseline(img, quality=90))
-    for ri in (1, 3, 7):
-        out = _jpeg_decode(
-            _jpeg_encode_baseline(img, quality=90, restart_interval=ri)
-        )
-        assert np.array_equal(out, base)
-    sub = _jpeg_decode(
-        _jpeg_encode_baseline(
-            img, quality=90, subsample=True, restart_interval=2
-        )
-    )
-    assert sub.shape == img.shape
-    assert np.abs(sub.astype(int) - img.astype(int)).max() <= 30
-
-
-def test_jpeg_native_grayscale_single_component_scan():
-    """1-component JPEG exercises the A.2.2 single-component MCU rule
-    (plain 8x8 grid) and stays 1-channel like every other gray decode."""
-    import numpy as np
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _jpeg_decode,
-        _jpeg_encode_baseline,
-    )
-
-    gray = _jpeg_gradient(21, 34)[:, :, 0]
-    out = _jpeg_decode(_jpeg_encode_baseline(gray, quality=95))
-    assert out.shape == (21, 34, 1)
-    assert np.abs(out[:, :, 0].astype(int) - gray.astype(int)).max() <= 4
-
-
-def test_jpeg_native_unsupported_variants_fail_loud():
-    """Arithmetic-coded (SOF9) raises NotImplementedError (the PIL-or-
-    dead-letter arm); truncated entropy data and corrupt headers raise
-    ValueError — never garbage pixels with decode_ok semantics. A
-    baseline stream re-marked SOF2 is NOT a valid progressive stream
-    (its sequential Ss=0/Se=63 scan mixes DC and AC), so it must fail
-    loud as corrupt rather than decode garbage."""
-    import pytest as _pytest
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _jpeg_decode,
-        _jpeg_encode_baseline,
-    )
-
-    payload = bytearray(_jpeg_encode_baseline(_jpeg_gradient(16, 16)))
-    sof_at = payload.index(b"\xff\xc0")
-    arithmetic = bytes(
-        payload[:sof_at] + b"\xff\xc9" + payload[sof_at + 2 :]
-    )
-    with _pytest.raises(NotImplementedError, match="arithmetic"):
-        _jpeg_decode(arithmetic)
-    fake_progressive = bytes(
-        payload[:sof_at] + b"\xff\xc2" + payload[sof_at + 2 :]
-    )
-    with _pytest.raises(ValueError, match="mixes DC and AC"):
-        _jpeg_decode(fake_progressive)
-    with _pytest.raises(ValueError, match="truncated"):
-        _jpeg_decode(bytes(payload[: len(payload) // 2]))
-    with _pytest.raises(ValueError, match="SOI"):
-        _jpeg_decode(b"\x89PNG not a jpeg")
-
-
-def test_jpeg_progressive_round_trip_matches_baseline():
-    """Progressive (SOF2) decodes natively: a progressive and a
-    baseline encode of the same raster at the same quality carry
-    IDENTICAL quantized coefficients, so the two decodes must be
-    BIT-IDENTICAL — across grayscale/color, 4:2:0 subsampling,
-    non-multiple-of-8 dims, per-scan restart intervals, and a custom
-    scan script with multiple successive-approximation levels."""
-    import numpy as np
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _jpeg_decode,
-        _jpeg_encode_baseline,
-        _jpeg_encode_progressive,
-    )
-
-    rng = np.random.RandomState(11)
-    cases = [
-        ((16, 16, 3), {}),
-        ((20, 24, 3), {"subsample": True}),
-        ((17, 9, 1), {}),
-        ((16, 16, 3), {"restart_interval": 2}),
-        ((24, 16, 3), {"subsample": True, "restart_interval": 1}),
-    ]
-    for shape, kw in cases:
-        img = rng.randint(0, 256, shape, dtype=np.uint8)
-        base = _jpeg_decode(_jpeg_encode_baseline(img, quality=80, **kw))
-        prog = _jpeg_decode(
-            _jpeg_encode_progressive(img, quality=80, **kw)
-        )
-        assert np.array_equal(base, prog), (shape, kw)
-
-    # deeper successive approximation (3 levels on luma AC) + a DC
-    # refinement chain, still bit-identical to the one-shot baseline
-    img = rng.randint(0, 256, (16, 24, 3), dtype=np.uint8)
-    scans = [
-        ([0, 1, 2], 0, 0, 0, 2),
-        ([0, 1, 2], 0, 0, 1, 1),
-        ([0], 1, 63, 0, 3),
-        ([1], 1, 63, 0, 0),
-        ([2], 1, 63, 0, 0),
-        ([0], 1, 63, 3, 2),
-        ([0, 1, 2], 0, 0, 1, 0),
-        ([0], 1, 63, 2, 1),
-        ([0], 1, 63, 1, 0),
-    ]
-    base = _jpeg_decode(_jpeg_encode_baseline(img, quality=70))
-    prog = _jpeg_decode(
-        _jpeg_encode_progressive(img, quality=70, scans=scans)
-    )
-    assert np.array_equal(base, prog)
-
-
-def test_jpeg_sequential_non_interleaved_scans_decode():
-    """A fully NON-INTERLEAVED sequential JPEG (one scan per component
-    — a real libjpeg output mode) decodes natively and matches the
-    interleaved encode of the same raster bit for bit (identical
-    quantized coefficients, only the scan layout differs); a partially
-    interleaved scan subset stays honestly NIE-routed. Also pins the
-    per-scan restart-interval reset on the non-interleaved walk."""
-    import struct
-
-    import numpy as np
-    import pytest as _pytest
-
-    from inbev_data_engineering_case_spark.operators import (
-        multimodal as M,
-    )
-
-    def encode_non_interleaved(img, quality, subsample, restart=0):
-        h, w, gray, samplings, quants, coeffs, _ = (
-            M._jpeg_prepare_encode(img, quality, subsample)
-        )
-        ncomp = 1 if gray else 3
-        dc_maps, ac_maps = M._jpeg_std_maps(ncomp)
-        out = M._jpeg_header_segments(
-            h, w, gray, samplings, quants, 0xC0, restart
-        )
-        frame = (h, w, [[ci + 1, *samplings[ci], 0] for ci in range(ncomp)])
-        for ci in range(ncomp):
-            bh, bw = M._jpeg_comp_blocks(frame, *samplings[ci])
-            sos = bytes(
-                [1, ci + 1, 0x00 if ci == 0 else 0x11, 0, 63, 0]
-            )
-            out += struct.pack(">BBH", 0xFF, 0xDA, 2 + len(sos)) + sos
-            wtr = M._JpegBitWriter()
-            pred = 0
-            done = 0
-            rst = 0
-            for by in range(bh):
-                for bx in range(bw):
-                    if restart and done == restart:
-                        wtr.flush()
-                        wtr.buf += bytes([0xFF, 0xD0 + (rst % 8)])
-                        rst += 1
-                        pred = 0
-                        done = 0
-                    pred = M._jpeg_encode_block(
-                        wtr, coeffs[ci][by, bx], pred,
-                        dc_maps[ci], ac_maps[ci],
-                    )
-                    done += 1
-            wtr.flush()
-            out += wtr.buf
-        out += b"\xff\xd9"
-        return bytes(out)
-
-    rng = np.random.RandomState(17)
-    for shape, subsample, restart in (
-        ((16, 16, 3), False, 0),
-        ((20, 12, 3), True, 0),
-        ((16, 16, 3), False, 2),
-    ):
-        img = rng.randint(0, 256, shape, dtype=np.uint8)
-        want = M._jpeg_decode(
-            M._jpeg_encode_baseline(img, quality=85, subsample=subsample)
-        )
-        got = M._jpeg_decode(
-            encode_non_interleaved(img, 85, subsample, restart)
-        )
-        assert np.array_equal(got, want), (shape, subsample, restart)
-
-    # a stream TRUNCATED between component scans must fail loud — the
-    # zeroed Cb/Cr planes would otherwise decode to a color-shifted
-    # raster with decode_ok=true (the r9 second-review catch)
-    img = rng.randint(0, 256, (16, 16, 3), dtype=np.uint8)
-    full = encode_non_interleaved(img, 85, False)
-    sos_offsets = []
-    at = -1
-    while True:
-        at = full.find(b"\xff\xda", at + 1)
-        if at < 0:
-            break
-        sos_offsets.append(at)
-    assert len(sos_offsets) == 3
-    truncated = full[: sos_offsets[2]] + b"\xff\xd9"
-    with _pytest.raises(ValueError, match="missing scan"):
-        M._jpeg_decode(truncated)
-
-    # a 2-of-3-component scan stays honestly capability-gated
-    img = rng.randint(0, 256, (8, 8, 3), dtype=np.uint8)
-    payload = bytearray(M._jpeg_encode_baseline(img, quality=85))
-    at = payload.index(b"\xff\xda")
-    # rewrite the SOS header to claim 2 components (structurally valid
-    # header; the decoder must refuse before entropy decode)
-    seglen = (payload[at + 2] << 8) | payload[at + 3]
-    sos = bytes([2]) + bytes(payload[at + 5 : at + 9]) + bytes(
-        payload[at + 2 + seglen - 3 : at + 2 + seglen]
-    )
-    two_comp = (
-        bytes(payload[:at])
-        + struct.pack(">BBH", 0xFF, 0xDA, 2 + len(sos))
-        + sos
-        + bytes(payload[at + 2 + seglen :])
-    )
-    with _pytest.raises(NotImplementedError, match="partially"):
-        M._jpeg_decode(two_comp)
-
-
-def test_jpeg_codec_round_trip_property():
-    """Hypothesis fuzz over the whole codec surface: ANY dims (down to
-    1x1 and single-row/column rasters), quality, grayscale/color,
-    4:2:0, and restart intervals — the progressive decode must equal
-    the baseline decode of the same raster bit for bit (identical
-    quantized coefficients by construction), and both decoders must
-    return the exact input shape."""
-    import numpy as np
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _jpeg_decode,
-        _jpeg_encode_baseline,
-        _jpeg_encode_progressive,
-    )
-
-    @settings(max_examples=25, deadline=None)
-    @given(
-        h=st.integers(1, 24),
-        w=st.integers(1, 24),
-        gray=st.booleans(),
-        quality=st.integers(30, 95),
-        subsample=st.booleans(),
-        restart=st.sampled_from([0, 1, 3]),
-        seed=st.integers(0, 2**31 - 1),
-    )
-    def prop(h, w, gray, quality, subsample, restart, seed):
-        rng = np.random.RandomState(seed)
-        img = rng.randint(
-            0, 256, (h, w, 1 if gray else 3), dtype=np.uint8
-        )
-        base = _jpeg_decode(
-            _jpeg_encode_baseline(
-                img, quality, subsample=subsample,
-                restart_interval=restart,
-            )
-        )
-        prog = _jpeg_decode(
-            _jpeg_encode_progressive(
-                img, quality, subsample=subsample,
-                restart_interval=restart,
-            )
-        )
-        assert base.shape == img.shape
-        assert np.array_equal(base, prog)
-
-    prop()
-
-
-def test_jpeg_grayscale_declared_sampling_factors_ignored():
-    """A one-component frame's declared sampling factors are IGNORED
-    (T.81 A.2.2 — `jpegtran -grayscale` output famously keeps the luma
-    factors at 2x2): both the sequential and the progressive decoder
-    must produce the identical raster when the SOF sampling byte says
-    2x2. The r9 review caught the progressive path walking only
-    ceil(h/16) blocks here — 191/256 pixels silently flat-gray with
-    decode_ok=true — because one of three geometry-math copies skipped
-    the remap; geometry now flows through _jpeg_frame_geometry."""
-    import numpy as np
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _jpeg_decode,
-        _jpeg_encode_baseline,
-        _jpeg_encode_progressive,
-    )
-
-    rng = np.random.RandomState(13)
-    img = rng.randint(0, 256, (16, 16, 1), dtype=np.uint8)
-    for encode, sof_marker in (
-        (_jpeg_encode_baseline, b"\xff\xc0"),
-        (_jpeg_encode_progressive, b"\xff\xc2"),
-    ):
-        payload = bytearray(encode(img, quality=85))
-        at = payload.index(sof_marker)
-        # FF Cx | len(2) | prec(1) h(2) w(2) ncomp(1) | cid(1) hv(1) ...
-        assert payload[at + 11] == 0x11
-        want = _jpeg_decode(bytes(payload))
-        payload[at + 11] = 0x22  # declare 2x2 sampling on the only comp
-        got = _jpeg_decode(bytes(payload))
-        assert np.array_equal(got, want), sof_marker
-
-
-def test_jpeg_progressive_hand_built_eob_runs_and_refinement():
-    """Pin the Annex-G entropy semantics with a HAND-BUILT stream,
-    independent of this repo's progressive encoder (the encoder emits
-    only EOB1, so multi-block EOB runs are only pinned here): a 3-block
-    grayscale SOF2 stream whose AC-first scan carries an EOB2-with-
-    extension run (eobrun=3 spans block 0's tail plus blocks 1-2) and
-    whose refinement scan orders bits exactly as G.2.3 requires —
-    huffman symbol, sign bit, then the buffered correction bits of the
-    nonzero-history coefficients crossed on the way."""
-    import struct
-
-    import numpy as np
-
-    from inbev_data_engineering_case_spark.operators import (
-        multimodal as M,
-    )
-
-    def seg(marker, body):
-        return struct.pack(">BBH", 0xFF, marker, 2 + len(body)) + body
-
-    def dht(tc, th, lengths):  # {symbol: code_len} -> DHT body, 1-bit codes
-        counts = [0] * 16
-        for _sym, ln in lengths.items():
-            counts[ln - 1] += 1
-        # canonical order: by length then insertion — all length-1 here
-        vals = [s for s, ln in lengths.items()]
-        return seg(
-            0xC4, bytes([(tc << 4) | th]) + bytes(counts) + bytes(vals)
-        )
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xDB, bytes([0]) + bytes([1] * 64))  # identity quant
-    out += seg(
-        0xC2, struct.pack(">BHHB", 8, 8, 24, 1) + bytes([1, 0x11, 0])
-    )
-
-    # scan 1: DC first (Al=0), diffs 4, 4, -12 -> sizes {3, 4}
-    out += dht(0, 0, {3: 1, 4: 1})
-    out += seg(0xDA, bytes([1, 1, 0x00, 0, 0, 0x00]))
-    w = M._JpegBitWriter()
-    w.write(0, 1)  # size 3 (code 0)
-    w.write(4, 3)  # DC block0 = 4
-    w.write(0, 1)
-    w.write(4, 3)  # diff 4 -> DC block1 = 8
-    w.write(1, 1)  # size 4 (code 1)
-    w.write(-12 + 15, 4)  # diff -12 -> DC block2 = -4
-    w.flush()
-    out += w.buf
-
-    # scan 2: AC first, band 1-63, Al=1 — block0 gets t=3 at zigzag
-    # k=1 (final value 6 before refinement), then EOB2+ext covering
-    # block0's tail AND blocks 1-2 (eobrun = 2 + receive(1) = 3)
-    out += dht(1, 0, {0x02: 1, 0x10: 1})
-    out += seg(0xDA, bytes([1, 1, 0x00, 1, 63, 0x01]))
-    w = M._JpegBitWriter()
-    w.write(0, 1)  # symbol 0x02 (r=0, s=2)
-    w.write(3, 2)  # t = +3 -> coef 3<<1 = 6
-    w.write(1, 1)  # symbol 0x10 (EOB2)
-    w.write(1, 1)  # extension bit -> eobrun = 3
-    w.flush()
-    out += w.buf
-
-    # scan 3: AC refinement Ah=1 -> Al=0 — block0 refines k=1 from 6
-    # to 7 (correction bit 1) and adds a NEW coefficient -1 at k=3
-    # after one zero-history zero (r=1): bit order must be symbol
-    # 0x11, sign 0, THEN the buffered correction bit; EOB2+ext again
-    # spans the rest
-    out += dht(1, 0, {0x11: 1, 0x10: 1})
-    out += seg(0xDA, bytes([1, 1, 0x00, 1, 63, 0x10]))
-    w = M._JpegBitWriter()
-    w.write(0, 1)  # symbol 0x11 (skip r=1 zero-history, new coef s=1)
-    w.write(0, 1)  # sign: negative -> -1 at k=3
-    w.write(1, 1)  # correction bit for the k=1 history coef: 6 -> 7
-    w.write(1, 1)  # symbol 0x10 (EOB2)
-    w.write(1, 1)  # extension -> eobrun = 3
-    w.flush()
-    out += w.buf
-    out += b"\xff\xd9"
-
-    got = M._jpeg_decode(bytes(out))
-
-    # expected raster from the pinned coefficients through the same
-    # orthonormal IDCT contract the sequential tests pin
-    m = M._jpeg_dct_matrix()
-    expect = np.zeros((8, 24), np.float64)
-    for b, dc in enumerate((4, 8, -4)):
-        c = np.zeros(64)
-        c[0] = dc
-        if b == 0:
-            c[M._JPEG_ZIGZAG[1]] = 7.0   # 6 + correction
-            c[M._JPEG_ZIGZAG[3]] = -1.0  # newly nonzero in refinement
-        spatial = m.T @ c.reshape(8, 8) @ m
-        expect[:, b * 8 : (b + 1) * 8] = spatial
-    expect = np.clip(np.round(expect) + 128.0, 0, 255).astype(np.uint8)
-    assert got.shape == (8, 24, 1)
-    assert np.array_equal(got[:, :, 0], expect)
-
-
-def test_jpeg_decodes_through_spark_without_pil(spark):
-    """The round-6 'Done' criterion: a real .jpg payload decodes with
-    decode_ok=true and featurizes through the mapInPandas plumbing with
-    no PIL in the environment; dhash and resize consume the same native
-    path; a progressive variant still dead-letters."""
-    import numpy as np
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _jpeg_encode_baseline,
-        decode_features,
-        image_dhash,
-        resize_assets,
-    )
-
-    img = _jpeg_gradient(24, 32)
-    jpeg = _jpeg_encode_baseline(img, quality=95)
-    payload = bytearray(jpeg)
-    sof_at = payload.index(b"\xff\xc0")
-    progressive = bytes(
-        payload[:sof_at] + b"\xff\xc2" + payload[sof_at + 2 :]
-    )
-    assets = spark.createDataFrame(
-        [
-            (1, "image/jpeg", jpeg, {"n_bytes": len(jpeg), "source": "t"}),
-            (
-                2,
-                "image/jpeg",
-                progressive,
-                {"n_bytes": len(progressive), "source": "t"},
-            ),
-        ],
-        "asset_id long, media_type string, payload binary, "
-        "meta struct<n_bytes:long, source:string>",
-    )
-
-    feats = {
+    gap = by_key[("image/png", "decoder_gap")]
+    assert gap["n_assets"] == 1 and gap["share_ppm"] == 1_000_000 // 12
+    assert "binary PNM" in gap["detail"]
+    assert by_key[("image/x-portable-graymap", "corrupt")]["n_assets"] == 1
+    ok = by_key[("image/x-portable-graymap", "ok")]
+    assert ok["n_assets"] == 1 and ok["detail"] is None
+    assert sum(r["n_assets"] for r in report) == 12
+
+    # the dHash path refuses a real PNG as a dead-letter row, not a raise
+    hashes = {
         r["asset_id"]: r
-        for r in decode_features(assets, real_decoder=True).collect()
+        for r in image_dhash(assets.filter("asset_id IN (2, 11)")).collect()
     }
-    ok = feats[1]
-    assert ok["decode_ok"] and ok["error"] is None
-    w, h, bpp, mean_px = ok["feature"]
-    assert (w, h, bpp) == (32.0, 24.0, 24.0)
-    assert abs(mean_px - float(img.mean())) < 3.0
-    bad = feats[2]
-    assert not bad["decode_ok"] and "progressive" in bad["error"]
-
-    hashes = {r["asset_id"]: r for r in image_dhash(assets).collect()}
-    assert hashes[1]["decode_ok"] and hashes[1]["dhash"] is not None
-    assert not hashes[2]["decode_ok"]
-
-    rz = {
-        r["asset_id"]: r
-        for r in resize_assets(assets, 500, real_decoder=True).collect()
-    }
-    assert rz[1]["decode_ok"]  # decoded natively, re-encoded to PNM
-    assert not rz[2]["decode_ok"]
-    assert bytes(rz[2]["payload"]) == progressive  # kept for a PIL retry
-
-
-def test_jpeg_native_matches_pil_decode(spark):
-    """Cross-implementation check against a REAL codec where available:
-    PIL's decode of our encoder's stream and our decode of PIL's stream
-    must agree within a few levels (IDCT implementations legitimately
-    differ by rounding). Skips where PIL is absent (this container)."""
-    import io
-
-    import numpy as np
-
-    image_mod = pytest.importorskip(
-        "PIL.Image", reason="PIL not installed; round-trip tests above "
-        "cover the native decoder against the native encoder"
-    )
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _jpeg_decode,
-        _jpeg_encode_baseline,
-    )
-
-    img = _jpeg_gradient(40, 48)
-    # our encoder -> PIL decoder
-    with image_mod.open(io.BytesIO(_jpeg_encode_baseline(img, 95))) as im:
-        pil_pixels = np.asarray(im.convert("RGB"), dtype=np.uint8)
-    ours = _jpeg_decode(_jpeg_encode_baseline(img, 95))
-    assert np.abs(
-        pil_pixels.astype(int) - ours.astype(int)
-    ).max() <= 4
-    # PIL encoder -> our decoder
-    buf = io.BytesIO()
-    image_mod.fromarray(img).save(buf, "JPEG", quality=95)
-    theirs_decoded = _jpeg_decode(buf.getvalue())
-    with image_mod.open(io.BytesIO(buf.getvalue())) as im:
-        pil_own = np.asarray(im.convert("RGB"), dtype=np.uint8)
-    assert np.abs(
-        theirs_decoded.astype(int) - pil_own.astype(int)
-    ).max() <= 4
-
-
-def test_compressed_video_through_ffmpeg_when_available(spark):
-    """Capability-routed video demux: with ffmpeg on PATH a compressed
-    container round-trips (y4m → mp4 via ffmpeg, then featurize + frame
-    sample through _ffmpeg_to_y4m). Skips where ffmpeg is absent."""
-    import shutil
-    import subprocess
-
-    if shutil.which("ffmpeg") is None:
-        pytest.skip("ffmpeg not on PATH; dead-letter fallback covered "
-                    "by test_decode_errors_dead_letter_not_raise")
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        decode_features,
-        sample_frames,
-    )
-
-    y4m = _make_y4m(4, 2, lumas=[0, 100, 200])
-    proc = subprocess.run(
-        ["ffmpeg", "-v", "error", "-f", "yuv4mpegpipe", "-i", "pipe:0",
-         "-f", "mp4", "-movflags", "frag_keyframe+empty_moov", "pipe:1"],
-        input=y4m, capture_output=True, check=True,
-    )
-    mp4 = proc.stdout
-    assets = spark.createDataFrame(
-        [(1, "video/mp4", mp4, {"n_bytes": len(mp4), "source": "t"})],
-        "asset_id long, media_type string, payload binary, "
-        "meta struct<n_bytes:long, source:string>",
-    )
-
-    r = decode_features(assets, real_decoder=True).collect()[0]
-    assert r["decode_ok"] and r["error"] is None
-    # feature = [width, height, n_frames, mean_luma]
-    assert r["feature"][:3] == [4.0, 2.0, 3.0]
-
-    frames = sample_frames(assets, real_decoder=True).collect()
-    assert all(f["decode_ok"] for f in frames)
-    assert len(frames) >= 1
-
-
-def test_paletted_bmp_matches_paletted_png_fingerprint(spark):
-    """Cross-encoding parity: the same image stored as a paletted (8-bpp)
-    BMP and a paletted PNG must produce identical checksum and mean —
-    both normalize through their color tables to the same RGB raster."""
-    import struct
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _stdlib_featurize,
-    )
-
-    pal = [(255, 0, 0), (0, 255, 0), (12, 34, 56)]
-    idx_rows = [[0, 1, 2], [2, 1, 0]]
-
-    # 8bpp BMP: color table of BGRA entries right after the 40-byte info
-    # header, palette-index raster stored bottom-up with row padding
-    table = b"".join(bytes([b_, g, r, 0]) for r, g, b_ in pal)
-    stride = ((3 + 3) // 4) * 4
-    raster = b"".join(
-        bytes(row).ljust(stride, b"\xAA") for row in reversed(idx_rows)
-    )
-    info = struct.pack(
-        "<IiiHHIIiiII", 40, 3, 2, 1, 8, 0, len(raster), 2835, 2835, len(pal), 0
-    )
-    off = 14 + 40 + len(table)
-    bmp = (
-        struct.pack("<2sIHHI", b"BM", off + len(raster), 0, 0, off)
-        + info + table + raster
-    )
-    png = _make_png(idx_rows, 3, [0, 0], palette=pal)
-
-    bmp_crc, bmp_feat = _stdlib_featurize("image/bmp", bmp)
-    png_crc, png_feat = _stdlib_featurize("image/png", png)
-    assert bmp_crc == png_crc
-    assert bmp_feat[3] == png_feat[3]  # identical mean over expanded RGB
-    assert bmp_feat[:2] == png_feat[:2] == [3.0, 2.0]
+    assert hashes[2]["decode_ok"] is False and hashes[2]["dhash"] is None
+    assert "NotImplementedError" in hashes[2]["error"]
+    assert hashes[11]["decode_ok"]
 
 
 @pytest.mark.slow
@@ -3391,18 +2730,13 @@ def test_image_dhash_perceptual_near_dup(spark):
     edited[0, 0] = [255, 255, 255]  # tiny edit -> small hamming
     other = rng.randint(0, 256, size=(16, 18, 3)).astype("uint8")
 
-    def bmp(px):
-        # _make_bmp takes row-major BGR tuples
-        return _make_bmp(
-            [[tuple(int(v) for v in p[::-1]) for p in row] for row in px]
-        )
-
+    ppm = "image/x-portable-pixmap"
     assets = spark.createDataFrame(
         [
-            (1, "image/bmp", bytearray(bmp(base))),
-            (2, "image/bmp", bytearray(bmp(up))),
-            (3, "image/bmp", bytearray(bmp(edited))),
-            (4, "image/bmp", bytearray(bmp(other))),
+            (1, ppm, bytearray(_make_pnm(base))),
+            (2, ppm, bytearray(_make_pnm(up))),
+            (3, ppm, bytearray(_make_pnm(edited))),
+            (4, ppm, bytearray(_make_pnm(other))),
             (5, "image/jpeg", bytearray(b"\xff\xd8\xff junk")),
         ],
         "asset_id long, media_type string, payload binary",
@@ -3456,18 +2790,13 @@ def test_curate_corpus_asset_near_dup_gate(spark):
     edited = base.copy()
     edited[0, 0] = [255, 255, 255]
 
-    def bmp(px):
-        return _make_bmp(
-            [[tuple(int(v) for v in p[::-1]) for p in row] for row in px]
-        )
-
     # doc 2's image near-dups doc 1's (texts are unrelated — the gate
     # is pixel-space, not text-space); doc 3's asset is undecodable
     # junk (dead-letter → survives the gate); doc 4 is text-only
     assets = spark.createDataFrame(
         [
-            (1, "image/bmp", bytearray(bmp(base))),
-            (2, "image/bmp", bytearray(bmp(edited))),
+            (1, "image/x-portable-pixmap", bytearray(_make_pnm(base))),
+            (2, "image/x-portable-pixmap", bytearray(_make_pnm(edited))),
             (3, "image/jpeg", bytearray(b"\xff\xd8\xff junk")),
         ],
         "asset_id long, media_type string, payload binary",
@@ -3604,323 +2933,6 @@ def test_curate_corpus_strip_html_stage(spark):
     assert by_id[1]["stripped_fp"] == by_id[2]["stripped_fp"]
 
 
-def _make_gif(idx_rows, palette, interlaced=False, animated_tail=False):
-    """Minimal GIF89a encoder for tests: global color table padded to 4
-    entries (min LZW code size 2), raster emitted with a CLEAR code
-    before every pixel code (the classic 'uncompressed GIF' technique —
-    valid LZW, dictionary never grows), optional interlace flag with
-    rows pre-shuffled into pass order, optional second image block to
-    exercise first-frame semantics."""
-    import struct
-
-    h = len(idx_rows)
-    w = len(idx_rows[0])
-    pal = list(palette) + [(0, 0, 0)] * (4 - len(palette))
-    gct = b"".join(bytes(c) for c in pal)
-    header = b"GIF89a" + struct.pack("<HH", w, h) + bytes([0x80 | 0x01, 0, 0])
-    # rows in stream order: interlaced GIFs store pass 1 (rows 0,8,..),
-    # pass 2 (4,12,..), pass 3 (2,6,..), pass 4 (odd rows)
-    rows = idx_rows
-    if interlaced:
-        order = (
-            list(range(0, h, 8)) + list(range(4, h, 8))
-            + list(range(2, h, 4)) + list(range(1, h, 2))
-        )
-        rows = [idx_rows[r] for r in order]
-    min_code, clear, eoi = 2, 4, 5
-    bits, nbits = [], 3  # code size = min_code + 1
-    for px in (p for row in rows for p in row):
-        for code in (clear, px):
-            for b in range(nbits):
-                bits.append((code >> b) & 1)
-    for b in range(nbits):
-        bits.append((eoi >> b) & 1)
-    while len(bits) % 8:
-        bits.append(0)
-    data = bytes(
-        sum(bit << i for i, bit in enumerate(bits[k : k + 8]))
-        for k in range(0, len(bits), 8)
-    )
-    blocks = b"".join(
-        bytes([len(data[i : i + 255])]) + data[i : i + 255]
-        for i in range(0, len(data), 255)
-    )
-    img = (
-        b"\x2C" + struct.pack("<HHHH", 0, 0, w, h)
-        + bytes([0x40 if interlaced else 0])
-        + bytes([min_code]) + blocks + b"\x00"
-    )
-    # a graphic-control extension before the image (block-skip coverage)
-    ext = b"\x21\xF9\x04\x00\x00\x00\x00\x00"
-    tail = img if animated_tail else b""
-    return header + gct + ext + img + tail + b"\x3B"
-
-
-def test_stdlib_gif_decoder_known_answer():
-    import numpy as np
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _gif_decode_pixels,
-    )
-
-    pal = [(255, 0, 0), (0, 255, 0), (12, 34, 56)]
-    idx_rows = [[0, 1, 2], [2, 1, 0]]
-    pixels = _gif_decode_pixels(_make_gif(idx_rows, pal))
-    want = np.array([[pal[i] for i in row] for row in idx_rows], np.uint8)
-    assert pixels.shape == (2, 3, 3)
-    assert (pixels == want).all()
-
-
-def test_gif_interlace_and_first_frame():
-    import numpy as np
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _gif_decode_pixels,
-    )
-
-    pal = [(10, 0, 0), (0, 20, 0), (0, 0, 30), (40, 40, 40)]
-    idx_rows = [[r % 4] * 2 for r in range(5)]  # 5 rows -> 4 passes used
-    plain = _gif_decode_pixels(_make_gif(idx_rows, pal))
-    inter = _gif_decode_pixels(_make_gif(idx_rows, pal, interlaced=True))
-    assert (plain == inter).all()  # deinterlace restores row order
-    # animated: first frame decoded, trailer frames ignored
-    anim = _gif_decode_pixels(_make_gif(idx_rows, pal, animated_tail=True))
-    assert (anim == plain).all()
-    want = np.array([[pal[r % 4]] * 2 for r in range(5)], np.uint8)
-    assert (plain == want).all()
-
-
-def test_gif_matches_paletted_png_fingerprint():
-    """Cross-encoding parity, extended to GIF: the same paletted image as
-    GIF and paletted PNG checksums identically over the expanded RGB
-    raster (the encoding-invariance contract of _featurize_bmp)."""
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _stdlib_featurize,
-    )
-
-    pal = [(255, 0, 0), (0, 255, 0), (12, 34, 56)]
-    idx_rows = [[0, 1, 2], [2, 1, 0]]
-    gif_crc, gif_feat = _stdlib_featurize(
-        "image/gif", _make_gif(idx_rows, pal)
-    )
-    png_crc, png_feat = _stdlib_featurize(
-        "image/png", _make_png(idx_rows, 3, [0, 0], palette=pal)
-    )
-    assert gif_crc == png_crc
-    assert gif_feat[:2] == png_feat[:2] == [3.0, 2.0]
-    assert gif_feat[3] == png_feat[3]
-
-
-def test_gif_corrupt_stream_raises():
-    import pytest
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _gif_decode_pixels,
-    )
-
-    pal = [(1, 2, 3)]
-    good = _make_gif([[0, 0], [0, 0]], pal)
-    with pytest.raises(ValueError):
-        _gif_decode_pixels(good[:20])  # truncated mid-stream
-    with pytest.raises(ValueError):
-        _gif_decode_pixels(b"GIF89a" + b"\x00" * 5)  # header truncated
-
-
-def test_gif_lzw_roundtrip_with_real_compression():
-    """The clear-per-pixel fixtures above never grow the LZW dictionary;
-    this encodes rasters with the REAL GIF LZW algorithm (growing
-    dictionary, variable code width, KwK self-reference on repeats) and
-    round-trips them through the decoder."""
-    import random
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _gif_lzw_decode,
-    )
-
-    def lzw_encode(indices, min_code_size):
-        clear, eoi = 1 << min_code_size, (1 << min_code_size) + 1
-        out_bits = []
-        code_size = min_code_size + 1
-
-        def emit(code):
-            for b in range(code_size):
-                out_bits.append((code >> b) & 1)
-
-        table = {bytes([i]): i for i in range(clear)}
-        next_code = eoi + 1
-        emit(clear)
-        cur = b""
-        for px in indices:
-            nxt = cur + bytes([px])
-            if nxt in table:
-                cur = nxt
-                continue
-            emit(table[cur])
-            table[nxt] = next_code
-            next_code += 1
-            # encoder widens AFTER assigning the code that fills the
-            # current width (mirror of the decoder's bump condition)
-            if next_code == (1 << code_size) + 1 and code_size < 12:
-                code_size += 1
-            cur = bytes([px])
-        if cur:
-            emit(table[cur])
-        emit(eoi)
-        while len(out_bits) % 8:
-            out_bits.append(0)
-        return bytes(
-            sum(bit << i for i, bit in enumerate(out_bits[k : k + 8]))
-            for k in range(0, len(out_bits), 8)
-        )
-
-    rng = random.Random(7)
-    for trial, min_code in [(0, 2), (1, 4), (2, 8)]:
-        n_colors = 1 << min_code
-        # runs of repeats force the KwK case; enough pixels to force
-        # several code-width bumps
-        indices = []
-        while len(indices) < 4000:
-            indices += [rng.randrange(n_colors)] * rng.randint(1, 9)
-        indices = indices[:4000]
-        data = lzw_encode(indices, min_code)
-        got = _gif_lzw_decode(data, min_code, len(indices))
-        assert list(got) == indices, f"trial {trial} mismatch"
-
-
-def test_gif_decoder_matches_pil_when_available():
-    """Cross-implementation check against a REAL encoder: PIL-written
-    GIFs (its LZW, its palette layout) must decode to PIL's own pixel
-    answer. Skips where PIL is absent (this container); runs anywhere it
-    exists."""
-    import io
-
-    import numpy as np
-    import pytest
-
-    image_mod = pytest.importorskip("PIL.Image")
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _gif_decode_pixels,
-    )
-
-    rng = np.random.default_rng(11)
-    rgb = rng.integers(0, 255, size=(13, 17, 3), dtype=np.uint8)
-    im = image_mod.fromarray(rgb, "RGB").convert(
-        "P", palette=image_mod.Palette.ADAPTIVE
-    )
-    buf = io.BytesIO()
-    im.save(buf, format="GIF")
-    payload = buf.getvalue()
-    want = np.asarray(im.convert("RGB"))
-    got = _gif_decode_pixels(payload)
-    assert got.shape == want.shape
-    assert (got == want).all()
-
-
-def _box(btype: bytes, body: bytes) -> bytes:
-    import struct
-
-    return struct.pack(">I", 8 + len(body)) + btype + body
-
-
-def _make_mp4(width=320, height=240, timescale=1000, duration=2500,
-              audio_track=True, largesize_mdat=False):
-    """Minimal ISO BMFF fixture: ftyp + (optional 64-bit-size mdat) +
-    moov[mvhd + video trak + optional audio trak]."""
-    import struct
-
-    mvhd = _box(
-        b"mvhd",
-        bytes(1) + bytes(3)  # version 0 + flags
-        + struct.pack(">II", 0, 0)  # creation, modification
-        + struct.pack(">II", timescale, duration)
-        + bytes(80),  # rate/volume/reserved/matrix/predefines/next id
-    )
-
-    def tkhd(w, h):
-        return _box(
-            b"tkhd",
-            bytes(4) + struct.pack(">IIII", 0, 0, 1, 0)
-            + struct.pack(">I", duration) + bytes(52)
-            + struct.pack(">II", w << 16, h << 16),
-        )
-
-    traks = _box(b"trak", tkhd(width, height))
-    if audio_track:
-        traks += _box(b"trak", tkhd(0, 0))
-    moov = _box(b"moov", mvhd + traks)
-    ftyp = _box(b"ftyp", b"isom" + bytes(4) + b"isomiso2")
-    mdat = b""
-    if largesize_mdat:
-        payload = b"\x00" * 24
-        mdat = (
-            struct.pack(">I", 1) + b"mdat"
-            + struct.pack(">Q", 16 + len(payload)) + payload
-        )
-    return ftyp + mdat + moov
-
-
-def test_video_metadata_box_walk(spark):
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        video_metadata,
-    )
-
-    rows = [
-        (1, "video/mp4", _make_mp4()),
-        (2, "video/mp4", _make_mp4(width=1920, height=1080, timescale=600,
-                                   duration=1200, audio_track=False,
-                                   largesize_mdat=True)),
-        (3, "video/y4m", _make_y4m(4, 2, [10, 200])),
-        (4, "video/mp4", b"\x00\x00\x00\x08ftyp"),  # no moov -> dead-letter
-    ]
-    df = spark.createDataFrame(
-        rows, "asset_id long, media_type string, payload binary"
-    )
-    out = {r["asset_id"]: r for r in video_metadata(df).collect()}
-    assert (out[1]["width"], out[1]["height"]) == (320, 240)
-    assert out[1]["duration_ms"] == 2500  # 2500 ticks @ 1000 ticks/s
-    assert out[1]["n_tracks"] == 2  # audio trak counted, its 0x0 ignored
-    assert (out[2]["width"], out[2]["height"]) == (1920, 1080)
-    assert out[2]["duration_ms"] == 2000  # 1200 ticks @ 600 ticks/s
-    assert out[2]["n_tracks"] == 1  # 64-bit mdat skipped correctly
-    assert (out[3]["width"], out[3]["height"]) == (4, 2)
-    assert out[3]["meta_ok"] and out[3]["duration_ms"] is None
-    assert not out[4]["meta_ok"] and "moov" in out[4]["error"]
-    # strict mode raises instead of dead-lettering
-    import pytest
-
-    with pytest.raises(Exception, match="moov"):
-        video_metadata(df, strict=True).collect()
-
-
-def test_video_metadata_truncated_tkhd_dead_letters(spark):
-    """A tkhd whose body is shorter than the 84-byte v0 layout must
-    dead-letter, not read its display size from the preceding sibling's
-    bytes and report garbage dimensions with meta_ok=true."""
-    import struct
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        video_metadata,
-    )
-
-    mvhd = _box(
-        b"mvhd",
-        bytes(1) + bytes(3) + struct.pack(">II", 0, 0)
-        + struct.pack(">II", 1000, 2500) + bytes(80),
-    )
-    stub_tkhd = _box(b"tkhd", bytes(4) + struct.pack(">III", 0, 0, 1))
-    moov = _box(b"moov", mvhd + _box(b"trak", stub_tkhd))
-    ftyp = _box(b"ftyp", b"isom" + bytes(4) + b"isomiso2")
-    short_mvhd = _box(b"moov", _box(b"mvhd", bytes(4)))
-    df = spark.createDataFrame(
-        [(1, "video/mp4", ftyp + moov), (2, "video/mp4", ftyp + short_mvhd)],
-        "asset_id long, media_type string, payload binary",
-    )
-    out = {r["asset_id"]: r for r in video_metadata(df).collect()}
-    assert not out[1]["meta_ok"] and "tkhd" in out[1]["error"]
-    assert not out[2]["meta_ok"] and "mvhd" in out[2]["error"]
-
-
 def test_semantic_decontaminate_drops_paraphrase_neighbors(spark):
     """A corpus vector nearly parallel to a benchmark vector is flagged
     and its document dropped; orthogonal vectors survive. The n-gram
@@ -3993,71 +3005,6 @@ def test_curate_corpus_semantic_stage(spark):
         curate_corpus(docs, benchmark_embeddings=bench_emb)
 
 
-def test_gif_depth_reflects_actual_color_table():
-    """Depth regression: the reported bit depth comes from the color
-    table the frame USED, not the logical-screen packed bits (which are
-    meaningless for local tables / unset global flags)."""
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _featurize_gif,
-    )
-
-    pal4 = [(1, 2, 3), (4, 5, 6), (7, 8, 9), (10, 11, 12)]
-    _, feat = _featurize_gif(_make_gif([[0, 1], [2, 3]], pal4))
-    assert feat[2] == 2.0  # 4-entry table -> 2-bit indices
-
-
-def test_gif_offset_frame_composes_onto_logical_screen():
-    """A first frame that is a sub-rectangle of the logical screen must
-    compose at its (left, top) offset over the background color — like
-    PIL — so dimensions and checksums stay encoding-invariant."""
-    import struct
-
-    import numpy as np
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _gif_decode_pixels,
-    )
-
-    # 4x3 logical screen, 2x1 frame at (1, 1); bg index 1
-    pal = [(10, 20, 30), (200, 200, 200), (1, 2, 3), (4, 5, 6)]
-    base = _make_gif([[0, 2]], pal)  # reuse the encoder's blocks
-    # patch: header screen 4x3, bg=1; image descriptor left=1, top=1
-    patched = bytearray(base)
-    struct.pack_into("<HH", patched, 6, 4, 3)
-    patched[11] = 1
-    img_off = patched.index(0x2C)
-    struct.pack_into("<HH", patched, img_off + 1, 1, 1)
-    pixels = _gif_decode_pixels(bytes(patched))
-    assert pixels.shape == (3, 4, 3)
-    bg = np.array(pal[1], np.uint8)
-    assert (pixels[0, 0] == bg).all() and (pixels[2, 3] == bg).all()
-    assert (pixels[1, 1] == np.array(pal[0], np.uint8)).all()
-    assert (pixels[1, 2] == np.array(pal[2], np.uint8)).all()
-
-
-def test_video_metadata_accepts_styp_and_mdat_first(spark):
-    """BMFF files needn't lead with ftyp: fragmented streams lead with
-    styp and legacy MOVs can be mdat-first — the box walk, not a magic
-    allowlist, decides."""
-    import struct
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        video_metadata,
-    )
-
-    base = _make_mp4(width=640, height=480)
-    styp_first = _box(b"styp", b"msdh" + bytes(4)) + base
-    # mdat-first: move a tiny mdat ahead of everything
-    mdat_first = _box(b"mdat", b"\x00" * 8) + base
-    df = spark.createDataFrame(
-        [(1, "video/mp4", styp_first), (2, "video/quicktime", mdat_first)],
-        "asset_id long, media_type string, payload binary",
-    )
-    out = {r["asset_id"]: r for r in video_metadata(df).collect()}
-    assert out[1]["meta_ok"] and (out[1]["width"], out[1]["height"]) == (640, 480)
-    assert out[2]["meta_ok"] and (out[2]["width"], out[2]["height"]) == (640, 480)
-
-
 def test_weighted_sample_scales_with_weight(spark):
     """A-ES properties: heavier rows are overrepresented, no row repeats,
     zero/NULL weights never draw, and the subset is deterministic."""
@@ -4086,31 +3033,6 @@ def test_weighted_sample_scales_with_weight(spark):
         r["doc_id"] for r in weighted_sample(df, 300, "w", salt=1).collect()
     ]
     assert other != ids
-
-
-def test_gif_declared_screen_bounds_are_enforced():
-    """A tiny payload declaring a huge logical screen must dead-letter,
-    not allocate a multi-GB canvas; an overhanging frame is corrupt."""
-    import struct
-
-    import pytest
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _gif_decode_pixels,
-    )
-
-    pal = [(1, 2, 3)]
-    base = bytearray(_make_gif([[0, 0]], pal))
-    struct.pack_into("<HH", base, 6, 65535, 65535)  # 12.9 GB canvas claim
-    with pytest.raises(ValueError, match="64M-pixel"):
-        _gif_decode_pixels(bytes(base))
-
-    overhang = bytearray(_make_gif([[0, 0]], pal))
-    struct.pack_into("<HH", overhang, 6, 2, 1)  # screen 2x1
-    img_off = overhang.index(0x2C)
-    struct.pack_into("<HH", overhang, img_off + 1, 1, 0)  # frame at left=1
-    with pytest.raises(ValueError, match="overhangs"):
-        _gif_decode_pixels(bytes(overhang))
 
 
 def test_weighted_sample_excludes_null_ids(spark):
@@ -4295,33 +3217,6 @@ def test_curation_drift_flags_injected_collapse(spark):
         for r in out
         if r["stage"] == "input"
     )
-
-
-def test_gif_frame_declared_bounds_checked_before_decode():
-    """The 64M-pixel bound and overhang check run BEFORE the LZW decode
-    and palette expansion — a descriptor-declared huge frame must
-    dead-letter without allocating its raster, and a frame larger than
-    the screen at (0,0) is just as corrupt as a shifted one."""
-    import struct
-
-    import pytest
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _gif_decode_pixels,
-    )
-
-    pal = [(1, 2, 3)]
-    huge_frame = bytearray(_make_gif([[0, 0]], pal))
-    struct.pack_into("<HH", huge_frame, 6, 65535, 65535)  # screen claim
-    img_off = huge_frame.index(0x2C)
-    struct.pack_into("<HH", huge_frame, img_off + 5, 65535, 65535)  # frame
-    with pytest.raises(ValueError, match="64M-pixel"):
-        _gif_decode_pixels(bytes(huge_frame))
-
-    origin_overhang = bytearray(_make_gif([[0, 0]], pal))  # frame 2x1
-    struct.pack_into("<HH", origin_overhang, 6, 1, 1)  # screen 1x1
-    with pytest.raises(ValueError, match="overhangs"):
-        _gif_decode_pixels(bytes(origin_overhang))
 
 
 def test_bm25_ranks_rare_term_and_length_norm(spark):
@@ -6399,427 +5294,6 @@ def test_incremental_embedding_normalized_native_parity(spark):
         ).collect()
 
 
-def _cmyk_gradient(h, w):
-    """Smooth stored-sample (Adobe-inverted) CMYK raster."""
-    import numpy as np
-
-    yy, xx = np.mgrid[0:h, 0:w]
-    return np.stack(
-        [
-            255 - xx * 255 // max(w - 1, 1),
-            255 - yy * 255 // max(h - 1, 1),
-            255 - (xx + yy) * 128 // max(w + h - 2, 1),
-            200 + yy * 55 // max(h - 1, 1),
-        ],
-        axis=-1,
-    ).astype(np.uint8)
-
-
-def test_jpeg_cmyk_and_ycck_roundtrip():
-    """4-component JPEG decodes natively: a CMYK stream (Adobe APP14
-    transform 0) round-trips to the stored samples within quantization
-    tolerance, the YCCK form (transform 2) of the SAME raster decodes
-    to nearly the same samples (the color transform is the encoder's
-    internal affair), and the RGB composite helper renders it."""
-    import numpy as np
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _jpeg_cmyk_to_rgb,
-        _jpeg_decode,
-        _jpeg_encode_cmyk,
-    )
-
-    img = _cmyk_gradient(37, 29)  # non-multiple-of-8 dims
-    for transform in (0, 2):
-        out = _jpeg_decode(_jpeg_encode_cmyk(img, 95, transform))
-        assert out.shape == img.shape == (37, 29, 4)
-        diff = np.abs(out.astype(int) - img.astype(int))
-        assert diff.max() <= 12 and diff.mean() < 2.5, (
-            transform, diff.max(), diff.mean(),
-        )
-    rgb = _jpeg_cmyk_to_rgb(out)
-    assert rgb.shape == (37, 29, 3) and rgb.dtype == np.uint8
-
-
-def test_jpeg_cmyk_featurizes_and_reason_report_flips(spark):
-    """End to end: a CMYK asset lands decode_ok with 32-bit depth (4
-    channels × 8) through decode_features — the r10 flip of the
-    '4-component JPEG' decoder_gap line — and resize_assets composites
-    it to RGB rather than refusing."""
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _jpeg_encode_cmyk,
-        decode_features,
-    )
-
-    payload = _jpeg_encode_cmyk(_cmyk_gradient(24, 16), 90, 2)
-    assets = spark.createDataFrame(
-        [(1, "image/jpeg", payload, {"n_bytes": len(payload), "source": "t"})],
-        "asset_id long, media_type string, payload binary, "
-        "meta struct<n_bytes:long, source:string>",
-    )
-    row = decode_features(assets, real_decoder=True).collect()[0]
-    assert row["decode_ok"] and row["reason"] is None
-    assert row["feature"][:3] == [16.0, 24.0, 32.0]
-
-
-def test_jpeg_dnl_deferred_height_decodes():
-    """A DNL-deferred stream (SOF height 0; the true line count in the
-    0xFFDC segment closing the first scan, per T.81 B.2.5) decodes
-    bit-identically to its plain twin — including with restart markers
-    in the entropy data (the marker-aware DNL scan must not trip on
-    RSTn or stuffed 0xFF00 bytes) — and a height-0 stream WITHOUT a
-    DNL is corrupt, not a gap."""
-    import struct
-
-    import numpy as np
-    import pytest
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _jpeg_decode,
-        _jpeg_encode_baseline,
-    )
-
-    img = _jpeg_gradient(21, 33)
-    for ri in (0, 3):
-        plain = _jpeg_encode_baseline(img, quality=90, restart_interval=ri)
-        want = _jpeg_decode(plain)
-        # defer the height: zero the SOF field, append DNL before EOI
-        sof_at = plain.index(b"\xff\xc0")
-        patched = bytearray(plain)
-        struct.pack_into(">H", patched, sof_at + 5, 0)
-        assert patched.endswith(b"\xff\xd9")
-        dnl = b"\xff\xdc\x00\x04" + struct.pack(">H", 21)
-        payload = bytes(patched[:-2]) + dnl + b"\xff\xd9"
-        got = _jpeg_decode(payload)
-        assert np.array_equal(got, want), ri
-        # T.81 B.1.1.2 fill bytes may pad ANY marker: an odd run of
-        # 0xFF before the DNL must not desync the marker-aware scan
-        filled = bytes(patched[:-2]) + b"\xff" + dnl + b"\xff\xd9"
-        assert np.array_equal(_jpeg_decode(filled), want), ri
-
-    with pytest.raises(ValueError, match="DNL"):
-        _jpeg_decode(bytes(patched))  # height 0, no DNL segment
-    with pytest.raises(ValueError, match="DNL"):
-        # NL=0 is illegal (valid range 1-65535): corrupt, never a
-        # decode_ok zero-pixel raster
-        zero_dnl = b"\xff\xdc\x00\x04" + struct.pack(">H", 0)
-        _jpeg_decode(bytes(patched[:-2]) + zero_dnl + b"\xff\xd9")
-
-
-def test_avi_mjpeg_native_video_decode():
-    """Motion-JPEG AVI — the first COMPRESSED video format whose
-    content decodes natively: demux finds every '00dc' JPEG frame,
-    the featurizer reports the Y4M contract [w, h, n_frames, mean
-    luma] with a checksum over the bit-exact decoded rasters, a frame
-    stripped of its DHT segments still decodes (the MJPEG implied
-    Annex-K default-table convention), and a non-MJPEG AVI raises the
-    capability NotImplementedError rather than decoding garbage."""
-    import numpy as np
-    import pytest
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _avi_encode_mjpeg,
-        _featurize_avi_mjpeg,
-        _jpeg_decode,
-        _parse_avi_mjpeg,
-    )
-
-    f0 = _jpeg_gradient(24, 32)
-    f1 = np.roll(f0, 5, axis=1)
-    f2 = np.roll(f0, 11, axis=0)
-    payload = _avi_encode_mjpeg([f0, f1, f2], quality=92, fps=8)
-
-    w, h, fps, frames, n_streams = _parse_avi_mjpeg(payload)
-    assert (w, h, len(frames), n_streams) == (32, 24, 3, 1)
-    assert abs(fps - 8.0) < 1e-6
-    assert all(fr[:2] == b"\xff\xd8" for fr in frames)
-
-    checksum, feats = _featurize_avi_mjpeg(payload)
-    assert feats[:3] == [32.0, 24.0, 3.0]
-    assert 0.0 < feats[3] < 255.0
-
-    # MJPEG convention: strip DHT (0xFFC4) segments from a frame —
-    # the implied Annex-K tables must decode it IDENTICALLY to the
-    # tables the encoder actually wrote (they are the same tables)
-    import struct as _struct
-
-    def strip_dht(jpeg: bytes) -> bytes:
-        out, pos = bytearray(jpeg[:2]), 2
-        while pos + 4 <= len(jpeg):
-            if jpeg[pos] != 0xFF:
-                out += jpeg[pos:]
-                break
-            marker = jpeg[pos + 1]
-            if marker == 0xDA:
-                out += jpeg[pos:]
-                break
-            seglen = _struct.unpack_from(">H", jpeg, pos + 2)[0]
-            if marker != 0xC4:
-                out += jpeg[pos : pos + 2 + seglen]
-            pos += 2 + seglen
-        return bytes(out)
-
-    bare = strip_dht(frames[0])
-    assert b"\xff\xc4" not in bare[: bare.index(b"\xff\xda")]
-    with pytest.raises(ValueError):
-        _jpeg_decode(bare)  # a PLAIN jpeg without DHT is corrupt
-    assert np.array_equal(
-        _jpeg_decode(bare, mjpeg_default_huff=True),
-        _jpeg_decode(frames[0]),
-    )
-
-    # foreign codec: honest capability gap, not garbage — including
-    # field-interlaced MJPA, whose chunks are half-height field pairs
-    for fourcc in (b"XVID", b"MJPA"):
-        foreign = payload.replace(b"vidsMJPG", b"vids" + fourcc, 1)
-        with pytest.raises(NotImplementedError, match="ffmpeg"):
-            _parse_avi_mjpeg(foreign)
-
-    # avih dims are ADVISORY (capture muxers write 0) — the JPEG SOF
-    # dims are authoritative for featurization
-    import struct as _st
-
-    zeroed = bytearray(payload)
-    at = payload.index(b"avih") + 8
-    _st.pack_into("<II", zeroed, at + 32, 0, 0)
-    checksum0, feats0 = _featurize_avi_mjpeg(bytes(zeroed))
-    assert feats0 == feats and checksum0 == checksum
-
-
-def test_avi_mjpeg_cmyk_frame_luma_composites():
-    """A 4-channel (Adobe CMYK) MJPEG frame is stored-inverted ink —
-    the featurizer must composite through _jpeg_cmyk_to_rgb before the
-    BT.601 luma, not weight the C/M/Y planes as if they were RGB."""
-    import numpy as np
-
-    from inbev_data_engineering_case_spark.operators import multimodal
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _avi_encode_mjpeg,
-        _featurize_avi_mjpeg,
-        _jpeg_cmyk_to_rgb,
-        _jpeg_decode,
-        _jpeg_encode_cmyk,
-    )
-
-    # K=128 makes composite != stored C/M/Y planes, so the two luma
-    # formulas disagree by a wide margin
-    cmyk = np.zeros((16, 16, 4), np.uint8)
-    cmyk[..., 0], cmyk[..., 1], cmyk[..., 2], cmyk[..., 3] = (
-        200, 100, 50, 128,
-    )
-    frame = _jpeg_encode_cmyk(cmyk, quality=95)
-
-    orig = multimodal._jpeg_encode_baseline
-    multimodal._jpeg_encode_baseline = lambda f, quality=85: frame
-    try:
-        payload = _avi_encode_mjpeg([cmyk[..., :3]], quality=95, fps=4)
-    finally:
-        multimodal._jpeg_encode_baseline = orig
-
-    decoded = _jpeg_decode(frame)
-    assert decoded.shape[2] == 4
-    rgb = _jpeg_cmyk_to_rgb(decoded).astype(np.float64)
-    want = float(
-        (0.299 * rgb[..., 0] + 0.587 * rgb[..., 1] + 0.114 * rgb[..., 2])
-        .mean()
-    )
-    raw = decoded.astype(np.float64)
-    wrong = float(
-        (0.299 * raw[..., 0] + 0.587 * raw[..., 1] + 0.114 * raw[..., 2])
-        .mean()
-    )
-    assert abs(want - wrong) > 30  # the bug would be a silent skew
-
-    _, feats = _featurize_avi_mjpeg(payload)
-    assert feats[:3] == [16.0, 16.0, 1.0]
-    assert abs(feats[3] - want) < 1e-9
-
-
-def test_video_metadata_avi_recovers_dims_from_sof(spark):
-    """video_metadata's AVI branch must not report the advisory avih
-    canvas dims when a capture muxer wrote 0s — the first frame's SOF
-    header (a cheap marker walk, no entropy decode) is the authority
-    the featurize surface already uses, so both report the same
-    resolution."""
-    import struct
-
-    import numpy as np
-    import pytest
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _avi_encode_mjpeg,
-        _jpeg_sof_dimensions,
-        video_metadata,
-    )
-
-    f0 = _jpeg_gradient(24, 32)
-    payload = _avi_encode_mjpeg([f0, np.roll(f0, 3, 1)], quality=90, fps=5)
-    zeroed = bytearray(payload)
-    struct.pack_into("<II", zeroed, payload.index(b"avih") + 8 + 32, 0, 0)
-
-    # the probe itself: header-only dims, garbage rejected loudly
-    frames_at = payload.index(b"\xff\xd8")
-    assert _jpeg_sof_dimensions(payload[frames_at:]) == (24, 32)
-    with pytest.raises(ValueError, match="SOI"):
-        _jpeg_sof_dimensions(b"\x00\x01\x02\x03")
-
-    # DNL-deferred height with an FF DC byte pair INSIDE a COM segment
-    # payload between SOF and SOS: the probe must step over marker
-    # segments and only byte-search the post-SOS entropy region (where
-    # 0xFF is always stuffed or a restart marker)
-    com = b"\xff\xfe" + struct.pack(">H", 6) + b"\xff\xdc\x99\x99"
-    sof0 = b"\xff\xc0" + struct.pack(">HBHHB", 11, 8, 0, 32, 1) + bytes(
-        [1, 0x11, 0]
-    )
-    sos = b"\xff\xda" + struct.pack(">H", 8) + bytes(
-        [1, 1, 0x00, 0, 63, 0]
-    )
-    entropy = b"\x12\x34\x56\x78"
-    dnl = b"\xff\xdc" + struct.pack(">HH", 4, 24)
-    fake = b"\xff\xd8" + com + sof0 + sos + entropy + dnl + b"\xff\xd9"
-    assert _jpeg_sof_dimensions(fake) == (24, 32)
-
-    # ISO/IEC 10918-1 B.1.1.2: markers may be padded with 0xFF fill
-    # bytes — a run before SOF must be stepped over, not parsed as a
-    # marker whose "length" bytes desynchronize the walk
-    padded = b"\xff\xd8" + b"\xff\xff\xff" + sof0[1:] + sos + entropy
-    assert _jpeg_sof_dimensions(padded + dnl) == (24, 32)
-
-    df = spark.createDataFrame(
-        [(1, "video", bytes(zeroed))],
-        "asset_id long, media_type string, payload binary",
-    )
-    row = video_metadata(df).collect()[0]
-    assert row["meta_ok"] and (row["width"], row["height"]) == (32, 24)
-
-
-def test_avi_mjpeg_through_spark_featurize_and_frame_sample(spark):
-    """End to end through the Arrow operators: an MJPEG AVI asset
-    lands decode_ok through decode_features (video family), and
-    sample_frames emits its per-frame JPEG payloads with original
-    indices (every_n honored)."""
-    import numpy as np
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _avi_encode_mjpeg,
-        decode_features,
-        sample_frames,
-    )
-
-    frames = [
-        np.roll(_jpeg_gradient(16, 16), k, axis=1) for k in range(5)
-    ]
-    payload = _avi_encode_mjpeg(frames, quality=90, fps=4)
-    assets = spark.createDataFrame(
-        [(1, "video/x-msvideo", payload,
-          {"n_bytes": len(payload), "source": "t"})],
-        "asset_id long, media_type string, payload binary, "
-        "meta struct<n_bytes:long, source:string>",
-    )
-    row = decode_features(assets, real_decoder=True).collect()[0]
-    assert row["decode_ok"] and row["reason"] is None
-    assert row["feature"][:3] == [16.0, 16.0, 5.0]
-
-    out = sample_frames(assets, every_n=2, real_decoder=True).collect()
-    kept = sorted(r["frame_idx"] for r in out)
-    assert kept == [0, 2, 4]
-    assert all(bytes(r["frame"])[:2] == b"\xff\xd8" for r in out)
-
-
-def test_video_metadata_covers_avi(spark):
-    """The metadata-only pass parses AVI container facts regardless
-    of codec (resolution/duration gates are codec-agnostic), while
-    content DECODE stays MJPG-bound."""
-    import numpy as np
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _avi_encode_mjpeg,
-        video_metadata,
-    )
-
-    frames = [np.roll(_jpeg_gradient(12, 20), k, axis=0) for k in range(4)]
-    mjpg = _avi_encode_mjpeg(frames, quality=85, fps=4)
-    xvid = mjpg.replace(b"vidsMJPG", b"vidsXVID", 1)
-    assets = spark.createDataFrame(
-        [
-            (1, "video/x-msvideo", mjpg, {"n_bytes": len(mjpg), "source": "t"}),
-            (2, "video/x-msvideo", xvid, {"n_bytes": len(xvid), "source": "t"}),
-        ],
-        "asset_id long, media_type string, payload binary, "
-        "meta struct<n_bytes:long, source:string>",
-    )
-    rows = {r["asset_id"]: r for r in video_metadata(assets).collect()}
-    for rid in (1, 2):  # codec-agnostic container facts
-        assert rows[rid]["meta_ok"]
-        assert (rows[rid]["width"], rows[rid]["height"]) == (20, 12)
-        assert rows[rid]["duration_ms"] == 1000  # 4 frames at 4 fps
-
-
-def test_avi_opendml_avix_and_multistream():
-    """OpenDML 'RIFF AVIX' extension segments are walked (frames past
-    the first segment count), and chunks of NON-primary streams are
-    excluded by their stream prefix — an audio stream raises
-    n_streams without inflating the frame count or duration."""
-    import struct
-
-    import numpy as np
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _avi_encode_mjpeg,
-        _featurize_avi_mjpeg,
-        _jpeg_encode_baseline,
-        _parse_avi_mjpeg,
-    )
-
-    def chunk(tag, body):
-        return tag + struct.pack("<I", len(body)) + body + (
-            b"\x00" if len(body) & 1 else b""
-        )
-
-    def lst(t, body):
-        return chunk(b"LIST", t + body)
-
-    frames = [np.roll(_jpeg_gradient(16, 16), k, axis=1) for k in range(2)]
-    base = _avi_encode_mjpeg(frames, quality=90, fps=4)
-
-    # append an AVIX segment carrying a third frame
-    extra = _jpeg_encode_baseline(_jpeg_gradient(16, 16), quality=90)
-    avix = chunk(
-        b"RIFF", b"AVIX" + lst(b"movi", chunk(b"00dc", extra))
-    )
-    w, h, fps, got, n = _parse_avi_mjpeg(base + avix)
-    assert len(got) == 3 and got[2] == extra
-    _checksum, feats = _featurize_avi_mjpeg(base + avix)
-    assert feats[2] == 3.0
-
-    # inject an audio strl AFTER the video strl, and an '01wb' audio
-    # chunk into movi: n_streams=2, frames still the video stream's
-    strh_aud = b"auds" + b"\x00" * 48
-    audio_strl = lst(b"strl", chunk(b"strh", strh_aud))
-    # rebuild: insert the audio strl right before the movi LIST
-    movi_at = base.index(b"movi") - 8
-    with_audio = bytearray(
-        base[:movi_at] + audio_strl + base[movi_at:]
-    )
-    struct.pack_into(  # fix the outer RIFF size
-        "<I", with_audio, 4, len(with_audio) - 8
-    )
-    # smuggle an audio data chunk into movi too
-    movi_at2 = bytes(with_audio).index(b"movi") - 8
-    movi_size = struct.unpack_from("<I", with_audio, movi_at2 + 4)[0]
-    audio_chunk = chunk(b"01wb", b"\x00" * 10)
-    insert_at = movi_at2 + 8 + movi_size
-    out = bytearray(
-        bytes(with_audio[:insert_at])
-        + audio_chunk
-        + bytes(with_audio[insert_at:])
-    )
-    struct.pack_into("<I", out, movi_at2 + 4, movi_size + len(audio_chunk))
-    struct.pack_into("<I", out, 4, len(out) - 8)
-    w2, h2, fps2, frames2, n2 = _parse_avi_mjpeg(bytes(out))
-    assert n2 == 2 and len(frames2) == 2  # audio chunk not a "frame"
-
-
 def test_leakage_safe_split_cluster_coherent(spark):
     """The eval-contamination guard: every near-dup CLUSTER (transitive
     closure over pairs, not just direct pairs) lands in exactly one
@@ -6959,6 +5433,24 @@ def test_leakage_safe_split_rejects_reserved_column(spark):
     )
     pairs = spark.createDataFrame([(0, 1)], "id_a long, id_b long")
     with pytest.raises(ValueError, match="_split_key"):
+        leakage_safe_split(docs, pairs)
+
+
+def test_leakage_safe_split_rejects_existing_split_column(spark):
+    # twin symmetry: the batch operator must reject a pre-existing
+    # 'split' column exactly like its incremental twin, instead of
+    # silently clobbering the caller's assignment
+    from pyspark.sql import functions as F
+
+    from inbev_data_engineering_case_spark.operators.curate import (
+        leakage_safe_split,
+    )
+
+    docs = spark.range(5).select(
+        F.col("id").alias("doc_id"), F.lit("train").alias("split")
+    )
+    pairs = spark.createDataFrame([(0, 1)], "id_a long, id_b long")
+    with pytest.raises(ValueError, match="split"):
         leakage_safe_split(docs, pairs)
 
 
