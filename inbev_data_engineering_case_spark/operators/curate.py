@@ -153,8 +153,8 @@ def curate_corpus(
     ``asset_near_dup`` (default None = off) is the IMAGE-side near-dup
     gate a multimodal corpus needs beside the text one: pass the asset
     table (``asset_id`` aligned with ``id_col``, ``media_type``,
-    ``payload``; binary PNM decodes, any other image format
-    dead-letters and so survives the gate) and every document whose
+    ``payload``; BMP, binary PNM, PNG and GIF decode, any other image
+    format dead-letters and so survives the gate) and every document whose
     image is a non-survivor of its perceptual-hash cluster drops in
     the same pass
     (``multimodal.image_near_dup_keep``: dHash → Hamming-bucketed

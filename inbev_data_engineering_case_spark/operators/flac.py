@@ -9,13 +9,12 @@ escape-to-raw, wasted bits, all four channel assignments (independent,
 left/side, right/side, mid/side), CRC-8 header and CRC-16 frame
 verification, and the STREAMINFO MD5 check over the decoded PCM — so
 FLAC crawl audio decodes on a bare cluster the way WAV already does
-(``multimodal._stdlib_featurize``). Unlike VP8 (bound, not rebuilt —
-its RFC's normative probability tables are spec literals), FLAC has
-NO normative tables: Rice coding, the fixed predictors, and both CRCs
-are short formulas, so a from-spec implementation is honest.
+(``multimodal._stdlib_featurize``). FLAC has NO normative tables:
+Rice coding, the fixed predictors, and both CRCs are short formulas,
+so a from-spec implementation is honest.
 
-Encoder: a fixture/round-trip tool (the ``_jpeg_encode`` /
-``webp`` encoder discipline) — real STREAMINFO, per-frame subframe
+Encoder: a fixture/round-trip tool (and the re-encoder behind
+``multimodal.resize_assets``) — real STREAMINFO, per-frame subframe
 choice (constant auto-detect, verbatim, fixed 0-4, caller-quantized
 LPC), exact-cost Rice parameter selection with the escape form,
 partitioned residuals, wasted-bits signalling, and the three stereo
@@ -30,8 +29,8 @@ small block-size/sample-rate tables are the spec's arithmetic rules
 
 Reference parity: the reference repo has no audio path at all
 (SURVEY.md §2.6 — multimodal is an extension category); this module
-extends the ``documents``-table asset plumbing the same way
-``webp.py`` did for images.
+extends the ``documents``-table asset plumbing to lossless audio
+beside WAV.
 """
 
 from __future__ import annotations

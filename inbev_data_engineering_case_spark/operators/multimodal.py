@@ -8,18 +8,22 @@ payloads: documents' text bytes (``assets_from_documents``, featurized by
 (``pnm_assets_from_documents``, hashed by the dHash near-dup path).
 
 Under ``decode_features(real_decoder=True)`` exactly these payloads
-decode, dispatched on content magic:
+decode, dispatched on content magic, all in pure stdlib + numpy:
 
-- binary PNM images (P5 gray / P6 RGB, 8-bit);
-- RIFF/WAVE audio: integer PCM, IEEE float and G.711 A-law/µ-law
-  (extensible container included);
+- lossless images: BMP (BI_RGB 8/24/32 bpp), binary PNM (P5 gray / P6
+  RGB, 8-bit), PNG (8-bit non-interlaced, ``zlib`` inflate + full
+  unfilter) and GIF (87a/89a LZW, interlace, first frame);
+- lossless audio: RIFF/WAVE (integer PCM, IEEE float and G.711
+  A-law/µ-law, extensible container included) and FLAC
+  (``operators/flac.py``, RFC 9639);
 - anything outside the image/audio/video families, as opaque binary
   (crc32 checksum + zlib compressibility).
 
-Every other image, audio or video format (JPEG, PNG, GIF, BMP, WebP,
-HEIF/AVIF, FLAC, mp3, Y4M, AVI, MP4, WebM, ...) raises
-``NotImplementedError`` and dead-letters with ``reason='decoder_gap'``; a
-malformed payload of a supported format dead-letters with
+``resize_assets(real_decoder=True)`` resamples the same image and audio
+formats. Every other image, audio or video format (JPEG, WebP,
+HEIF/AVIF, mp3, Y4M, AVI, MP4, WebM, ...) raises ``NotImplementedError``
+and dead-letters with ``reason='decoder_gap'``; a malformed payload of a
+supported format dead-letters with
 ``reason='corrupt'``. At the OPERATOR level decode errors are
 dead-lettered, not raised (``decode_ok``/``error``/``reason`` columns;
 opt back into raising with ``strict=True``): one bad asset in a 100 TB
@@ -83,8 +87,8 @@ def _dead_letter_reason(e: BaseException) -> str:
     populations a corpus QA report must size apart:
 
     - ``decoder_gap`` — a format the decoders deliberately refuse (every
-      ``NotImplementedError``: any image but binary PNM, any audio but
-      PCM/float/G.711 WAV, every video). Recoverable by investing in a
+      ``NotImplementedError``: any image but BMP/PNM/PNG/GIF, any audio
+      but WAV or FLAC, every video). Recoverable by investing in a
       decoder; its corpus share is the business case for one.
     - ``corrupt`` — a malformed payload of a supported format (anything
       else). No decoder investment recovers these; they are junk-data
@@ -123,18 +127,39 @@ def _fake_featurize(payload: bytes) -> tuple[int, list[float]]:
     last = float(payload[-1]) if n else 0.0
     return checksum, [float(n), mean, first, last]
 
+
+def _featurize_bmp(payload: bytes) -> tuple[int, list[float]]:
+    """Pure-stdlib BMP featurization over the NORMALIZED raster: decode via
+    ``_decode_image_pixels`` (top-down row order, BGR(A)→RGB, 8-bpp palette
+    expanded through the color table), then [width, height, stored_bpp,
+    mean pixel] with checksum = crc32 of the normalized pixels. Hashing the
+    normalized raster — not the stored bytes — makes the fingerprint
+    encoding-invariant: the same image as a paletted BMP, a paletted PNG,
+    or a P6 PNM checksums identically, which is what cross-encoding
+    near-dup detection over a scraped corpus needs. Row padding is
+    stripped before hashing (undefined by the format)."""
+    import struct
+    import zlib
+
+    import numpy as np
+
+    pixels = _decode_image_pixels(payload)
+    bpp = struct.unpack_from("<H", payload, 28)[0]
+    h, w = pixels.shape[0], pixels.shape[1]
+    checksum = zlib.crc32(pixels.tobytes()) % 1_000_003
+    mean_px = float(pixels.astype(np.float64).mean()) if pixels.size else 0.0
+    return checksum, [float(w), float(h), float(bpp), mean_px]
+
+
 def _pnm_header(payload: bytes) -> tuple[int, int, int, int]:
     """Parse a binary PNM (P5/P6) header → (width, height, channels,
-    raster_offset). Whitespace/comment-tolerant; raises
-    ``NotImplementedError`` for any other magic (the ``decoder_gap``
-    for every non-PNM image) and ValueError on any malformation."""
+    raster_offset). Whitespace/comment-tolerant; raises ValueError on any
+    malformation (shared by featurize and resize so both fail loud the
+    same way)."""
     magic = payload[:2]
     channels = {b"P6": 3, b"P5": 1}.get(magic)
     if channels is None:
-        raise NotImplementedError(
-            "image decoding covers binary PNM (P5/P6) only; every other"
-            " image format is a decoder gap"
-        )
+        raise ValueError("not a binary PNM payload (P5/P6 magic expected)")
     # header: magic, then width/height/maxval as ASCII ints separated by
     # whitespace, with '#'-to-EOL comments allowed anywhere between tokens
     tokens: list[int] = []
@@ -176,6 +201,327 @@ def _featurize_pnm(payload: bytes) -> tuple[int, list[float]]:
     checksum = zlib.crc32(pixels.tobytes()) % 1_000_003
     mean_px = float(pixels.astype(np.float64).mean()) if pixels.size else 0.0
     return checksum, [float(width), float(height), float(channels), mean_px]
+
+
+_PNG_SIG = b"\x89PNG\r\n\x1a\n"
+_PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}  # color_type -> samples/px
+
+_GIF_INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))  # (start, step)
+
+
+def _gif_lzw_decode(data: bytes, min_code_size: int, expected: int) -> bytes:
+    """GIF-variant LZW decode (variable code width ``min+1``..12 bits,
+    LSB-first bit packing, in-stream CLEAR/EOI codes). Returns exactly
+    ``expected`` palette indices; raises ValueError on a corrupt stream.
+    Pure Python, but bounded: each code appends at least one output byte,
+    so the loop runs at most ``expected`` + dictionary-reset times."""
+    if not 2 <= min_code_size <= 8:
+        raise ValueError(f"bad GIF LZW min code size {min_code_size}")
+    clear = 1 << min_code_size
+    eoi = clear + 1
+    code_size = min_code_size + 1
+    table: list[bytes] = [bytes([i]) for i in range(clear)] + [b"", b""]
+    out = bytearray()
+    prev: bytes | None = None
+    bitpos, total_bits = 0, len(data) * 8
+    while bitpos + code_size <= total_bits and len(out) < expected:
+        byte_i, bit_o = divmod(bitpos, 8)
+        chunk = int.from_bytes(data[byte_i : byte_i + 3], "little")
+        code = (chunk >> bit_o) & ((1 << code_size) - 1)
+        bitpos += code_size
+        if code == clear:
+            code_size = min_code_size + 1
+            del table[clear + 2 :]
+            prev = None
+            continue
+        if code == eoi:
+            break
+        if prev is None:
+            if code >= len(table) or not table[code]:
+                raise ValueError("GIF LZW: bad first code after clear")
+            entry = table[code]
+        else:
+            if code < len(table) and (table[code] or code < clear):
+                entry = table[code]
+            elif code == len(table):  # the KwK special case
+                entry = prev + prev[:1]
+            else:
+                raise ValueError("GIF LZW: code out of range")
+            table.append(prev + entry[:1])
+            if len(table) == (1 << code_size) and code_size < 12:
+                code_size += 1
+        out += entry
+        prev = entry
+    if len(out) < expected:
+        raise ValueError(
+            f"GIF LZW: raster truncated ({len(out)} of {expected} pixels)"
+        )
+    return bytes(out[:expected])
+
+
+def _gif_decode_pixels(payload: bytes):
+    """Pure-stdlib GIF decode (GIF87a/89a, first frame) → (h, w, 3) uint8
+    RGB. See ``_gif_decode``."""
+    return _gif_decode(payload)[0]
+
+
+def _gif_decode(payload: bytes):
+    """Pure-stdlib GIF decode (GIF87a/89a, first frame) → ((h, w, 3)
+    uint8 RGB pixels, color_table_entries): logical-screen + color-table
+    walk, extension-block skip, LZW raster decode, interlace reorder,
+    palette expansion — mirroring the paletted-BMP/PNG normalization so
+    the same image stored as GIF checksums/fingerprints identically.
+    ``color_table_entries`` is the size of the table the frame actually
+    used (local wins over global), for depth reporting. Animated GIFs
+    yield frame 1 (the still-image semantics every thumbnailer uses).
+    A first frame that is a SUB-RECTANGLE of the logical screen (some
+    optimizers crop it) is composed onto the full screen canvas at its
+    (left, top) offset over the background color — like PIL — so the
+    decoded raster always has the logical-screen dimensions and the
+    cross-encoding checksum contract holds."""
+    import struct
+
+    import numpy as np
+
+    if payload[:6] not in (b"GIF87a", b"GIF89a"):
+        raise ValueError("not a GIF payload")
+    if len(payload) < 13:
+        raise ValueError("GIF header truncated")
+    screen_w, screen_h = struct.unpack_from("<HH", payload, 6)
+    packed = payload[10]
+    bg_index = payload[11]
+    pos = 13
+    gct = None
+    if packed & 0x80:
+        n = 2 << (packed & 7)
+        if pos + n * 3 > len(payload):
+            raise ValueError("GIF global color table truncated")
+        gct = np.frombuffer(payload, np.uint8, n * 3, pos).reshape(-1, 3)
+        pos += n * 3
+    while pos < len(payload):
+        block = payload[pos]
+        if block == 0x21:  # extension: label + data sub-blocks
+            pos += 2
+            while pos < len(payload) and payload[pos] != 0:
+                pos += 1 + payload[pos]
+            pos += 1
+        elif block == 0x2C:  # image descriptor
+            if pos + 10 > len(payload):
+                raise ValueError("GIF image descriptor truncated")
+            left, top, w, h = struct.unpack_from("<HHHH", payload, pos + 1)
+            ipacked = payload[pos + 9]
+            pos += 10
+            table = gct
+            if ipacked & 0x80:
+                n = 2 << (ipacked & 7)
+                if pos + n * 3 > len(payload):
+                    raise ValueError("GIF local color table truncated")
+                table = np.frombuffer(
+                    payload, np.uint8, n * 3, pos
+                ).reshape(-1, 3)
+                pos += n * 3
+            if table is None:
+                raise ValueError("GIF image has no color table")
+            if w <= 0 or h <= 0:
+                raise ValueError("GIF image has empty dimensions")
+            # bound BOTH declared geometries BEFORE any raster work: the
+            # LZW decode + palette expansion allocate O(w*h) (and the
+            # screen canvas O(screen area)) — a small payload declaring
+            # huge dimensions must dead-letter before those allocations,
+            # not OOM inside them
+            if w * h > 64_000_000 or screen_w * screen_h > 64_000_000:
+                raise ValueError(
+                    f"GIF dimensions exceed the 64M-pixel decode bound "
+                    f"(frame {w}x{h}, screen {screen_w}x{screen_h})"
+                )
+            # a frame extending beyond the logical screen in ANY
+            # direction is corrupt (PIL crops; we dead-letter — the
+            # checksum could never match the image's other encodings)
+            if left + w > screen_w or top + h > screen_h:
+                raise ValueError(
+                    "GIF frame overhangs the logical screen "
+                    f"({left},{top})+{w}x{h} vs {screen_w}x{screen_h}"
+                )
+            min_code = payload[pos]
+            pos += 1
+            data = bytearray()
+            while pos < len(payload) and payload[pos] != 0:
+                ln = payload[pos]
+                data += payload[pos + 1 : pos + 1 + ln]
+                pos += 1 + ln
+            idx = np.frombuffer(
+                _gif_lzw_decode(bytes(data), min_code, w * h), np.uint8
+            ).reshape(h, w)
+            if ipacked & 0x40:  # interlaced: reorder the four passes
+                ordered = np.empty_like(idx)
+                src = 0
+                for start, step in _GIF_INTERLACE_PASSES:
+                    n_rows = len(range(start, h, step))
+                    ordered[start:h:step] = idx[src : src + n_rows]
+                    src += n_rows
+                idx = ordered
+            if int(idx.max(initial=0)) >= len(table):
+                raise ValueError("GIF palette index out of range")
+            pixels = table[idx]
+            full_w, full_h = screen_w, screen_h
+            if (full_w, full_h) != (w, h) or (left, top) != (0, 0):
+                # compose the sub-rect onto the logical screen over the
+                # background color (PIL's frame-1 semantics)
+                # the background index is defined against the GLOBAL
+                # table (the logical screen's), not the frame's local one
+                bg = (
+                    gct[bg_index]
+                    if gct is not None and bg_index < len(gct)
+                    else np.zeros(3, np.uint8)
+                )
+                canvas = np.empty((full_h, full_w, 3), np.uint8)
+                canvas[:, :] = bg
+                canvas[top : top + h, left : left + w] = pixels
+                pixels = canvas
+            return np.ascontiguousarray(pixels), len(table)
+        elif block == 0x3B:  # trailer
+            break
+        else:
+            raise ValueError(f"unknown GIF block 0x{block:02x}")
+    raise ValueError("GIF contains no image data")
+
+
+def _featurize_gif(payload: bytes) -> tuple[int, list[float]]:
+    """GIF featurization over the NORMALIZED (palette-expanded) raster,
+    the same encoding-invariance contract as ``_featurize_bmp``: the
+    identical image stored as GIF, paletted BMP/PNG, or P6 PNM checksums
+    identically. Bit depth = index width of the color table the frame
+    ACTUALLY used (local table wins) — the logical-screen packed bits
+    describe only the global table and are meaningless when a local one
+    is present or the global flag is unset."""
+    import math
+    import zlib
+
+    import numpy as np
+
+    pixels, table_entries = _gif_decode(payload)
+    h, w = pixels.shape[0], pixels.shape[1]
+    depth = float(max(1, math.ceil(math.log2(table_entries))))
+    checksum = zlib.crc32(pixels.tobytes()) % 1_000_003
+    mean_px = float(pixels.astype(np.float64).mean()) if pixels.size else 0.0
+    return checksum, [float(w), float(h), depth, mean_px]
+
+
+def _png_decode(payload: bytes):
+    """Pure-stdlib PNG decode (8-bit, non-interlaced, color types
+    0/2/3/4/6): chunk walk → IHDR/PLTE/IDAT → ``zlib`` inflate →
+    per-scanline unfiltering (all five filter types per the spec, §9).
+    Returns ``(pixels, channels_out)`` with ``pixels`` an (h, w, c) uint8
+    array, palette already expanded to RGB. Interlaced (Adam7) and 16-bit
+    images raise — rare in training corpora and cheap to detect.
+
+    Sub/Up unfilter vectorized with numpy (cumsum per byte-offset class /
+    whole-row add); Average/Paeth are inherently sequential along the row
+    (each byte depends on the reconstructed left neighbor), so those rows
+    fall back to a per-byte loop — correctness-first; a production build
+    would swap in a native decoder, which changes only this function."""
+    import struct
+    import zlib
+
+    import numpy as np
+
+    if payload[:8] != _PNG_SIG:
+        raise ValueError("not a PNG payload (bad signature)")
+    ihdr = None
+    plte = None
+    idat: list[bytes] = []
+    pos = 8
+    while pos + 8 <= len(payload):
+        length, ctype = struct.unpack_from(">I4s", payload, pos)
+        data = payload[pos + 8 : pos + 8 + length]
+        if len(data) < length:
+            raise ValueError("PNG chunk truncated")
+        pos += 12 + length  # data + 4-byte CRC
+        if ctype == b"IHDR":
+            ihdr = data
+        elif ctype == b"PLTE":
+            plte = data
+        elif ctype == b"IDAT":
+            idat.append(data)
+        elif ctype == b"IEND":
+            break
+    if ihdr is None or len(ihdr) != 13 or not idat:
+        raise ValueError("PNG missing IHDR/IDAT chunks")
+    width, height, depth, color_type, comp, filt, interlace = struct.unpack(
+        ">IIBBBBB", ihdr
+    )
+    channels = _PNG_CHANNELS.get(color_type)
+    if channels is None or comp != 0 or filt != 0:
+        raise ValueError(f"malformed PNG (color_type={color_type})")
+    if depth != 8 or interlace != 0:
+        raise ValueError(
+            f"unsupported PNG variant (bit_depth={depth}, "
+            f"interlace={interlace}); 8-bit non-interlaced only"
+        )
+    stride = width * channels
+    raw = np.frombuffer(zlib.decompress(b"".join(idat)), dtype=np.uint8)
+    if raw.size != height * (1 + stride):
+        raise ValueError("PNG raster truncated")
+    raw = raw.reshape(height, 1 + stride)
+    recon = np.zeros((height, stride), dtype=np.int64)
+    prev = np.zeros(stride, dtype=np.int64)
+    bpp = channels  # bytes per pixel at depth 8
+    for y in range(height):
+        ftype = int(raw[y, 0])
+        line = raw[y, 1:].astype(np.int64)
+        if ftype == 0:  # None
+            row = line
+        elif ftype == 1:  # Sub: cumulative sum per byte-offset class
+            row = line.copy()
+            for r in range(bpp):
+                row[r::bpp] = np.cumsum(line[r::bpp]) & 0xFF
+        elif ftype == 2:  # Up
+            row = (line + prev) & 0xFF
+        elif ftype == 3:  # Average
+            row = line.copy()
+            for x in range(stride):
+                left = row[x - bpp] if x >= bpp else 0
+                row[x] = (row[x] + ((left + prev[x]) >> 1)) & 0xFF
+        elif ftype == 4:  # Paeth
+            row = line.copy()
+            for x in range(stride):
+                a = int(row[x - bpp]) if x >= bpp else 0
+                b = int(prev[x])
+                c = int(prev[x - bpp]) if x >= bpp else 0
+                p = a + b - c
+                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+                pred = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
+                row[x] = (row[x] + pred) & 0xFF
+        else:
+            raise ValueError(f"invalid PNG filter type {ftype}")
+        recon[y] = row
+        prev = row
+    pixels = recon.astype(np.uint8).reshape(height, width, channels)
+    if color_type == 3:  # palette -> RGB
+        if plte is None or len(plte) % 3:
+            raise ValueError("paletted PNG missing/malformed PLTE")
+        table = np.frombuffer(plte, dtype=np.uint8).reshape(-1, 3)
+        idx = pixels[:, :, 0]
+        if int(idx.max(initial=0)) >= table.shape[0]:
+            raise ValueError("PNG palette index out of range")
+        pixels = table[idx]
+        channels = 3
+    return pixels, channels
+
+
+def _featurize_png(payload: bytes) -> tuple[int, list[float]]:
+    """Real PNG featurization: [width, height, channels, mean sample] over
+    the decoded (palette-expanded) raster; checksum = crc32 of the raster —
+    two encodings of the same image (different filter choices, different
+    zlib levels) fingerprint identically, which is exactly what near-dup
+    detection over a scraped image corpus needs."""
+    import zlib
+
+    pixels, channels = _png_decode(payload)
+    checksum = zlib.crc32(pixels.tobytes()) % 1_000_003
+    h, w = pixels.shape[0], pixels.shape[1]
+    mean_px = float(pixels.astype("float64").mean()) if pixels.size else 0.0
+    return checksum, [float(w), float(h), float(channels), mean_px]
 
 
 def _parse_wav_raw(payload: bytes):
@@ -357,30 +703,46 @@ def _stdlib_featurize(media_type: str, payload: bytes) -> tuple[int, list[float]
       (``_g711_table``); feature = [duration_s, framerate, n_channels,
       mean |amplitude|], checksum = crc32 of the canonical linear
       samples (G.711 fingerprints its EXPANDED samples — the companded
-      bytes are a wire format).
-    - ``image/*``: binary PNM (P5/P6, 8-bit) through ``_featurize_pnm``;
-      feature = [width, height, channels, mean sample], checksum = crc32
-      of the raster.
+      bytes are a wire format); FLAC decodes natively (``operators/flac.py``, full RFC 9639:
+      fixed/LPC prediction, Rice partitions, stereo decorrelation, CRC +
+      MD5 verification) and fingerprints like a WAV of the same PCM.
+    - ``image/*``: BMP (BI_RGB 8/24/32bpp), binary PNM (P5/P6, 8-bit),
+      PNG (8-bit non-interlaced) and GIF (87a/89a, first frame); feature
+      = [width, height, channels or bit depth, mean sample], checksum =
+      crc32 of the normalized raster (the same image as paletted BMP,
+      PNG, GIF or P6 PNM fingerprints identically).
     - ``video/*``: nothing decodes.
     - anything else: opaque binary — crc32 checksum and compressibility
       features (zlib ratio), the standard corpus-QA signal.
 
     Every other audio or image payload, every video payload and every
     table-bound WAV tag (ADPCM/GSM) raises ``NotImplementedError`` →
-    ``decoder_gap``; a WAV or PNM that fails to parse raises
-    ``ValueError`` → ``corrupt``.
+    ``decoder_gap``; a payload of a supported format that fails to parse
+    raises ``ValueError`` → ``corrupt``.
     """
     import zlib
 
     family = media_type.partition("/")[0]
     if family == "audio":
+        if payload[:4] == b"fLaC":
+            from inbev_data_engineering_case_spark.operators.flac import (
+                featurize_flac,
+            )
+
+            return featurize_flac(payload)
         if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
             return _featurize_wav(payload)
         raise NotImplementedError(
-            "audio decoding covers RIFF/WAVE only (integer/float PCM and"
-            " G.711); every other audio format is a decoder gap"
+            "audio decoding covers RIFF/WAVE (integer/float PCM and G.711)"
+            " and FLAC only; every other audio format is a decoder gap"
         )
     if family == "image":
+        if payload[:2] == b"BM":
+            return _featurize_bmp(payload)
+        if payload[:8] == _PNG_SIG:
+            return _featurize_png(payload)
+        if payload[:4] == b"GIF8":
+            return _featurize_gif(payload)
         return _featurize_pnm(payload)
     if family == "video":
         raise NotImplementedError(
@@ -400,10 +762,10 @@ def decode_features(
 ) -> DataFrame:
     """Decode/feature-extract each asset via Arrow-batched ``mapInPandas``.
 
-    ``real_decoder=True`` routes to ``_stdlib_featurize``: binary PNM
-    images, RIFF/WAVE audio (integer/float PCM and G.711), and crc32/zlib
-    features for opaque binary. Every other image, audio or video format
-    dead-letters as ``decoder_gap``. The default fake featurizer stays
+    ``real_decoder=True`` routes to ``_stdlib_featurize``: BMP, binary
+    PNM, PNG and GIF images, WAV (integer/float PCM and G.711) and FLAC
+    audio, and crc32/zlib features for opaque binary. Every other image,
+    audio or video format dead-letters as ``decoder_gap``. The default fake featurizer stays
     the oracle-checked path — its output is reproducible in SQL, the
     crc32/PCM decoders' is not.
 
@@ -507,17 +869,293 @@ FRAME_SCHEMA = T.StructType(
 
 
 def _decode_image_pixels(payload: bytes):
-    """Decode a binary PNM (P5/P6) payload to an (h, w, c) uint8 pixel
-    array (already raster-ordered). Raises ``NotImplementedError`` for
-    every other image format — the ``decoder_gap`` dead-letter."""
+    """Decode a BMP, binary PNM, PNG or GIF payload to an (h, w, c) uint8
+    pixel array in RGB/grayscale order: BMP rows are flipped to top-down
+    and BGR(A) reordered to RGB; PNG alpha is dropped (resize targets don't
+    carry it through PNM); PNM is already raster-ordered; GIF yields its
+    first frame. Raises ``NotImplementedError`` for every other image
+    format — the ``decoder_gap`` dead-letter."""
+    import struct
+
     import numpy as np
 
-    width, height, channels, offset = _pnm_header(payload)
-    count = width * height * channels
-    if offset + count > len(payload):
-        raise ValueError("PNM raster truncated")
-    raster = np.frombuffer(payload, dtype=np.uint8, count=count, offset=offset)
-    return raster.reshape(height, width, channels)
+    if payload[:2] == b"BM":
+        if len(payload) < 54:
+            raise ValueError("BMP header truncated")
+        pix_off = struct.unpack_from("<I", payload, 10)[0]
+        hdr_size = struct.unpack_from("<I", payload, 14)[0]
+        if hdr_size < 40:
+            raise ValueError(f"unsupported BMP header size {hdr_size}")
+        width, height = struct.unpack_from("<ii", payload, 18)
+        bpp = struct.unpack_from("<H", payload, 28)[0]
+        compression = struct.unpack_from("<I", payload, 30)[0]
+        if compression != 0 or bpp not in (8, 24, 32):
+            raise ValueError(
+                f"unsupported BMP variant (compression={compression}, "
+                f"bpp={bpp})"
+            )
+        abs_h, bytes_pp = abs(height), bpp // 8
+        row_stride = ((width * bytes_pp + 3) // 4) * 4
+        if pix_off + row_stride * abs_h > len(payload):
+            raise ValueError("BMP raster truncated")
+        raster = np.frombuffer(
+            payload, dtype=np.uint8, count=row_stride * abs_h, offset=pix_off
+        )
+        pixels = raster.reshape(abs_h, row_stride)[:, : width * bytes_pp]
+        pixels = pixels.reshape(abs_h, width, bytes_pp)
+        if height > 0:  # bottom-up storage -> top-down pixels
+            pixels = pixels[::-1]
+        if bpp == 8:
+            # expand palette indices through the color table (BGRA
+            # entries, 4 bytes each; biClrUsed == 0 means a full 256) —
+            # mirroring _png_decode's PLTE expansion, so the same image
+            # stored as paletted BMP vs paletted PNG normalizes (and
+            # therefore fingerprints) identically
+            n_colors = struct.unpack_from("<I", payload, 46)[0] or 256
+            pal_off = 14 + hdr_size
+            if pal_off + n_colors * 4 > len(payload):
+                raise ValueError("BMP color table truncated")
+            table = np.frombuffer(
+                payload, dtype=np.uint8, count=n_colors * 4, offset=pal_off
+            ).reshape(-1, 4)[:, 2::-1]  # BGRA -> RGB
+            idx = pixels[:, :, 0]
+            if int(idx.max(initial=0)) >= n_colors:
+                raise ValueError("BMP palette index out of range")
+            pixels = table[idx]
+        elif bytes_pp >= 3:  # BGR(A) -> RGB, alpha dropped
+            pixels = pixels[:, :, 2::-1]
+        return np.ascontiguousarray(pixels)
+    if payload[:2] in (b"P5", b"P6"):
+        width, height, channels, offset = _pnm_header(payload)
+        count = width * height * channels
+        if offset + count > len(payload):
+            raise ValueError("PNM raster truncated")
+        raster = np.frombuffer(
+            payload, dtype=np.uint8, count=count, offset=offset
+        )
+        return raster.reshape(height, width, channels)
+    if payload[:8] == _PNG_SIG:
+        pixels, channels = _png_decode(payload)
+        if channels in (2, 4):  # GA/RGBA -> drop alpha
+            pixels = pixels[:, :, : channels - 1]
+        return np.ascontiguousarray(pixels)
+    if payload[:4] == b"GIF8":
+        return _gif_decode_pixels(payload)
+    raise NotImplementedError(
+        "image decoding covers BMP, binary PNM, PNG and GIF only; every"
+        " other image format is a decoder gap"
+    )
+
+
+RESIZE_SCHEMA = T.StructType(
+    list(ASSET_SCHEMA.fields)
+    + [
+        T.StructField("decode_ok", T.BooleanType(), False),
+        T.StructField("error", T.StringType(), True),
+    ]
+)
+
+
+def _encode_pnm(pixels) -> tuple[bytes, str]:
+    """Re-encode an (h, w, c) uint8 array as binary PNM — P5 for 1
+    channel, P6 for 3 — returning (payload, media_type). PNM is the
+    deterministic stdlib-writable target: no compressor choices, so two
+    identical pixel arrays always serialize identically."""
+    h, w, c = pixels.shape
+    magic, mtype = (
+        (b"P6", "image/x-portable-pixmap")
+        if c == 3
+        else (b"P5", "image/x-portable-graymap")
+    )
+    return magic + b"\n%d %d\n255\n" % (w, h) + pixels.tobytes(), mtype
+
+
+def _resize_image(payload: bytes, target_bytes: int) -> tuple[bytes, str]:
+    """Real image resize: decode (BMP/PNM/PNG/GIF) → nearest-neighbor
+    downsample so the raster fits ``target_bytes`` → re-encode as binary
+    PNM. Never upsamples; aspect ratio is preserved."""
+    import numpy as np
+
+    pixels = _decode_image_pixels(payload)
+    h, w, c = pixels.shape
+    scale = min(1.0, (target_bytes / max(pixels.size, 1)) ** 0.5)
+    new_h, new_w = max(1, int(h * scale)), max(1, int(w * scale))
+    ys = (np.arange(new_h) * h) // new_h
+    xs = (np.arange(new_w) * w) // new_w
+    return _encode_pnm(np.ascontiguousarray(pixels[ys][:, xs]))
+
+
+def _decimated_rate(framerate: int, n_frames: int, n_kept: int) -> int:
+    """New sample rate after keeping ``n_kept`` of ``n_frames`` frames,
+    ROUNDED so duration is preserved to the nearest representable
+    integer rate — ``framerate // k`` floors to 1 under aggressive
+    decimation (k > rate) and then reports arbitrarily wrong durations
+    (32 samples at 1 Hz = '32 s' for a 20 s clip)."""
+    if n_frames <= 0 or n_kept <= 0:
+        return max(1, framerate)
+    return max(1, (n_kept * framerate + n_frames // 2) // n_frames)
+
+
+def _assemble_wav(
+    tag: int, nch: int, rate: int, bits: int, frames: bytes
+) -> bytes:
+    """Canonical-layout RIFF/WAVE assembly (fmt + data)."""
+    import struct
+
+    block = max(1, nch * (bits // 8))
+    fmt = struct.pack("<HHIIHH", tag, nch, rate, rate * block, block, bits)
+    body = b"WAVE"
+    body += b"fmt " + struct.pack("<I", len(fmt)) + fmt
+    body += b"data" + struct.pack("<I", len(frames)) + frames
+    return b"RIFF" + struct.pack("<I", len(body)) + body
+
+
+def _resize_wav(payload: bytes, target_bytes: int) -> bytes:
+    """Real audio downsample for every WAV flavor: decimate frames by
+    the smallest integer factor that fits ``target_bytes`` (of the
+    OUTPUT frames), rate re-derived from the kept-frame count so
+    duration is preserved to integer-rate rounding
+    (``_decimated_rate``). Integer and float PCM keep their format tag
+    and bit depth; G.711 expands to plain PCM16 — re-companding the
+    decimated signal would stack a second lossy pass. Table-bound tags
+    raise ``NotImplementedError`` → honest dead-letter."""
+    tag, nch, rate, bits, data = _parse_wav_raw(payload)
+    # _wav_linear validates EVERY flavor up front (bit depths, bound
+    # tags → NotImplementedError, non-finite floats): without it a
+    # 12-bit PCM or 16-bit float would resize 'successfully' into a
+    # file the pipeline's own decoder rejects — worse, 12-bit would
+    # decimate mid-sample
+    _samples, canon = _wav_linear(tag, bits, data)
+    if tag in (6, 7):
+        data, tag, bits = canon, 1, 16  # expand: PCM16 out
+    frame_size = max(1, nch * max(1, bits // 8))
+    if len(data) % frame_size:
+        raise ValueError("wav: data chunk truncated mid-frame")
+    n_frames = len(data) // frame_size
+    k = max(1, -(-len(data) // max(target_bytes, frame_size)))
+    kept = b"".join(
+        data[i : i + frame_size]
+        for i in range(0, len(data), frame_size * k)
+    )
+    return _assemble_wav(
+        tag, nch,
+        _decimated_rate(rate, n_frames, len(kept) // frame_size),
+        bits, kept,
+    )
+
+
+def _resize_flac(payload: bytes, target_bytes: int) -> bytes:
+    """The ``_resize_wav`` rule for FLAC: decimate PCM frames by the
+    smallest integer factor that fits the DECODED frames under the
+    byte budget (compressed output typically lands below it; for loud
+    high-bit-depth audio the encoder's verbatim fallback adds
+    container overhead ABOVE the PCM budget — the budget sizes the
+    decimation, it is not a hard output ceiling), re-derive the sample
+    rate from the kept-frame count so duration is preserved, re-encode
+    FLAC (fixed order 1 — the re-encode is real, not a container
+    rewrite)."""
+    from inbev_data_engineering_case_spark.operators.flac import (
+        flac_decode,
+        flac_encode,
+    )
+
+    rate, nch, bps, samples = flac_decode(payload)
+    frame_size = nch * ((bps + 7) // 8)
+    n_frames = samples.shape[0]
+    k = max(1, -(-n_frames * frame_size // max(1, target_bytes)))
+    kept = samples[::k]
+    return flac_encode(
+        kept,
+        _decimated_rate(rate, n_frames, kept.shape[0]),
+        bps=bps,
+        block_size=max(16, min(4096, kept.shape[0] or 16)),
+        subframe="fixed",
+        fixed_order=1,
+    )
+
+
+def resize_assets(
+    assets: DataFrame,
+    target_bytes: int = 64,
+    real_decoder: bool = False,
+    strict: bool = False,
+) -> DataFrame:
+    """Resize each asset payload (1→1 binary transform, asset schema plus
+    the ``decode_ok``/``error`` dead-letter columns out). The real branch
+    decodes → resamples → re-encodes with the stdlib decoders: images
+    (BMP/PNM/PNG/GIF) are nearest-neighbor downsampled and re-encoded as
+    binary PNM (media_type updated to match), WAV and FLAC audio are
+    frame-decimated with duration preserved (FLAC re-encodes through
+    the native encoder). Opaque binary — and everything under the
+    default stub — truncates / zero-pads to ``target_bytes``:
+    deterministic, and it exercises the exact production plumbing either
+    way (binary in, binary out, metadata recomputed from the new payload).
+
+    A failed decode dead-letters the row — ORIGINAL payload and metadata
+    kept (so a later pass with a real codec can retry it), ``decode_ok``
+    false, message in ``error`` — unless ``strict=True``, which raises."""
+
+    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for batch in batches:
+            out_types, out_payloads, metas, oks, errors = [], [], [], [], []
+            for media_type, payload, meta in zip(
+                batch["media_type"], batch["payload"], batch["meta"]
+            ):
+                b = bytes(payload) if payload is not None else b""
+                mtype = media_type
+                kind = media_type.partition("/")[0]
+                try:
+                    if real_decoder and kind == "image":
+                        resized, mtype = _resize_image(b, target_bytes)
+                    elif real_decoder and kind == "audio":
+                        # magic dispatch, matching decode_features: a
+                        # mislabeled WAV/FLAC still resizes for real;
+                        # an unrecognized audio container dead-letters
+                        # honestly instead of being silently truncated
+                        # to garbage with decode_ok=true
+                        if b[:4] == b"fLaC":
+                            resized = _resize_flac(b, target_bytes)
+                            mtype = "audio/flac"
+                        elif b[:4] == b"RIFF" and b[8:12] == b"WAVE":
+                            resized = _resize_wav(b, target_bytes)
+                            mtype = "audio/wav"
+                        else:
+                            raise NotImplementedError(
+                                "audio resizing covers WAV and FLAC only; "
+                                "every other audio format is a decoder gap"
+                            )
+                    else:
+                        resized = b[:target_bytes].ljust(target_bytes, b"\0")
+                except Exception as e:  # noqa: BLE001 — dead-letter path
+                    if strict:
+                        raise
+                    out_types.append(media_type)
+                    out_payloads.append(b)
+                    metas.append(
+                        {"n_bytes": len(b), "source": meta["source"]}
+                    )
+                    oks.append(False)
+                    errors.append(f"{type(e).__name__}: {e}")
+                else:
+                    out_types.append(mtype)
+                    out_payloads.append(resized)
+                    metas.append(
+                        {"n_bytes": len(resized), "source": meta["source"]}
+                    )
+                    oks.append(True)
+                    errors.append(None)
+            yield pd.DataFrame(
+                {
+                    "asset_id": batch["asset_id"],
+                    "media_type": out_types,
+                    "payload": out_payloads,
+                    "meta": metas,
+                    "decode_ok": oks,
+                    "error": errors,
+                }
+            )
+
+    return assets.mapInPandas(resize, schema=RESIZE_SCHEMA)
 
 
 def sample_frames(
@@ -567,8 +1205,8 @@ def target_rows_per_partition(
 
 
 # ---------------------------------------------------------------------------
-# Perceptual image near-dup: dHash (difference hash) over the PNM
-# decoder, bridging the multimodal family to the dedup machinery — exact
+# Perceptual image near-dup: dHash (difference hash) over the native
+# image decoders, bridging the multimodal family to the dedup machinery — exact
 # byte-level dedup misses re-encoded/resized copies of the same picture;
 # a 64-bit gradient-sign fingerprint catches them (the standard cheap
 # perceptual hash; pHash/DCT is the heavier sibling, same plumbing).
@@ -612,7 +1250,8 @@ def image_dhash(assets: DataFrame, strict: bool = False) -> DataFrame:
     """Perceptual hash per image asset via Arrow-batched ``mapInPandas``
     (same batch shape and dead-letter contract as ``decode_features``):
     ``(asset_id, media_type, dhash, decode_ok, error)``. Every payload
-    but binary PNM dead-letters (``_decode_image_pixels`` raises)."""
+    but BMP, binary PNM, PNG and GIF dead-letters (``_decode_image_pixels``
+    raises)."""
 
     def hash_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:

@@ -114,8 +114,9 @@ def star_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 # file-extension -> media_type for the binary-asset landing scan. This only
 # routes the metadata: landing decodes nothing. At decode time content magic
 # wins (operators/multimodal.py dispatches on payload bytes), and only
-# binary PNM images and RIFF/WAVE audio decode; every other image, audio or
-# video format below lands as-is and dead-letters as ``decoder_gap``.
+# BMP/PNM/PNG/GIF images and WAV/FLAC audio decode; every other image,
+# audio or video format below lands as-is and dead-letters as
+# ``decoder_gap``.
 _EXT_MEDIA_TYPES = {
     "bmp": "image/bmp",
     "png": "image/png",

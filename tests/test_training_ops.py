@@ -15,6 +15,7 @@ from inbev_data_engineering_case_spark.operators.dedup import (
 from inbev_data_engineering_case_spark.operators.multimodal import (
     assets_from_documents,
     decode_features,
+    resize_assets,
     sample_frames,
     target_rows_per_partition,
 )
@@ -172,6 +173,26 @@ def test_multimodal_plumbing(spark, docs):
 def test_target_rows_per_partition():
     assert target_rows_per_partition(2 * 1024 * 1024) == 128
     assert target_rows_per_partition(0) >= 1
+
+
+def test_resize_assets_pads_and_truncates(spark, docs):
+    documents = docs.withColumn("source", F.lit("unit")).withColumn(
+        "lang", F.lit("en")
+    ).withColumn("n_chars", F.length("text"))
+    assets = assets_from_documents(documents)
+    out = {r["asset_id"]: r for r in resize_assets(assets, target_bytes=16).collect()}
+    for r in out.values():
+        assert len(bytes(r["payload"])) == 16
+        assert r["meta"]["n_bytes"] == 16
+    long_text = docs.filter(F.col("doc_id") == 1).first()["text"]
+    assert bytes(out[1]["payload"]) == long_text.encode()[:16]  # truncated
+    # the real branch treats non-media payloads the same way (no decoder
+    # to apply): truncate/pad, metadata recomputed
+    real = {
+        r["asset_id"]: r
+        for r in resize_assets(assets, target_bytes=16, real_decoder=True).collect()
+    }
+    assert bytes(real[1]["payload"]) == long_text.encode()[:16]
 
 
 def test_sample_frames_is_one_to_many(spark, docs):
@@ -393,17 +414,30 @@ def test_stdlib_real_decoder_wav_end_to_end(spark):
         _stdlib_featurize("video/mp4", b"\x00\x00\x00 ftypisom")
 
 
-def _make_pnm(pixels) -> bytes:
-    """Binary PNM from an (h, w, c) uint8 array: P6 for 3 channels, P5
-    for 1."""
-    h, w, c = pixels.shape
-    magic = b"P6" if c == 3 else b"P5"
-    return magic + b"\n%d %d\n255\n" % (w, h) + pixels.tobytes()
+def _make_bmp(
+    pixels_bgr: list[list[tuple[int, int, int]]], top_down: bool = False
+) -> bytes:
+    """Assemble a 24bpp BI_RGB BMP from a row-major pixel grid (stored
+    bottom-up unless top_down, matching the format)."""
+    import struct
+
+    height, width = len(pixels_bgr), len(pixels_bgr[0])
+    row_stride = ((width * 3 + 3) // 4) * 4
+    raster = b""
+    rows = pixels_bgr if top_down else list(reversed(pixels_bgr))
+    for row in rows:
+        raw = b"".join(bytes(px) for px in row)
+        raster += raw.ljust(row_stride, b"\xAA")  # junk padding on purpose
+    hdr_h = -height if top_down else height
+    info = struct.pack("<IiiHHIIiiII", 40, width, hdr_h, 1, 24, 0,
+                       len(raster), 2835, 2835, 0, 0)
+    file_hdr = struct.pack("<2sIHHI", b"BM", 14 + 40 + len(raster), 0, 0, 54)
+    return file_hdr + info + raster
 
 
 def test_stdlib_image_decoders():
-    """Binary PNM decodes natively: dimensions, mean sample, and a crc32
-    of the raster — no PIL involved."""
+    """BMP and binary-PNM decode natively: dimensions, mean pixel, and a
+    padding-insensitive crc32 — no PIL involved."""
     import zlib
 
     import pytest as _pytest
@@ -411,6 +445,20 @@ def test_stdlib_image_decoders():
     from inbev_data_engineering_case_spark.operators.multimodal import (
         _stdlib_featurize,
     )
+
+    # 2x3 BMP, known bytes: mean over the UNPADDED raster only
+    grid = [
+        [(0, 0, 0), (255, 255, 255), (10, 20, 30)],
+        [(100, 110, 120), (1, 2, 3), (200, 210, 220)],
+    ]
+    flat = [b for row in grid for px in row for b in px]
+    want_mean = sum(flat) / len(flat)
+    checksum, feat = _stdlib_featurize("image/bmp", _make_bmp(grid))
+    assert feat == [3.0, 2.0, 24.0, want_mean]
+
+    # top-down variant: same pixels, same mean, same dimensions
+    _, feat_td = _stdlib_featurize("image/bmp", _make_bmp(grid, top_down=True))
+    assert feat_td[:3] == [3.0, 2.0, 24.0] and feat_td[3] == want_mean
 
     # P6 PPM with a header comment; checksum is crc32 of the raster
     raster = bytes(range(2 * 2 * 3))
@@ -426,27 +474,265 @@ def test_stdlib_image_decoders():
 
     # malformed payloads fail loud, not wrong
     with _pytest.raises(ValueError, match="truncated"):
-        _stdlib_featurize("image/x-portable-pixmap", ppm[:-4])
+        _stdlib_featurize("image/bmp", _make_bmp(grid)[:-4])
     with _pytest.raises(ValueError, match="maxval"):
         _stdlib_featurize("image/x-portable-pixmap", b"P6 1 1 65535 \x00\x00")
 
 
 def test_stdlib_image_decode_through_spark(spark):
-    """The PNM branch through the real mapInPandas path (not just the inner
+    """The BMP branch through the real mapInPandas path (not just the inner
     function): q_multimodal_features' plumbing with real_decoder=True."""
     from inbev_data_engineering_case_spark.operators.multimodal import (
         decode_features,
     )
 
-    pgm = b"P5\n2 1\n255\n" + bytes([5, 10])
+    bmp = _make_bmp([[(5, 5, 5), (10, 10, 10)]])
     assets = spark.createDataFrame(
-        [(1, "image/x-portable-graymap", pgm,
-          {"n_bytes": len(pgm), "source": "t"})],
+        [(1, "image/bmp", bmp, {"n_bytes": len(bmp), "source": "t"})],
         "asset_id long, media_type string, payload binary, "
         "meta struct<n_bytes:long, source:string>",
     )
     row = decode_features(assets, real_decoder=True).collect()[0]
-    assert row["feature"] == [2.0, 1.0, 1.0, 7.5]
+    assert row["feature"] == [2.0, 1.0, 24.0, 7.5]
+
+
+def _make_png(rows, color_type, filters, palette=None) -> bytes:
+    """Assemble a real PNG: per-row forward filtering (the encoder side of
+    the spec's five filters, so the decoder's unfilter paths all get
+    exercised), zlib-compressed scanlines, CRC'd chunks."""
+    import struct
+    import zlib
+
+    channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}[color_type]
+
+    def px_bytes(px):
+        return bytes([px]) if isinstance(px, int) else bytes(px)
+
+    raw_rows = [b"".join(px_bytes(px) for px in row) for row in rows]
+    bpp, stride = channels, len(raw_rows[0])
+    prev = bytes(stride)
+    scan = b""
+    for raw, f in zip(raw_rows, filters):
+        if f == 0:
+            filt = raw
+        elif f == 1:  # Sub
+            filt = bytes(
+                (raw[x] - (raw[x - bpp] if x >= bpp else 0)) & 0xFF
+                for x in range(stride)
+            )
+        elif f == 2:  # Up
+            filt = bytes((raw[x] - prev[x]) & 0xFF for x in range(stride))
+        elif f == 3:  # Average
+            filt = bytes(
+                (raw[x] - (((raw[x - bpp] if x >= bpp else 0) + prev[x]) >> 1))
+                & 0xFF
+                for x in range(stride)
+            )
+        else:  # Paeth
+            filt = b""
+            for x in range(stride):
+                a = raw[x - bpp] if x >= bpp else 0
+                b_ = prev[x]
+                c = prev[x - bpp] if x >= bpp else 0
+                p = a + b_ - c
+                pa, pb, pc = abs(p - a), abs(p - b_), abs(p - c)
+                pred = a if pa <= pb and pa <= pc else (b_ if pb <= pc else c)
+                filt += bytes([(raw[x] - pred) & 0xFF])
+        scan += bytes([f]) + filt
+        prev = raw
+
+    def chunk(ctype: bytes, data: bytes) -> bytes:
+        return (
+            struct.pack(">I", len(data))
+            + ctype
+            + data
+            + struct.pack(">I", zlib.crc32(ctype + data))
+        )
+
+    ihdr = struct.pack(">IIBBBBB", stride // channels, len(rows), 8,
+                       color_type, 0, 0, 0)
+    body = chunk(b"IHDR", ihdr)
+    if palette is not None:
+        body += chunk(b"PLTE", bytes(v for rgb in palette for v in rgb))
+    body += chunk(b"IDAT", zlib.compress(scan)) + chunk(b"IEND", b"")
+    return b"\x89PNG\r\n\x1a\n" + body
+
+
+def test_stdlib_png_decoder():
+    """PNG decodes for real — zlib inflate + all five unfilter paths; the
+    fingerprint is over decoded pixels, so two encodings of the same image
+    (different filter choices) hash identically."""
+    import zlib
+
+    import pytest as _pytest
+
+    from inbev_data_engineering_case_spark.operators.multimodal import (
+        _stdlib_featurize,
+    )
+
+    # 3x5 RGB gradient: filters None/Sub/Up on one encoding, Avg/Paeth/Sub
+    # on another — identical decoded raster, identical checksum
+    rows = [
+        [((r * 40 + c * 31) % 256, (r * 7 + c * 11) % 256, (r + c * 90) % 256)
+         for c in range(5)]
+        for r in range(3)
+    ]
+    flat = [v for row in rows for px in row for v in px]
+    want_mean = sum(flat) / len(flat)
+    want_crc = zlib.crc32(bytes(flat)) % 1_000_003
+    enc_a = _make_png(rows, color_type=2, filters=[0, 1, 2])
+    enc_b = _make_png(rows, color_type=2, filters=[3, 4, 1])
+    for enc in (enc_a, enc_b):
+        checksum, feat = _stdlib_featurize("image/png", enc)
+        assert feat == [5.0, 3.0, 3.0, want_mean]
+        assert checksum == want_crc
+    assert enc_a != enc_b  # genuinely different byte streams
+
+    # grayscale with Paeth + RGBA with Average: channel counts flow through
+    gray = [[10, 200, 30], [250, 5, 128]]
+    _, feat = _stdlib_featurize("image/png", _make_png(gray, 0, [4, 4]))
+    assert feat == [3.0, 2.0, 1.0, (10 + 200 + 30 + 250 + 5 + 128) / 6]
+    rgba = [[(1, 2, 3, 255), (9, 8, 7, 0)]]
+    _, feat = _stdlib_featurize("image/png", _make_png(rgba, 6, [3]))
+    assert feat[:3] == [2.0, 1.0, 4.0]
+
+    # palette expands through PLTE before the stats
+    pal = [(255, 0, 0), (0, 255, 0)]
+    png_p = _make_png([[0, 1], [1, 0]], 3, [0, 2], palette=pal)
+    checksum, feat = _stdlib_featurize("image/png", png_p)
+    assert feat == [2.0, 2.0, 3.0, 510 / 6.0]
+    expanded = bytes([255, 0, 0, 0, 255, 0, 0, 255, 0, 255, 0, 0])
+    assert checksum == zlib.crc32(expanded) % 1_000_003
+
+    # malformed/unsupported fail loud (cut reaches into the IDAT data;
+    # a clipped IEND alone is tolerated, as it should be)
+    with _pytest.raises(ValueError, match="truncated"):
+        _stdlib_featurize("image/png", enc_a[:-17])
+    import struct as _struct
+
+    bad_depth = bytearray(_make_png(gray, 0, [0, 0]))
+    bad_depth[24] = 16  # IHDR bit_depth byte
+    bad_depth[29:33] = _struct.pack(
+        ">I", zlib.crc32(bytes(bad_depth[12:29]))
+    )
+    with _pytest.raises(ValueError, match="bit_depth"):
+        _stdlib_featurize("image/png", bytes(bad_depth))
+    # JPEG has no decoder: a capability gap, not a corrupt stream
+    with _pytest.raises(NotImplementedError):
+        _stdlib_featurize("image/jpeg", b"\xff\xd8\xff\xe0 not decodable")
+
+
+def test_png_roundtrip_property():
+    """Encoder(test)→decoder(engine) round-trip under hypothesis: any pixel
+    grid, any per-row filter choice, any supported channel count must
+    decode back to exactly the input pixels — the unfilter math (incl. the
+    sequential Average/Paeth paths) is bit-exact, not approximately right."""
+    import numpy as np
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from inbev_data_engineering_case_spark.operators.multimodal import (
+        _png_decode,
+    )
+
+    @settings(max_examples=30, deadline=None)
+    @given(data=st.data())
+    def check(data):
+        h = data.draw(st.integers(1, 5))
+        w = data.draw(st.integers(1, 5))
+        color_type, ch = data.draw(
+            st.sampled_from([(0, 1), (2, 3), (6, 4)])
+        )
+        px = data.draw(
+            st.lists(
+                st.lists(
+                    st.tuples(*([st.integers(0, 255)] * ch)),
+                    min_size=w, max_size=w,
+                ),
+                min_size=h, max_size=h,
+            )
+        )
+        rows = [[p[0] for p in row] for row in px] if ch == 1 else px
+        filters = data.draw(
+            st.lists(st.integers(0, 4), min_size=h, max_size=h)
+        )
+        decoded, channels = _png_decode(_make_png(rows, color_type, filters))
+        assert channels == ch
+        want = np.array(
+            [[list(p) for p in row] for row in px], dtype=np.uint8
+        )
+        assert np.array_equal(decoded, want)
+
+    check()
+
+
+def test_resize_assets_real_decoders(spark):
+    """The real resize branch decodes → resamples → re-encodes: images
+    come back as smaller PNM rasters (media_type updated), WAV comes back
+    frame-decimated with duration preserved."""
+    import io
+    import wave
+
+    import numpy as np
+
+    from inbev_data_engineering_case_spark.operators.multimodal import (
+        resize_assets,
+    )
+
+    bmp = _make_bmp([[(90, 90, 90)] * 4 for _ in range(4)])  # 4x4 constant
+    png = _make_png([[(10, 20, 30)] * 6 for _ in range(6)], 2, [0] * 6)
+    pcm = (np.sin(np.arange(4000) / 20) * 9000).astype("<i2")
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as w:
+        w.setnchannels(1)
+        w.setsampwidth(2)
+        w.setframerate(8000)
+        w.writeframes(pcm.tobytes())
+    wav = buf.getvalue()
+
+    assets = spark.createDataFrame(
+        [
+            (1, "image/bmp", bmp, {"n_bytes": len(bmp), "source": "t"}),
+            (2, "image/png", png, {"n_bytes": len(png), "source": "t"}),
+            (3, "audio/wav", wav, {"n_bytes": len(wav), "source": "t"}),
+        ],
+        "asset_id long, media_type string, payload binary, "
+        "meta struct<n_bytes:long, source:string>",
+    )
+    out = {
+        r["asset_id"]: r
+        for r in resize_assets(
+            assets, target_bytes=2000, real_decoder=True
+        ).collect()
+    }
+
+    # 4x4x3 = 48 bytes already fits 2000 -> no upsampling, same pixels
+    p1 = bytes(out[1]["payload"])
+    assert out[1]["media_type"] == "image/x-portable-pixmap"
+    assert p1.startswith(b"P6\n4 4\n255\n")
+    assert set(p1.split(b"255\n", 1)[1]) == {90}  # BGR->RGB of a constant
+
+    # 6x6 PNG -> PNM, still 6x6 (108 bytes fit), RGB order preserved
+    p2 = bytes(out[2]["payload"])
+    assert p2.startswith(b"P6\n6 6\n255\n")
+    assert p2.split(b"255\n", 1)[1][:3] == bytes([10, 20, 30])
+
+    # image genuinely shrinks when over budget: 6x6 -> 2x2 under 12 bytes
+    small = {
+        r["asset_id"]: r
+        for r in resize_assets(
+            assets.filter("asset_id = 2"), target_bytes=12, real_decoder=True
+        ).collect()
+    }
+    assert bytes(small[2]["payload"]).startswith(b"P6\n2 2\n255\n")
+
+    # WAV: 8000 bytes of PCM -> k=4 decimation, frame rate 8000->2000,
+    # duration 0.5 s preserved
+    with wave.open(io.BytesIO(bytes(out[3]["payload"]))) as r:
+        assert r.getframerate() == 2000
+        assert r.getnframes() == 1000
+        kept = np.frombuffer(r.readframes(1000), dtype="<i2")
+    assert np.array_equal(kept, pcm[::4])
 
 
 def test_read_binary_assets_lands_real_media(spark, tmp_path):
@@ -474,10 +760,10 @@ def test_read_binary_assets_lands_real_media(spark, tmp_path):
         w.setframerate(8000)
         w.writeframes(b"\x10\x00" * 800)
     wav = buf.getvalue()
-    flac = b"fLaC" + bytes(60)
+    y4m = b"YUV4MPEG2 W2 H2 F25:1 C420\nFRAME\n" + bytes(6)
     (tmp_path / "a.ppm").write_bytes(ppm)
     (tmp_path / "b.wav").write_bytes(wav)
-    (tmp_path / "c.flac").write_bytes(flac)
+    (tmp_path / "c.y4m").write_bytes(y4m)
     (tmp_path / "huge.bin").write_bytes(b"\0" * 4096)
 
     assets = read_binary_assets(spark, str(tmp_path), max_bytes=2048)
@@ -486,7 +772,7 @@ def test_read_binary_assets_lands_real_media(spark, tmp_path):
     assert assets.schema.simpleString() == ASSET_SCHEMA.simpleString()
     rows = {r["media_type"]: r for r in assets.collect()}
     # huge.bin pruned; the extension routes the media type
-    assert set(rows) == {"image/x-portable-pixmap", "audio/wav", "audio/flac"}
+    assert set(rows) == {"image/x-portable-pixmap", "audio/wav", "video/x-y4m"}
     assert bytes(rows["image/x-portable-pixmap"]["payload"]) == ppm
     assert rows["audio/wav"]["meta"]["n_bytes"] == len(wav)
     assert rows["image/x-portable-pixmap"]["meta"]["source"].endswith("a.ppm")
@@ -497,9 +783,9 @@ def test_read_binary_assets_lands_real_media(spark, tmp_path):
     }
     assert feats["image/x-portable-pixmap"]["feature"] == [2.0, 1.0, 3.0, 9.0]
     assert feats["audio/wav"]["feature"] == [0.1, 8000.0, 1.0, 16.0]
-    # FLAC lands but does not decode: a decoder gap, not corrupt
-    assert not feats["audio/flac"]["decode_ok"]
-    assert feats["audio/flac"]["reason"] == "decoder_gap"
+    # Y4M lands but does not decode: a decoder gap, not corrupt
+    assert not feats["video/x-y4m"]["decode_ok"]
+    assert feats["video/x-y4m"]["reason"] == "decoder_gap"
 
     # asset ids are a pure function of the path: stable across re-listing
     ids_a = sorted(r["asset_id"] for r in assets.collect())
@@ -508,294 +794,6 @@ def test_read_binary_assets_lands_real_media(spark, tmp_path):
         for r in read_binary_assets(spark, str(tmp_path), max_bytes=2048).collect()
     )
     assert ids_a == ids_b
-
-
-# ---------------------------------------------------------------------------
-# RIFF/WAVE: integer/float PCM and G.711 A-law / µ-law (companding is
-# formula-defined — no tables)
-# ---------------------------------------------------------------------------
-
-
-def _pcm(n=2000, seed=7, scale=300):
-    import numpy as np
-
-    rng = np.random.default_rng(seed)
-    p = np.cumsum(rng.integers(-scale, scale, size=n)).astype(np.int64)
-    return np.clip(p, -32768, 32767).astype(np.int32)
-
-
-def _raw_wav(fmt_tag, data, nch=1, rate=8000, bits=8):
-    import struct
-
-    block = max(1, nch * (bits // 8))
-    fmt = struct.pack(
-        "<HHIIHH", fmt_tag, nch, rate, rate * block, block, bits
-    )
-    out = b"WAVE"
-    out += b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    out += b"data" + struct.pack("<I", len(data)) + data
-    return b"RIFF" + struct.pack("<I", len(out)) + out
-
-
-def test_wav_truncation_is_corrupt_not_wrong_duration(spark):
-    """A WAV whose data chunk is shorter than its header promises, and a
-    RIFF/WAVE container with no fmt/data chunks, are both corrupt — never
-    a decoded row with a wrong duration."""
-    import io
-    import wave
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        decode_features,
-    )
-
-    pcm = _pcm(2000)
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(8000)
-        w.writeframes(pcm.astype("<i2").tobytes())
-    wav = buf.getvalue()
-    truncated = wav[: len(wav) - 1500]  # header still promises 2000 frames
-    bad_wav = b"RIFF" + b"\x10\x00\x00\x00" + b"WAVEjunkjunk"
-    assets = spark.createDataFrame(
-        [
-            (1, "audio/wav", truncated,
-             {"n_bytes": len(truncated), "source": "t"}),
-            (2, "audio/wav", bad_wav,
-             {"n_bytes": len(bad_wav), "source": "t"}),
-        ],
-        "asset_id long, media_type string, payload binary, "
-        "meta struct<n_bytes:long, source:string>",
-    )
-    rows = {
-        r["asset_id"]: r
-        for r in decode_features(assets, real_decoder=True).collect()
-    }
-    for i in (1, 2):
-        assert not rows[i]["decode_ok"] and rows[i]["reason"] == "corrupt"
-
-
-def test_g711_tables_pin_standard_endpoints():
-    import numpy as np
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _g711_table,
-    )
-
-    ulaw, alaw = _g711_table("ulaw"), _g711_table("alaw")
-    # the canonical G.711 identities every published codec agrees on
-    assert ulaw[0xFF] == 0 and ulaw[0x7F] == 0      # ±zero codes
-    assert ulaw[0x80] == 32124 and ulaw[0x00] == -32124  # max magnitude
-    assert alaw[0xD5] == 8 and alaw[0x55] == -8     # smallest magnitudes
-    assert alaw[0xAA] == 32256 and alaw[0x2A] == -32256
-    # each law is a bijection onto symmetric magnitudes, monotone per
-    # segment: positive µ-law codes 0x80..0xFF decode strictly
-    # decreasing in magnitude
-    pos = ulaw[0x80:0x100].astype(np.int64)
-    assert (np.diff(pos) < 0).all() and (pos >= 0).all()
-    neg = ulaw[0x00:0x80].astype(np.int64)
-    assert (np.diff(neg) > 0).all() and (neg <= 0).all()
-    # A-law: sign bit (post-0x55-inversion invariant) splits the code
-    # space into exact magnitude mirrors
-    assert (alaw[0x80:0x100].astype(np.int64)
-            == -alaw[0x00:0x80].astype(np.int64)).all()
-
-
-def test_g711_compander_round_trip_tolerance():
-    """Encode via nearest-code search against OUR decode table, decode
-    back: the error must stay within each segment's half-step — the
-    defining property of the companding curve."""
-    import numpy as np
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _g711_table,
-    )
-
-    rng = np.random.default_rng(11)
-    x = rng.integers(-32124, 32124, size=4000).astype(np.int64)
-    for law in ("ulaw", "alaw"):
-        table = _g711_table(law).astype(np.int64)
-        order = np.argsort(table)
-        sorted_vals = table[order]
-        idx = np.clip(
-            np.searchsorted(sorted_vals, x), 1, len(sorted_vals) - 1
-        )
-        pick = np.where(
-            np.abs(sorted_vals[idx] - x) < np.abs(sorted_vals[idx - 1] - x),
-            idx, idx - 1,
-        )
-        decoded = sorted_vals[pick]
-        err = np.abs(decoded - x)
-        # both laws' top segment steps by 8<<7 / 16<<6 = 1024 between
-        # adjacent codes -> nearest-code error is at most the 512
-        # half-step (hit exactly at boundary ties)
-        assert err.max() <= 512, law
-
-
-def test_g711_wav_decode_features(spark):
-    """G.711 WAVs decode through the expansion tables (the magic wins over
-    a wrong label); ADPCM and mp3 are honest decoder gaps."""
-    import zlib
-
-    import numpy as np
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _g711_table,
-        decode_features,
-    )
-
-    # a µ-law byte stream whose expansion we know exactly
-    codes = bytes([0xFF, 0x80, 0x00, 0xD5, 0x40, 0xC0] * 400)
-    ulaw_wav = _raw_wav(7, codes)
-    alaw_wav = _raw_wav(6, codes)
-    adpcm_wav = _raw_wav(2, b"\x00" * 256, bits=4)
-    mp3ish = b"ID3\x04\x00\x00\x00\x00\x00\x00" + b"\xff\xfb" * 40
-    assets = spark.createDataFrame(
-        [
-            (1, "audio/wav", ulaw_wav,
-             {"n_bytes": len(ulaw_wav), "source": "t"}),
-            (2, "audio/basic", alaw_wav,  # mislabeled: magic wins
-             {"n_bytes": len(alaw_wav), "source": "t"}),
-            (3, "audio/wav", adpcm_wav,
-             {"n_bytes": len(adpcm_wav), "source": "t"}),
-            (4, "audio/mpeg", mp3ish,
-             {"n_bytes": len(mp3ish), "source": "t"}),
-        ],
-        "asset_id long, media_type string, payload binary, "
-        "meta struct<n_bytes:long, source:string>",
-    )
-    out = {
-        r["asset_id"]: r
-        for r in decode_features(assets, real_decoder=True).collect()
-    }
-    table = _g711_table("ulaw")
-    want = table[np.frombuffer(codes, dtype=np.uint8)]
-    assert out[1]["decode_ok"]
-    assert out[1]["checksum"] == zlib.crc32(
-        want.astype("<i2").tobytes()
-    ) % 1_000_003
-    assert out[1]["feature"][:3] == [2400 / 8000, 8000.0, 1.0]
-    assert out[2]["decode_ok"]  # A-law under a wrong label still decodes
-    # ADPCM needs spec-literal step tables, mp3 a codec: decoder gaps
-    for gap in (3, 4):
-        assert not out[gap]["decode_ok"]
-        assert out[gap]["reason"] == "decoder_gap"
-
-
-def test_wav_flavors_sloppy_trailer_extensible_float(spark):
-    """A sloppy trailer chunk after the audio must not corrupt-file a
-    decodable WAV (the walk stops once fmt+data are in hand, first data
-    chunk wins — the stdlib convention); WAVE_FORMAT_EXTENSIBLE PCM
-    decodes natively (stdlib wave rejects the container before Python
-    3.12); IEEE-float WAV decodes as the uncompressed formula-free
-    format it is; 8-bit (stored unsigned) and 24-bit PCM fingerprint
-    their signed samples."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _featurize_wav,
-        decode_features,
-    )
-
-    pcm = _pcm(800)
-    # hand-assembled PCM16 with an overshooting LIST trailer
-    base = _raw_wav(1, pcm.astype("<i2").tobytes(), bits=16)
-    sloppy = base + b"LIST" + struct.pack("<I", 99999) + b"INFO"
-    cs_clean, feats_clean = _featurize_wav(base)
-    cs_sloppy, feats_sloppy = _featurize_wav(sloppy)
-    assert (cs_clean, feats_clean) == (cs_sloppy, feats_sloppy)
-
-    # two data chunks: FIRST wins (stdlib convention)
-    two = base + b"data" + struct.pack("<I", 4) + b"\x01\x02\x03\x04"
-    assert _featurize_wav(two) == (cs_clean, feats_clean)
-
-    # extensible container wrapping PCM16
-    block = 2
-    # tag nch rate byterate block bits cbSize(22) validBits mask,
-    # then the SubFormat GUID whose first two LE bytes are tag 1 (PCM)
-    fmt = struct.pack(
-        "<HHIIHHHHIH", 0xFFFE, 1, 8000, 8000 * block, block, 16, 22, 16,
-        0x4, 1,
-    ) + b"\x00" * 14
-    body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    body += b"data" + struct.pack(
-        "<I", len(pcm.astype("<i2").tobytes())
-    ) + pcm.astype("<i2").tobytes()
-    ext = b"RIFF" + struct.pack("<I", len(body)) + body
-    assert _featurize_wav(ext) == (cs_clean, feats_clean)
-
-    # float32 WAV: native [-1, 1] scale
-    f32 = (pcm.astype(np.float32) / 32768.0).tobytes()
-    fwav = _raw_wav(3, f32, bits=32)
-    cs_f, feats_f = _featurize_wav(fwav)
-    assert feats_f[:3] == [0.1, 8000.0, 1.0]
-    assert 0.0 < feats_f[3] < 1.0  # native float scale
-
-    # 8-bit PCM is stored UNSIGNED: the fingerprint is over signed bytes
-    p8 = (pcm // 256).astype(np.int8)
-    w8 = _raw_wav(1, (p8.astype(np.int16) + 128).astype(np.uint8).tobytes())
-    cs8, feats8 = _featurize_wav(w8)
-    assert cs8 == zlib.crc32(p8.tobytes()) % 1_000_003
-    assert feats8[3] == float(np.abs(p8.astype(np.int64)).mean())
-    # 24-bit PCM sign-extends from three little-endian bytes
-    p24 = pcm.astype(np.int64) * 200
-    le3 = np.frombuffer(p24.astype("<i4").tobytes(), dtype=np.uint8)
-    le3 = le3.reshape(-1, 4)[:, :3].tobytes()
-    cs24, feats24 = _featurize_wav(_raw_wav(1, le3, bits=24))
-    assert cs24 == zlib.crc32(le3) % 1_000_003
-    assert feats24[3] == float(np.abs(p24).mean())
-
-    # end-to-end: all flavors green through the mapInPandas boundary
-    assets = spark.createDataFrame(
-        [(i + 1, "audio/wav", p, {"n_bytes": len(p), "source": "t"})
-         for i, p in enumerate([sloppy, ext, fwav])],
-        "asset_id long, media_type string, payload binary, "
-        "meta struct<n_bytes:long, source:string>",
-    )
-    rows = decode_features(assets, real_decoder=True).collect()
-    assert all(r["decode_ok"] for r in rows)
-
-
-def test_wav_taxonomy_and_bit_depth_validation():
-    """The corrupt-vs-decoder_gap taxonomy must hold at the edges, and
-    unsupported sample widths must fail loud."""
-    import struct
-
-    from inbev_data_engineering_case_spark.operators.multimodal import (
-        _featurize_wav,
-    )
-
-    # odd-length stereo ADPCM: capability gap, NOT corrupt (the frame
-    # check must not fire before the tag dispatch)
-    adpcm_odd = _raw_wav(2, b"\x00" * 257, nch=2, bits=4)
-    with pytest.raises(NotImplementedError):
-        _featurize_wav(adpcm_odd)
-
-    # extensible fmt missing its SubFormat GUID: truncation = corrupt,
-    # not 'tag 65534 requires codec tables'
-    fmt16 = struct.pack("<HHIIHH", 0xFFFE, 1, 8000, 16000, 2, 16)
-    body = b"WAVE" + b"fmt " + struct.pack("<I", 16) + fmt16
-    body += b"data" + struct.pack("<I", 4) + b"\x00" * 4
-    with pytest.raises(ValueError, match="extensible"):
-        _featurize_wav(b"RIFF" + struct.pack("<I", len(body)) + body)
-
-    # NaN float samples: corrupt, never a NaN feature with decode_ok
-    nanwav = _raw_wav(3, struct.pack("<4f", 0.5, float("nan"), 0.1, 0.2),
-                      bits=32)
-    with pytest.raises(ValueError, match="non-finite"):
-        _featurize_wav(nanwav)
-
-    # 16-bit float and 12-bit PCM are unsupported widths: corrupt
-    f16 = _raw_wav(3, b"\x00" * 8, bits=16)
-    with pytest.raises(ValueError, match="float bit depth"):
-        _featurize_wav(f16)
-    p12 = _raw_wav(1, b"\x00" * 12, bits=12)
-    with pytest.raises(ValueError, match="PCM bit depth"):
-        _featurize_wav(p12)
 
 
 def test_train_ivf_centroids_rejects_huge_k(spark):
@@ -863,6 +861,7 @@ def test_vec_dim_memo_sees_an_overwritten_parquet_path(spark, tmp_path):
             "vec_id long, embedding array<double>",
         ).write.mode("overwrite").parquet(path)
         assert _vec_dim(spark.read.parquet(path), "embedding") == d
+
 
 
 def test_signlsh_literal_weights_match_runtime_path(spark):
@@ -2512,20 +2511,22 @@ def test_decode_errors_dead_letter_not_raise(spark):
     """An unsupported (JPEG, MP4) or corrupt (truncated PNM) asset must
     survive as a flagged row — null features, decode_ok=false, message in
     `error` — instead of killing the job; strict=True restores the
-    raise."""
+    raise. resize_assets keeps the ORIGINAL payload of a row it cannot
+    decode, so a later pass with a real codec can retry it."""
     import pytest as _pytest
     from pyspark.errors import PythonException
 
     from inbev_data_engineering_case_spark.operators.multimodal import (
         decode_features,
+        resize_assets,
     )
 
+    bmp = _make_bmp([[(5, 5, 5), (10, 10, 10)]])
     pgm = b"P5\n2 1\n255\n" + bytes([5, 10])
     jpeg = b"\xff\xd8\xff\xe0 not decodable"
     assets = spark.createDataFrame(
         [
-            (1, "image/x-portable-graymap", pgm,
-             {"n_bytes": len(pgm), "source": "t"}),
+            (1, "image/bmp", bmp, {"n_bytes": len(bmp), "source": "t"}),
             (2, "image/jpeg", jpeg, {"n_bytes": len(jpeg), "source": "t"}),
             (3, "video/mp4", b"\x00\x00\x00 ftyp", {"n_bytes": 8, "source": "t"}),
             (4, "image/x-portable-graymap", pgm[:-1],
@@ -2540,7 +2541,7 @@ def test_decode_errors_dead_letter_not_raise(spark):
         for r in decode_features(assets, real_decoder=True).collect()
     }
     assert feats[1]["decode_ok"] and feats[1]["error"] is None
-    assert feats[1]["feature"] == [2.0, 1.0, 1.0, 7.5]
+    assert feats[1]["feature"] == [2.0, 1.0, 24.0, 7.5]
     for bad, expect in (
         (2, "NotImplementedError"),
         (3, "NotImplementedError"),
@@ -2551,37 +2552,27 @@ def test_decode_errors_dead_letter_not_raise(spark):
         assert feats[bad]["feature"] is None
         assert expect in feats[bad]["error"]
 
+    resized = {
+        r["asset_id"]: r
+        for r in resize_assets(assets, 2000, real_decoder=True).collect()
+    }
+    assert resized[1]["decode_ok"]
+    assert not resized[2]["decode_ok"]
+    assert bytes(resized[2]["payload"]) == jpeg  # original kept for retry
+
     with _pytest.raises(PythonException, match="Error"):
         decode_features(assets, real_decoder=True, strict=True).collect()
 
 
-def _make_png_1x1() -> bytes:
-    """A valid 1x1 8-bit grayscale PNG (IHDR, one zlib IDAT, IEND)."""
-    import struct
-    import zlib
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data)) + ctype + data
-            + struct.pack(">I", zlib.crc32(ctype + data))
-        )
-
-    ihdr = struct.pack(">IIBBBBB", 1, 1, 8, 0, 0, 0, 0)
-    return (
-        b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(b"\x00\x7f")) + chunk(b"IEND", b"")
-    )
-
-
 def test_decode_reason_codes_size_the_decoder_gap(spark):
-    """Reason-coded dead-letters: every image, audio or video format
-    outside binary PNM and RIFF/WAVE — here one payload per magic prefix
-    (JPEG, PNG, GIF, WebP, HEIF, FLAC, Y4M, AVI, MP4, WebM) — lands as reason='decoder_gap', a corrupt stream of
-    a supported format as reason='corrupt', a good asset as reason NULL,
-    so a corpus QA report can size the decoder gap separately from junk
-    data. decode_reason_report turns them into per-kind exact-ppm corpus
-    shares, and image_dhash dead-letters a valid PNG instead of
-    raising."""
+    """Reason-coded dead-letters: every image format outside BMP, binary
+    PNM, PNG and GIF and every video format — here one payload per magic
+    prefix (JPEG, WebP, HEIF, Y4M, AVI, MP4, WebM) — lands as
+    reason='decoder_gap', a corrupt stream of a supported format as
+    reason='corrupt', a good asset as reason NULL, so a corpus QA report
+    can size the decoder gap separately from junk data.
+    decode_reason_report turns them into per-kind exact-ppm corpus
+    shares, and image_dhash dead-letters a JPEG instead of raising."""
     from inbev_data_engineering_case_spark.operators.multimodal import (
         decode_features,
         decode_reason_report,
@@ -2591,11 +2582,8 @@ def test_decode_reason_codes_size_the_decoder_gap(spark):
     tail = bytes(range(64))
     gaps = [
         ("image/jpeg", b"\xff\xd8\xff\xe0" + tail),
-        ("image/png", _make_png_1x1()),
-        ("image/gif", b"GIF89a" + tail),
         ("image/webp", b"RIFF\x44\x00\x00\x00WEBPVP8L" + tail),
         ("image/heic", b"\x00\x00\x00\x18ftypheic" + tail),
-        ("audio/flac", b"fLaC" + tail),
         ("video/x-y4m", b"YUV4MPEG2 W2 H2 F25:1 C420\nFRAME\n" + tail),
         ("video/x-msvideo", b"RIFF\x44\x00\x00\x00AVI LIST" + tail),
         ("video/mp4", b"\x00\x00\x00\x18ftypisom" + tail),
@@ -2619,27 +2607,64 @@ def test_decode_reason_codes_size_the_decoder_gap(spark):
     for i in range(1, len(gaps) + 1):
         assert not rows[i]["decode_ok"], rows[i]["media_type"]
         assert rows[i]["reason"] == "decoder_gap", rows[i]["media_type"]
-    assert rows[11]["reason"] is None and rows[11]["decode_ok"]
-    assert rows[12]["reason"] == "corrupt"
+    assert rows[8]["reason"] is None and rows[8]["decode_ok"]
+    assert rows[9]["reason"] == "corrupt"
 
     report = decode_reason_report(feats).collect()
     by_key = {(r["media_type"], r["reason"]): r for r in report}
-    gap = by_key[("image/png", "decoder_gap")]
-    assert gap["n_assets"] == 1 and gap["share_ppm"] == 1_000_000 // 12
-    assert "binary PNM" in gap["detail"]
+    gap = by_key[("image/jpeg", "decoder_gap")]
+    assert gap["n_assets"] == 1 and gap["share_ppm"] == 1_000_000 // 9
+    assert "every other image format" in gap["detail"]
     assert by_key[("image/x-portable-graymap", "corrupt")]["n_assets"] == 1
     ok = by_key[("image/x-portable-graymap", "ok")]
     assert ok["n_assets"] == 1 and ok["detail"] is None
-    assert sum(r["n_assets"] for r in report) == 12
+    assert sum(r["n_assets"] for r in report) == 9
 
-    # the dHash path refuses a real PNG as a dead-letter row, not a raise
+    # the dHash path refuses a JPEG as a dead-letter row, not a raise
     hashes = {
         r["asset_id"]: r
-        for r in image_dhash(assets.filter("asset_id IN (2, 11)")).collect()
+        for r in image_dhash(assets.filter("asset_id IN (1, 8)")).collect()
     }
-    assert hashes[2]["decode_ok"] is False and hashes[2]["dhash"] is None
-    assert "NotImplementedError" in hashes[2]["error"]
-    assert hashes[11]["decode_ok"]
+    assert hashes[1]["decode_ok"] is False and hashes[1]["dhash"] is None
+    assert "NotImplementedError" in hashes[1]["error"]
+    assert hashes[8]["decode_ok"]
+
+
+def test_paletted_bmp_matches_paletted_png_fingerprint(spark):
+    """Cross-encoding parity: the same image stored as a paletted (8-bpp)
+    BMP and a paletted PNG must produce identical checksum and mean —
+    both normalize through their color tables to the same RGB raster."""
+    import struct
+
+    from inbev_data_engineering_case_spark.operators.multimodal import (
+        _stdlib_featurize,
+    )
+
+    pal = [(255, 0, 0), (0, 255, 0), (12, 34, 56)]
+    idx_rows = [[0, 1, 2], [2, 1, 0]]
+
+    # 8bpp BMP: color table of BGRA entries right after the 40-byte info
+    # header, palette-index raster stored bottom-up with row padding
+    table = b"".join(bytes([b_, g, r, 0]) for r, g, b_ in pal)
+    stride = ((3 + 3) // 4) * 4
+    raster = b"".join(
+        bytes(row).ljust(stride, b"\xAA") for row in reversed(idx_rows)
+    )
+    info = struct.pack(
+        "<IiiHHIIiiII", 40, 3, 2, 1, 8, 0, len(raster), 2835, 2835, len(pal), 0
+    )
+    off = 14 + 40 + len(table)
+    bmp = (
+        struct.pack("<2sIHHI", b"BM", off + len(raster), 0, 0, off)
+        + info + table + raster
+    )
+    png = _make_png(idx_rows, 3, [0, 0], palette=pal)
+
+    bmp_crc, bmp_feat = _stdlib_featurize("image/bmp", bmp)
+    png_crc, png_feat = _stdlib_featurize("image/png", png)
+    assert bmp_crc == png_crc
+    assert bmp_feat[3] == png_feat[3]  # identical mean over expanded RGB
+    assert bmp_feat[:2] == png_feat[:2] == [3.0, 2.0]
 
 
 @pytest.mark.slow
@@ -2730,13 +2755,18 @@ def test_image_dhash_perceptual_near_dup(spark):
     edited[0, 0] = [255, 255, 255]  # tiny edit -> small hamming
     other = rng.randint(0, 256, size=(16, 18, 3)).astype("uint8")
 
-    ppm = "image/x-portable-pixmap"
+    def bmp(px):
+        # _make_bmp takes row-major BGR tuples
+        return _make_bmp(
+            [[tuple(int(v) for v in p[::-1]) for p in row] for row in px]
+        )
+
     assets = spark.createDataFrame(
         [
-            (1, ppm, bytearray(_make_pnm(base))),
-            (2, ppm, bytearray(_make_pnm(up))),
-            (3, ppm, bytearray(_make_pnm(edited))),
-            (4, ppm, bytearray(_make_pnm(other))),
+            (1, "image/bmp", bytearray(bmp(base))),
+            (2, "image/bmp", bytearray(bmp(up))),
+            (3, "image/bmp", bytearray(bmp(edited))),
+            (4, "image/bmp", bytearray(bmp(other))),
             (5, "image/jpeg", bytearray(b"\xff\xd8\xff junk")),
         ],
         "asset_id long, media_type string, payload binary",
@@ -2790,13 +2820,18 @@ def test_curate_corpus_asset_near_dup_gate(spark):
     edited = base.copy()
     edited[0, 0] = [255, 255, 255]
 
+    def bmp(px):
+        return _make_bmp(
+            [[tuple(int(v) for v in p[::-1]) for p in row] for row in px]
+        )
+
     # doc 2's image near-dups doc 1's (texts are unrelated — the gate
     # is pixel-space, not text-space); doc 3's asset is undecodable
     # junk (dead-letter → survives the gate); doc 4 is text-only
     assets = spark.createDataFrame(
         [
-            (1, "image/x-portable-pixmap", bytearray(_make_pnm(base))),
-            (2, "image/x-portable-pixmap", bytearray(_make_pnm(edited))),
+            (1, "image/bmp", bytearray(bmp(base))),
+            (2, "image/bmp", bytearray(bmp(edited))),
             (3, "image/jpeg", bytearray(b"\xff\xd8\xff junk")),
         ],
         "asset_id long, media_type string, payload binary",
@@ -2933,6 +2968,219 @@ def test_curate_corpus_strip_html_stage(spark):
     assert by_id[1]["stripped_fp"] == by_id[2]["stripped_fp"]
 
 
+def _make_gif(idx_rows, palette, interlaced=False, animated_tail=False):
+    """Minimal GIF89a encoder for tests: global color table padded to 4
+    entries (min LZW code size 2), raster emitted with a CLEAR code
+    before every pixel code (the classic 'uncompressed GIF' technique —
+    valid LZW, dictionary never grows), optional interlace flag with
+    rows pre-shuffled into pass order, optional second image block to
+    exercise first-frame semantics."""
+    import struct
+
+    h = len(idx_rows)
+    w = len(idx_rows[0])
+    pal = list(palette) + [(0, 0, 0)] * (4 - len(palette))
+    gct = b"".join(bytes(c) for c in pal)
+    header = b"GIF89a" + struct.pack("<HH", w, h) + bytes([0x80 | 0x01, 0, 0])
+    # rows in stream order: interlaced GIFs store pass 1 (rows 0,8,..),
+    # pass 2 (4,12,..), pass 3 (2,6,..), pass 4 (odd rows)
+    rows = idx_rows
+    if interlaced:
+        order = (
+            list(range(0, h, 8)) + list(range(4, h, 8))
+            + list(range(2, h, 4)) + list(range(1, h, 2))
+        )
+        rows = [idx_rows[r] for r in order]
+    min_code, clear, eoi = 2, 4, 5
+    bits, nbits = [], 3  # code size = min_code + 1
+    for px in (p for row in rows for p in row):
+        for code in (clear, px):
+            for b in range(nbits):
+                bits.append((code >> b) & 1)
+    for b in range(nbits):
+        bits.append((eoi >> b) & 1)
+    while len(bits) % 8:
+        bits.append(0)
+    data = bytes(
+        sum(bit << i for i, bit in enumerate(bits[k : k + 8]))
+        for k in range(0, len(bits), 8)
+    )
+    blocks = b"".join(
+        bytes([len(data[i : i + 255])]) + data[i : i + 255]
+        for i in range(0, len(data), 255)
+    )
+    img = (
+        b"\x2C" + struct.pack("<HHHH", 0, 0, w, h)
+        + bytes([0x40 if interlaced else 0])
+        + bytes([min_code]) + blocks + b"\x00"
+    )
+    # a graphic-control extension before the image (block-skip coverage)
+    ext = b"\x21\xF9\x04\x00\x00\x00\x00\x00"
+    tail = img if animated_tail else b""
+    return header + gct + ext + img + tail + b"\x3B"
+
+
+def test_stdlib_gif_decoder_known_answer():
+    import numpy as np
+
+    from inbev_data_engineering_case_spark.operators.multimodal import (
+        _gif_decode_pixels,
+    )
+
+    pal = [(255, 0, 0), (0, 255, 0), (12, 34, 56)]
+    idx_rows = [[0, 1, 2], [2, 1, 0]]
+    pixels = _gif_decode_pixels(_make_gif(idx_rows, pal))
+    want = np.array([[pal[i] for i in row] for row in idx_rows], np.uint8)
+    assert pixels.shape == (2, 3, 3)
+    assert (pixels == want).all()
+
+
+def test_gif_interlace_and_first_frame():
+    import numpy as np
+
+    from inbev_data_engineering_case_spark.operators.multimodal import (
+        _gif_decode_pixels,
+    )
+
+    pal = [(10, 0, 0), (0, 20, 0), (0, 0, 30), (40, 40, 40)]
+    idx_rows = [[r % 4] * 2 for r in range(5)]  # 5 rows -> 4 passes used
+    plain = _gif_decode_pixels(_make_gif(idx_rows, pal))
+    inter = _gif_decode_pixels(_make_gif(idx_rows, pal, interlaced=True))
+    assert (plain == inter).all()  # deinterlace restores row order
+    # animated: first frame decoded, trailer frames ignored
+    anim = _gif_decode_pixels(_make_gif(idx_rows, pal, animated_tail=True))
+    assert (anim == plain).all()
+    want = np.array([[pal[r % 4]] * 2 for r in range(5)], np.uint8)
+    assert (plain == want).all()
+
+
+def test_gif_matches_paletted_png_fingerprint():
+    """Cross-encoding parity, extended to GIF: the same paletted image as
+    GIF and paletted PNG checksums identically over the expanded RGB
+    raster (the encoding-invariance contract of _featurize_bmp)."""
+    from inbev_data_engineering_case_spark.operators.multimodal import (
+        _stdlib_featurize,
+    )
+
+    pal = [(255, 0, 0), (0, 255, 0), (12, 34, 56)]
+    idx_rows = [[0, 1, 2], [2, 1, 0]]
+    gif_crc, gif_feat = _stdlib_featurize(
+        "image/gif", _make_gif(idx_rows, pal)
+    )
+    png_crc, png_feat = _stdlib_featurize(
+        "image/png", _make_png(idx_rows, 3, [0, 0], palette=pal)
+    )
+    assert gif_crc == png_crc
+    assert gif_feat[:2] == png_feat[:2] == [3.0, 2.0]
+    assert gif_feat[3] == png_feat[3]
+
+
+def test_gif_corrupt_stream_raises():
+    import pytest
+
+    from inbev_data_engineering_case_spark.operators.multimodal import (
+        _gif_decode_pixels,
+    )
+
+    pal = [(1, 2, 3)]
+    good = _make_gif([[0, 0], [0, 0]], pal)
+    with pytest.raises(ValueError):
+        _gif_decode_pixels(good[:20])  # truncated mid-stream
+    with pytest.raises(ValueError):
+        _gif_decode_pixels(b"GIF89a" + b"\x00" * 5)  # header truncated
+
+
+def test_gif_lzw_roundtrip_with_real_compression():
+    """The clear-per-pixel fixtures above never grow the LZW dictionary;
+    this encodes rasters with the REAL GIF LZW algorithm (growing
+    dictionary, variable code width, KwK self-reference on repeats) and
+    round-trips them through the decoder."""
+    import random
+
+    from inbev_data_engineering_case_spark.operators.multimodal import (
+        _gif_lzw_decode,
+    )
+
+    def lzw_encode(indices, min_code_size):
+        clear, eoi = 1 << min_code_size, (1 << min_code_size) + 1
+        out_bits = []
+        code_size = min_code_size + 1
+
+        def emit(code):
+            for b in range(code_size):
+                out_bits.append((code >> b) & 1)
+
+        table = {bytes([i]): i for i in range(clear)}
+        next_code = eoi + 1
+        emit(clear)
+        cur = b""
+        for px in indices:
+            nxt = cur + bytes([px])
+            if nxt in table:
+                cur = nxt
+                continue
+            emit(table[cur])
+            table[nxt] = next_code
+            next_code += 1
+            # encoder widens AFTER assigning the code that fills the
+            # current width (mirror of the decoder's bump condition)
+            if next_code == (1 << code_size) + 1 and code_size < 12:
+                code_size += 1
+            cur = bytes([px])
+        if cur:
+            emit(table[cur])
+        emit(eoi)
+        while len(out_bits) % 8:
+            out_bits.append(0)
+        return bytes(
+            sum(bit << i for i, bit in enumerate(out_bits[k : k + 8]))
+            for k in range(0, len(out_bits), 8)
+        )
+
+    rng = random.Random(7)
+    for trial, min_code in [(0, 2), (1, 4), (2, 8)]:
+        n_colors = 1 << min_code
+        # runs of repeats force the KwK case; enough pixels to force
+        # several code-width bumps
+        indices = []
+        while len(indices) < 4000:
+            indices += [rng.randrange(n_colors)] * rng.randint(1, 9)
+        indices = indices[:4000]
+        data = lzw_encode(indices, min_code)
+        got = _gif_lzw_decode(data, min_code, len(indices))
+        assert list(got) == indices, f"trial {trial} mismatch"
+
+
+def test_gif_decoder_matches_pil_when_available():
+    """Cross-implementation check against a REAL encoder: PIL-written
+    GIFs (its LZW, its palette layout) must decode to PIL's own pixel
+    answer. Skips where PIL is absent (this container); runs anywhere it
+    exists."""
+    import io
+
+    import numpy as np
+    import pytest
+
+    image_mod = pytest.importorskip("PIL.Image")
+
+    from inbev_data_engineering_case_spark.operators.multimodal import (
+        _gif_decode_pixels,
+    )
+
+    rng = np.random.default_rng(11)
+    rgb = rng.integers(0, 255, size=(13, 17, 3), dtype=np.uint8)
+    im = image_mod.fromarray(rgb, "RGB").convert(
+        "P", palette=image_mod.Palette.ADAPTIVE
+    )
+    buf = io.BytesIO()
+    im.save(buf, format="GIF")
+    payload = buf.getvalue()
+    want = np.asarray(im.convert("RGB"))
+    got = _gif_decode_pixels(payload)
+    assert got.shape == want.shape
+    assert (got == want).all()
+
+
 def test_semantic_decontaminate_drops_paraphrase_neighbors(spark):
     """A corpus vector nearly parallel to a benchmark vector is flagged
     and its document dropped; orthogonal vectors survive. The n-gram
@@ -3005,6 +3253,48 @@ def test_curate_corpus_semantic_stage(spark):
         curate_corpus(docs, benchmark_embeddings=bench_emb)
 
 
+def test_gif_depth_reflects_actual_color_table():
+    """Depth regression: the reported bit depth comes from the color
+    table the frame USED, not the logical-screen packed bits (which are
+    meaningless for local tables / unset global flags)."""
+    from inbev_data_engineering_case_spark.operators.multimodal import (
+        _featurize_gif,
+    )
+
+    pal4 = [(1, 2, 3), (4, 5, 6), (7, 8, 9), (10, 11, 12)]
+    _, feat = _featurize_gif(_make_gif([[0, 1], [2, 3]], pal4))
+    assert feat[2] == 2.0  # 4-entry table -> 2-bit indices
+
+
+def test_gif_offset_frame_composes_onto_logical_screen():
+    """A first frame that is a sub-rectangle of the logical screen must
+    compose at its (left, top) offset over the background color — like
+    PIL — so dimensions and checksums stay encoding-invariant."""
+    import struct
+
+    import numpy as np
+
+    from inbev_data_engineering_case_spark.operators.multimodal import (
+        _gif_decode_pixels,
+    )
+
+    # 4x3 logical screen, 2x1 frame at (1, 1); bg index 1
+    pal = [(10, 20, 30), (200, 200, 200), (1, 2, 3), (4, 5, 6)]
+    base = _make_gif([[0, 2]], pal)  # reuse the encoder's blocks
+    # patch: header screen 4x3, bg=1; image descriptor left=1, top=1
+    patched = bytearray(base)
+    struct.pack_into("<HH", patched, 6, 4, 3)
+    patched[11] = 1
+    img_off = patched.index(0x2C)
+    struct.pack_into("<HH", patched, img_off + 1, 1, 1)
+    pixels = _gif_decode_pixels(bytes(patched))
+    assert pixels.shape == (3, 4, 3)
+    bg = np.array(pal[1], np.uint8)
+    assert (pixels[0, 0] == bg).all() and (pixels[2, 3] == bg).all()
+    assert (pixels[1, 1] == np.array(pal[0], np.uint8)).all()
+    assert (pixels[1, 2] == np.array(pal[2], np.uint8)).all()
+
+
 def test_weighted_sample_scales_with_weight(spark):
     """A-ES properties: heavier rows are overrepresented, no row repeats,
     zero/NULL weights never draw, and the subset is deterministic."""
@@ -3033,6 +3323,31 @@ def test_weighted_sample_scales_with_weight(spark):
         r["doc_id"] for r in weighted_sample(df, 300, "w", salt=1).collect()
     ]
     assert other != ids
+
+
+def test_gif_declared_screen_bounds_are_enforced():
+    """A tiny payload declaring a huge logical screen must dead-letter,
+    not allocate a multi-GB canvas; an overhanging frame is corrupt."""
+    import struct
+
+    import pytest
+
+    from inbev_data_engineering_case_spark.operators.multimodal import (
+        _gif_decode_pixels,
+    )
+
+    pal = [(1, 2, 3)]
+    base = bytearray(_make_gif([[0, 0]], pal))
+    struct.pack_into("<HH", base, 6, 65535, 65535)  # 12.9 GB canvas claim
+    with pytest.raises(ValueError, match="64M-pixel"):
+        _gif_decode_pixels(bytes(base))
+
+    overhang = bytearray(_make_gif([[0, 0]], pal))
+    struct.pack_into("<HH", overhang, 6, 2, 1)  # screen 2x1
+    img_off = overhang.index(0x2C)
+    struct.pack_into("<HH", overhang, img_off + 1, 1, 0)  # frame at left=1
+    with pytest.raises(ValueError, match="overhangs"):
+        _gif_decode_pixels(bytes(overhang))
 
 
 def test_weighted_sample_excludes_null_ids(spark):
@@ -3217,6 +3532,33 @@ def test_curation_drift_flags_injected_collapse(spark):
         for r in out
         if r["stage"] == "input"
     )
+
+
+def test_gif_frame_declared_bounds_checked_before_decode():
+    """The 64M-pixel bound and overhang check run BEFORE the LZW decode
+    and palette expansion — a descriptor-declared huge frame must
+    dead-letter without allocating its raster, and a frame larger than
+    the screen at (0,0) is just as corrupt as a shifted one."""
+    import struct
+
+    import pytest
+
+    from inbev_data_engineering_case_spark.operators.multimodal import (
+        _gif_decode_pixels,
+    )
+
+    pal = [(1, 2, 3)]
+    huge_frame = bytearray(_make_gif([[0, 0]], pal))
+    struct.pack_into("<HH", huge_frame, 6, 65535, 65535)  # screen claim
+    img_off = huge_frame.index(0x2C)
+    struct.pack_into("<HH", huge_frame, img_off + 5, 65535, 65535)  # frame
+    with pytest.raises(ValueError, match="64M-pixel"):
+        _gif_decode_pixels(bytes(huge_frame))
+
+    origin_overhang = bytearray(_make_gif([[0, 0]], pal))  # frame 2x1
+    struct.pack_into("<HH", origin_overhang, 6, 1, 1)  # screen 1x1
+    with pytest.raises(ValueError, match="overhangs"):
+        _gif_decode_pixels(bytes(origin_overhang))
 
 
 def test_bm25_ranks_rare_term_and_length_norm(spark):
@@ -5433,24 +5775,6 @@ def test_leakage_safe_split_rejects_reserved_column(spark):
     )
     pairs = spark.createDataFrame([(0, 1)], "id_a long, id_b long")
     with pytest.raises(ValueError, match="_split_key"):
-        leakage_safe_split(docs, pairs)
-
-
-def test_leakage_safe_split_rejects_existing_split_column(spark):
-    # twin symmetry: the batch operator must reject a pre-existing
-    # 'split' column exactly like its incremental twin, instead of
-    # silently clobbering the caller's assignment
-    from pyspark.sql import functions as F
-
-    from inbev_data_engineering_case_spark.operators.curate import (
-        leakage_safe_split,
-    )
-
-    docs = spark.range(5).select(
-        F.col("id").alias("doc_id"), F.lit("train").alias("split")
-    )
-    pairs = spark.createDataFrame([(0, 1)], "id_a long, id_b long")
-    with pytest.raises(ValueError, match="split"):
         leakage_safe_split(docs, pairs)
 
 
