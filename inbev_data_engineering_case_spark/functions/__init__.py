@@ -1,19 +1,28 @@
-"""Reusable Column-expression helpers.
+"""Reusable expression helpers — JVM-side, codegen-friendly, no UDFs.
 
-Everything here is a pure expression constructor over built-in
-``pyspark.sql.functions`` — JVM-side, codegen-friendly, no UDFs. Several
-helpers exist specifically to be *portable*: the same computation is
-expressible in ANSI SQL on DuckDB, so operators built from them can ship an
-exact value-level oracle (the driver's correctness gate compares value
+Two kinds live here:
+
+- Column helpers over built-in ``pyspark.sql.functions`` for exact money
+  arithmetic and vector math (``money``/``dsum``/``davg``, ``dot``/
+  ``cosine``/``sqdist``).
+- The text and hash primitives (tokens, word/char n-grams,
+  ``portable_hash64``, Z-order interleave). Each has one Spark form, a
+  builder of Spark SQL expression text (see the builders section); the
+  Column-returning names are ``F.expr`` of that text.
+
+Several helpers exist specifically to be *portable*: the same computation
+is expressible in ANSI SQL on DuckDB, so operators built from them can
+ship an exact value-level oracle (the correctness gate compares value
 hashes, so engine-specific hashes like Spark's murmur3 ``F.hash`` are out
-for any column that lands in a result).
+for any column that lands in a result). The DuckDB twins (``*_sql``) are
+written independently of the Spark builders.
 """
 
 from __future__ import annotations
 
 import random
 
-from pyspark.sql import Column
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
 # MinHash universal-hash family g_k(x) = (a_k*x + b_k) mod MH_PRIME over base
@@ -33,22 +42,6 @@ def minhash_mixers(k: int) -> list[tuple[int, int]]:
         (rnd.randrange(1, MH_PRIME), rnd.randrange(0, MH_PRIME))
         for _ in range(k)
     ]
-
-
-def portable_hash64(c: Column | str, seed: int = 0) -> Column:
-    """Deterministic 60-bit hash identical in Spark and DuckDB.
-
-    Spark:  ``conv(substring(md5(concat(seed, x)), 1, 15), 16, 10)::bigint``
-    DuckDB: ``('0x' || substr(md5(seed || x), 1, 15))::bigint``
-
-    15 hex chars = 60 bits, always non-negative and exact in an int64.
-    md5 is computed JVM-side (codegen'd); this is the workhorse for
-    MinHash/SimHash/fingerprints where results must match the oracle.
-    For purely internal hashing (salting, bucketing) prefer ``F.xxhash64``.
-    """
-    c = F.col(c) if isinstance(c, str) else c
-    salted = F.concat(F.lit(str(seed)), c.cast("string")) if seed else c.cast("string")
-    return F.conv(F.substring(F.md5(salted), 1, 15), 16, 10).cast("bigint")
 
 
 def portable_hash64_sql(expr: str, seed: int = 0) -> str:
@@ -158,40 +151,72 @@ def sqdist(a: Column | str, b: Column | str) -> Column:
 WS_RE = r"[ \t\n\x0b\f\r]+"
 
 
-# --- Spark-SQL text builders (r16 optimization round) -----------------
-# The hot text operators build their plans as SQL strings parsed with ONE
-# F.expr/selectExpr instead of per-node py4j Column construction — the
-# measured driver-side tree-build cost of the lambda-bearing forms
-# (0.25-1.1s per curation plan) drops to a ~10-20ms parse of identical
-# text. Each builder is the exact SQL twin of the Column helper above it;
-# parity is pinned by the operators' bit-equality tests and the full
-# DuckDB oracle sweep.
+# --- Spark SQL text builders ----------------------------------------------
+# The text and hash primitives have ONE Spark form: a builder returning
+# Spark SQL expression text. Operators splice the text into a single
+# ``selectExpr``/``F.expr`` parse (one parse is ~10-20ms where a py4j
+# Column tree of the same lambda-bearing expression cost 0.25-1.1s per
+# curation plan build); the public Column-returning names are
+# ``F.expr(<builder>(expr))``. Every argument is Spark SQL expression
+# text: a plain column name is valid text, ``sql_ident`` quotes any other
+# name. Lambda variables (``i``, ``s``, ``t``, ...) shadow columns of the
+# same name, so the text must not reference such a column. The DuckDB
+# oracle twins (``*_sql``) are written separately and share no fragment
+# with these builders.
+
+_ESCAPED_LITERALS_CONF = "spark.sql.parser.escapedStringLiterals"
 
 
 def sql_ident(name: str) -> str:
-    """Backtick-quoted identifier for a Spark SQL fragment. The contract
-    matches the other string fast paths in this package: the name is an
+    """Backtick-quoted identifier for a Spark SQL fragment. The name is an
     UNQUALIFIED top-level column (a dotted name is treated as one literal
     identifier, not a struct-field path)."""
     return "`" + name.replace("`", "``") + "`"
 
 
 def sql_str(s: str) -> str:
-    """Single-quoted Spark SQL string literal. Backslashes and quotes are
-    escaped; raw control characters (WS_RE carries real TAB/LF/VT/FF/CR)
-    pass through the lexer unchanged inside quotes, so the parsed value is
-    byte-identical to the Python string."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    """Single-quoted Spark SQL string literal whose parsed value is ``s``.
+
+    Backslashes and quotes are escaped with a backslash; every other
+    character (control characters included) passes through the lexer
+    unchanged inside quotes. A backslash escape is the one construct whose
+    parse depends on the session: with
+    ``spark.sql.parser.escapedStringLiterals`` set to true the parser
+    keeps the backslashes, so the tokenizer regex
+    (``WS_RE`` is a string of backslash escapes) and every hash over such a
+    literal would silently change. A literal that needs an escape therefore
+    raises ``ValueError`` when the active session sets that conf."""
+    lit = "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if "\\" in lit:
+        spark = SparkSession.getActiveSession()
+        if (
+            spark is not None
+            and spark.conf.get(_ESCAPED_LITERALS_CONF, "false").lower()
+            == "true"
+        ):
+            raise ValueError(
+                f"{_ESCAPED_LITERALS_CONF}=true changes how the SQL"
+                f" literal {lit} parses; these expressions need it false"
+            )
+    return lit
 
 
 def tokens_spark_sql(expr: str) -> str:
-    """Spark-SQL twin of ``tokens`` over an expression string."""
+    """Whitespace tokenization → array<string>: ``split(trim(x), WS_RE)``.
+
+    Matches DuckDB's ``regexp_split_to_array(trim(x), WS_RE)`` for
+    non-empty input (the oracles embed the same class literally). An empty
+    trimmed text yields one ``''`` token."""
     return f"split(trim({expr}), {sql_str(WS_RE)})"
 
 
 def word_ngrams_spark_sql(expr: str, n: int) -> str:
-    """Spark-SQL twin of ``word_ngrams``: identical CASE/transform shape,
-    so the parsed tree matches the Column form node for node."""
+    """Word n-gram shingles → array<string> (space-joined windows over the
+    whitespace tokens); empty for texts of fewer than ``n`` tokens. Word
+    shingles are the standard unit for near-dedup of natural-language
+    corpora: on text with a shared vocabulary, character shingles collide
+    between unrelated documents (degenerate LSH buckets → all-pairs
+    blowup) while word n-grams stay discriminative."""
     toks = tokens_spark_sql(expr)
     return (
         f"CASE WHEN size({toks}) >= {n} THEN "
@@ -201,9 +226,29 @@ def word_ngrams_spark_sql(expr: str, n: int) -> str:
     )
 
 
+def char_ngrams_spark_sql(expr: str, n: int) -> str:
+    """Character n-gram shingles → array<string>: substring windows over a
+    1..len-n+1 index sequence; empty for strings shorter than ``n``. The
+    CASE guard matters: ``sequence(start, stop)`` steps -1 when
+    start > stop, which would fabricate shingles for too-short strings."""
+    return (
+        f"CASE WHEN length({expr}) >= {n} THEN "
+        f"transform(sequence(1, length({expr}) - {n - 1}), "
+        f"i -> substr({expr}, i, {n})) "
+        "ELSE CAST(array() AS ARRAY<STRING>) END"
+    )
+
+
 def portable_hash64_spark_sql(expr: str, seed: int = 0) -> str:
-    """Spark-SQL twin of ``portable_hash64`` (same conv/substring/md5
-    chain, same seed concat)."""
+    """Deterministic 60-bit hash identical in Spark and DuckDB.
+
+    Spark:  ``conv(substring(md5(concat(seed, x)), 1, 15), 16, 10)::bigint``
+    DuckDB: ``('0x' || substr(md5(seed || x), 1, 15))::bigint``
+
+    15 hex chars = 60 bits, always non-negative and exact in an int64.
+    md5 is computed JVM-side (codegen'd); this is the workhorse for
+    MinHash/SimHash/fingerprints where results must match the oracle.
+    For purely internal hashing (salting, bucketing) prefer ``xxhash64``."""
     inner = (
         f"concat('{seed}', CAST(({expr}) AS STRING))"
         if seed
@@ -214,77 +259,59 @@ def portable_hash64_spark_sql(expr: str, seed: int = 0) -> str:
     )
 
 
-def tokens(c: Column | str) -> Column:
-    """Whitespace tokenization → array<string>; empty strings removed.
-
-    ``split(trim(c), WS_RE)`` matches DuckDB's
-    ``regexp_split_to_array(trim(c), WS_RE)`` for non-empty input (the
-    oracles embed the same class literally).
-    """
-    c = F.col(c) if isinstance(c, str) else c
-    return F.split(F.trim(c), WS_RE)
+def tokens(expr: str) -> Column:
+    """``F.expr`` of ``tokens_spark_sql``."""
+    return F.expr(tokens_spark_sql(expr))
 
 
-def char_ngrams(c: Column | str, n: int) -> Column:
-    """Character n-gram shingles of a string → array<string>, JVM-side:
-    substring windows via ``transform`` over a 1..len-n+1 index sequence.
-    Empty array for strings shorter than n."""
-    c = F.col(c) if isinstance(c, str) else c
-    # Guarded by when(): sequence(start, stop) auto-steps -1 when start>stop,
-    # which would fabricate shingles for too-short strings.
-    return F.when(
-        F.length(c) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.length(c) - (n - 1)),
-            lambda i: c.substr(i, F.lit(n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+def word_ngrams(expr: str, n: int) -> Column:
+    """``F.expr`` of ``word_ngrams_spark_sql``."""
+    return F.expr(word_ngrams_spark_sql(expr, n))
 
 
-def word_ngrams(c: Column | str, n: int) -> Column:
-    """Word n-gram shingles → array<string> (space-joined windows over the
-    whitespace tokens). Word shingles are the standard unit for near-dedup
-    of natural-language corpora: on text with a shared vocabulary,
-    character shingles collide between unrelated documents (degenerate LSH
-    buckets → all-pairs blowup) while word n-grams stay discriminative."""
-    toks = tokens(c)
-    return F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+def char_ngrams(expr: str, n: int) -> Column:
+    """``F.expr`` of ``char_ngrams_spark_sql``."""
+    return F.expr(char_ngrams_spark_sql(expr, n))
 
 
-def morton_bucket_expr(c: str, lo: str, hi: str, bits: int) -> Column:
-    """Scale an INTEGER column named ``c`` into ``[0, 2^bits)`` given its
-    global min/max columns ``lo``/``hi`` — pure int64 arithmetic
+def portable_hash64(expr: str, seed: int = 0) -> Column:
+    """``F.expr`` of ``portable_hash64_spark_sql``."""
+    return F.expr(portable_hash64_spark_sql(expr, seed))
+
+
+def morton_bucket_spark_sql(c: str, lo: str, hi: str, bits: int) -> str:
+    """Scale an INTEGER expression ``c`` into ``[0, 2^bits)`` given its
+    global min/max expressions ``lo``/``hi`` — pure int64 arithmetic
     (``div``), so the bucket is bit-identical on any engine. Degenerate
     ranges (hi == lo) map to 0. Non-integer dimensions must be
     pre-quantized exactly by the caller (e.g. 2-decimal money × 100) —
     float scaling would put rows on different sides of a bucket edge per
-    engine. Takes column NAMES (not Columns) because integer ``div`` is
-    only reachable through the SQL parser."""
-    return F.expr(
+    engine."""
+    return (
         f"CASE WHEN ({hi}) - ({lo}) <= 0 THEN CAST(0 AS BIGINT) "
         f"ELSE ((({c}) - ({lo})) * {(1 << bits) - 1}) "
         f"div (({hi}) - ({lo})) END"
     )
 
 
-def bit_interleave(buckets: list[Column], bits: int) -> Column:
+def morton_bucket_expr(c: str, lo: str, hi: str, bits: int) -> Column:
+    """``F.expr`` of ``morton_bucket_spark_sql``."""
+    return F.expr(morton_bucket_spark_sql(c, lo, hi, bits))
+
+
+def bit_interleave(bucket_exprs: list[str], bits: int) -> Column:
     """Morton (Z-order) code: interleave the low ``bits`` bits of each
-    bucket column — bit b of column i lands at position ``b * n + i``.
-    Unrolled into ~bits·n shift/mask adds (each term owns a distinct
-    output bit, so ``+`` == OR), all JVM-side integers."""
-    n = len(buckets)
-    out = F.lit(0).cast("bigint")
-    for b in range(bits):
-        for i, c in enumerate(buckets):
-            bit = F.shiftright(c.cast("bigint"), b).bitwiseAND(F.lit(1))
-            out = out + F.shiftleft(bit, b * n + i)
-    return out
+    bucket expression — bit b of expression i lands at position
+    ``b * n + i``. Unrolled into ~bits·n shift/mask adds (each term owns a
+    distinct output bit, so ``+`` == OR), all JVM-side integers, built as
+    one ``F.expr`` parse."""
+    n = len(bucket_exprs)
+    terms = [
+        f"shiftleft((shiftright(CAST(({e}) AS BIGINT), {b}) & 1), {b * n + i})"
+        for b in range(bits)
+        for i, e in enumerate(bucket_exprs)
+    ]
+    return F.expr(" + ".join(["CAST(0 AS BIGINT)", *terms]))
 
 
 def morton_bucket_sql(expr: str, lo: str, hi: str, bits: int) -> str:

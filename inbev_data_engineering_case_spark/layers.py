@@ -503,7 +503,7 @@ def add_zorder_key(
     the key is deterministic and engine-portable."""
     from inbev_data_engineering_case_spark.functions import (
         bit_interleave,
-        morton_bucket_expr,
+        morton_bucket_spark_sql,
     )
 
     aggs = []
@@ -511,7 +511,8 @@ def add_zorder_key(
         aggs += [F.min(c).alias(f"_lo_{c}"), F.max(c).alias(f"_hi_{c}")]
     bounds = df.agg(*aggs)
     buckets = [
-        morton_bucket_expr(c, f"_lo_{c}", f"_hi_{c}", bits) for c in dims
+        morton_bucket_spark_sql(c, f"_lo_{c}", f"_hi_{c}", bits)
+        for c in dims
     ]
     drop = [f"_lo_{c}" for c in dims] + [f"_hi_{c}" for c in dims]
     return (

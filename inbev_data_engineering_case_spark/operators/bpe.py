@@ -40,7 +40,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from inbev_data_engineering_case_spark.functions import tokens
+from inbev_data_engineering_case_spark.functions import sql_ident, tokens
 from inbev_data_engineering_case_spark.operators.dedup import _materialize
 
 EOW = "</w>"
@@ -54,7 +54,7 @@ def build_word_vocab(
     data; its shuffle carries one row per distinct word."""
     return (
         docs.select(
-            F.explode(tokens(F.lower(F.col(text_col)))).alias("word")
+            F.explode(tokens(f"lower({sql_ident(text_col)})")).alias("word")
         )
         .filter(F.col("word") != "")
         .groupBy("word")

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from inbev_data_engineering_case_spark.functions import (
     portable_hash64,
+    sql_ident,
     tokens,
 )
 
@@ -74,7 +75,7 @@ def _doc_buckets(
         docs.select(
             F.col(id_col),
             *[F.col(c) for c in extra],
-            F.explode(tokens(F.lower(F.col(text_col)))).alias("_tok"),
+            F.explode(tokens(f"lower({sql_ident(text_col)})")).alias("_tok"),
         )
         # split of an EMPTY trimmed text yields one "" token — drop it
         # (zero-token docs score bias-only downstream)
@@ -82,7 +83,7 @@ def _doc_buckets(
         .select(
             F.col(id_col),
             *[F.col(c) for c in extra],
-            (portable_hash64(F.col("_tok")) % n_buckets).alias("bucket"),
+            (portable_hash64("_tok") % n_buckets).alias("bucket"),
         )
     )
 

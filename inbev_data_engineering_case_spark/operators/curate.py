@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from inbev_data_engineering_case_spark.functions import sql_ident
 from inbev_data_engineering_case_spark.operators.dedup import (
     DEFAULT_BAND_SIZE,
     DEFAULT_NUM_HASHES,
@@ -967,7 +968,7 @@ def curate_incremental(
     # fingerprint — the fp table is tiny next to the corpus text and
     # broadcast-able), then min-id survivor within the delta itself
     fps = eligible.select(
-        F.col(id_col), fingerprint(text_col).alias("fp")
+        F.col(id_col), fingerprint(sql_ident(text_col)).alias("fp")
     ).join(
         stored_fps.select("fp").distinct(), on="fp", how="left_anti"
     )
@@ -1214,7 +1215,7 @@ def advance_corpus_artifacts(
     )
     fps = old_fps.unionByName(
         kept_delta.select(
-            fingerprint(text_col).alias("fp"),
+            fingerprint(sql_ident(text_col)).alias("fp"),
             F.col(id_col).cast("long").alias("keep_id"),
         )
     ).dropDuplicates(["fp", "keep_id"])
@@ -1326,11 +1327,14 @@ def hash_split(
 
     Weights are fractions summing to 1.0; boundaries are exact integer
     bucket counts so both engines agree bit-for-bit."""
-    from inbev_data_engineering_case_spark.functions import portable_hash64
+    from inbev_data_engineering_case_spark.functions import (
+        portable_hash64,
+        sql_str,
+    )
 
     weights = weights or {"train": 0.98, "val": 0.01, "test": 0.01}
     bucket = portable_hash64(
-        F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))
+        f"concat({sql_str(salt + ':')}, CAST({sql_ident(id_col)} AS STRING))"
     ) % F.lit(buckets)
     expr = None
     lo = 0
@@ -1353,7 +1357,6 @@ def leakage_safe_split(
     salt: str = "split",
     buckets: int = 10_000,
     max_iter: int = 25,
-    reliable_checkpoint: bool | None = None,
 ) -> DataFrame:
     """``hash_split`` with the eval-contamination guard: near-duplicate
     documents NEVER straddle splits.
@@ -1388,7 +1391,7 @@ def leakage_safe_split(
     ``max_iter``; pointer jumping covers diameter ~2^max_iter).
     """
     keyed, _ = _component_keyed(
-        documents, pairs, id_col, max_iter, reliable_checkpoint,
+        documents, pairs, id_col, max_iter,
         "leakage_safe_split",
         # same symmetry as the incremental twin: a pre-existing
         # 'split' column would be silently clobbered by hash_split's
@@ -1406,7 +1409,6 @@ def _component_keyed(
     pairs: DataFrame,
     id_col: str,
     max_iter: int,
-    reliable_checkpoint: bool | None,
     op_name: str,
     reserved: tuple[str, ...] = ("_split_key",),
 ) -> tuple[DataFrame, DataFrame]:
@@ -1425,7 +1427,6 @@ def _component_keyed(
     comp = dedup_components(
         pairs,
         max_iter=max_iter,
-        reliable_checkpoint=reliable_checkpoint,
         require_convergence=True,
     )
     keyed = docs.join(
@@ -1448,7 +1449,6 @@ def incremental_leakage_split(
     salt: str = "split",
     buckets: int = 10_000,
     max_iter: int = 25,
-    reliable_checkpoint: bool | None = None,
 ) -> DataFrame:
     """``leakage_safe_split``'s delta twin: assign splits to a NEW crawl
     batch without touching — or re-splitting — history.
@@ -1501,7 +1501,7 @@ def incremental_leakage_split(
             " their frozen split; feed only genuinely new ids"
         )
     keyed, comp = _component_keyed(
-        new_docs, pairs, id_col, max_iter, reliable_checkpoint,
+        new_docs, pairs, id_col, max_iter,
         "incremental_leakage_split",
         reserved=(
             "_split_key", "split", "n_linked_splits",
@@ -1568,7 +1568,7 @@ def chunk_documents(
             f"({chunk_tokens})"
         )
     stride = chunk_tokens - overlap
-    toks = tokens(F.col(text_col))
+    toks = tokens(sql_ident(text_col))
     n = F.size(toks)
     n_chunks = F.when(n <= chunk_tokens, F.lit(1)).otherwise(
         F.ceil((n - chunk_tokens) / F.lit(float(stride))).cast("int") + 1
@@ -1622,12 +1622,12 @@ def pack_sequences(
     from inbev_data_engineering_case_spark.operators.textops import token_count
 
     packer = portable_hash64(
-        F.concat(F.lit("pack:"), F.col(id_col).cast("string"))
+        f"concat('pack:', CAST({sql_ident(id_col)} AS STRING))"
     ) % F.lit(n_packers)
     toks = docs.select(
         F.col(id_col).alias("doc_id"),
         packer.alias("packer"),
-        token_count(text_col).cast("long").alias("n_tokens"),
+        token_count(sql_ident(text_col)).cast("long").alias("n_tokens"),
     )
     w = (
         Window.partitionBy("packer")

@@ -32,22 +32,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from inbev_data_engineering_case_spark.functions import (
-    portable_hash64,
-    word_ngrams,
+    portable_hash64_spark_sql,
+    sql_ident,
+    word_ngrams_spark_sql,
 )
 
 DEFAULT_NGRAM_WORDS = 8
 
 
-def _gram_hash(col: str, portable: bool):
-    return portable_hash64(col) if portable else F.xxhash64(col)
-
-
 def _gram_hash_sql(expr: str, portable: bool) -> str:
-    from inbev_data_engineering_case_spark.functions import (
-        portable_hash64_spark_sql,
-    )
-
     return (
         portable_hash64_spark_sql(expr)
         if portable
@@ -66,13 +59,8 @@ def benchmark_ngram_hashes(
     broadcast; persist it when scanning multiple corpus shards.
 
     Built as SQL text parsed once per projection (r16 — the
-    score_documents/minhash discipline): identical parsed tree, ~10× less
-    driver-side py4j plan-build per run."""
-    from inbev_data_engineering_case_spark.functions import (
-        sql_ident,
-        word_ngrams_spark_sql,
-    )
-
+    score_documents/minhash discipline): ~10× less driver-side plan-build
+    per run than a py4j Column tree."""
     grams = word_ngrams_spark_sql(f"lower({sql_ident(text_col)})", n)
     return (
         benchmark.selectExpr(f"explode({grams}) AS gram")
@@ -101,10 +89,6 @@ def contamination_report(
     file would otherwise pin it to 1-2 cores (measured 3.2s single-core
     vs 0.5s guarded on the sf0.1 fixture); at cluster scan sizes the
     guard is a metadata-only no-op (r15 optimization round, guide §2)."""
-    from inbev_data_engineering_case_spark.functions import (
-        sql_ident,
-        word_ngrams_spark_sql,
-    )
     from inbev_data_engineering_case_spark.operators.dedup import (
         _ensure_parallelism,
     )
@@ -171,13 +155,16 @@ def boilerplate_report(
         _materialize,
     )
 
+    grams = word_ngrams_spark_sql(f"lower({sql_ident(text_col)})", n)
     grams = _materialize(
-        _ensure_parallelism(documents).select(
-            F.col(id_col),
-            F.explode(
-                F.array_distinct(word_ngrams(F.lower(F.col(text_col)), n))
-            ).alias("gram"),
-        ).select(id_col, _gram_hash("gram", portable).alias("gram_h")),
+        _ensure_parallelism(documents)
+        .selectExpr(
+            sql_ident(id_col), f"explode(array_distinct({grams})) AS gram"
+        )
+        .selectExpr(
+            sql_ident(id_col),
+            f"{_gram_hash_sql('gram', portable)} AS gram_h",
+        ),
         materialize_mode,
     )
     hot = (
@@ -292,14 +279,14 @@ def semantic_contamination(
             F.col(id_col).alias("corpus_id"),
             F.col(vec_col).alias("_cv"),
             signlsh_bucket(
-                vec_col, num_planes, seed=seed, dim=dim
+                sql_ident(vec_col), num_planes, seed=seed, dim=dim
             ).alias("bucket"),
         )
         b = bench_emb.select(
             F.col(id_col).alias("bench_id"),
             F.col(vec_col).alias("_bv"),
             signlsh_bucket(
-                vec_col, num_planes, seed=seed, dim=dim
+                sql_ident(vec_col), num_planes, seed=seed, dim=dim
             ).alias("bucket"),
         )
         sim = F.round(cosine(F.col("_cv"), F.col("_bv")), 6)

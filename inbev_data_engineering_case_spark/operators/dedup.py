@@ -42,16 +42,16 @@ from pyspark.sql import functions as F
 from inbev_data_engineering_case_spark.functions import (
     MH_PRIME,
     MH_RANGE,
-    WS_RE,
-    char_ngrams,
+    char_ngrams_spark_sql,
     minhash_mixers,
-    portable_hash64,
-    sql_str as _sql_str_dedup,
-    word_ngrams,
+    portable_hash64_spark_sql,
+    sql_ident,
+    tokens_spark_sql,
+    word_ngrams_spark_sql,
 )
 from inbev_data_engineering_case_spark.operators.textops import (
     fingerprint,
-    normalize_for_fingerprint,
+    normalize_spark_sql,
 )
 
 DEFAULT_NUM_HASHES = 8
@@ -294,7 +294,9 @@ def exact_dedup(
     deterministic (the reference's dropDuplicates keeps an arbitrary row —
     unacceptable when results must be reproducible across retries/AQE)."""
     return (
-        df.select(F.col(id_col), fingerprint(text_col).alias("fp"))
+        df.select(
+            F.col(id_col), fingerprint(sql_ident(text_col)).alias("fp")
+        )
         .groupBy("fp")
         .agg(
             F.min(id_col).alias("keep_id"),
@@ -303,16 +305,22 @@ def exact_dedup(
     )
 
 
-def shingle_set(text: Column | str, n: int = DEFAULT_SHINGLE) -> Column:
-    """Distinct character n-gram shingles of the normalized text."""
-    return F.array_distinct(char_ngrams(normalize_for_fingerprint(text), n))
+def shingle_set(text: str, n: int = DEFAULT_SHINGLE) -> Column:
+    """Distinct character n-gram shingles of the normalized text (``text``
+    is SQL expression text)."""
+    grams = char_ngrams_spark_sql(normalize_spark_sql(text), n)
+    return F.expr(f"array_distinct({grams})")
 
 
-def word_shingle_set(
-    text: Column | str, n: int = DEFAULT_SHINGLE_WORDS
-) -> Column:
-    """Distinct word n-gram shingles of the normalized text."""
-    return F.array_distinct(word_ngrams(normalize_for_fingerprint(text), n))
+def _word_shingle_set_spark_sql(text: str, n: int) -> str:
+    grams = word_ngrams_spark_sql(normalize_spark_sql(text), n)
+    return f"array_distinct({grams})"
+
+
+def word_shingle_set(text: str, n: int = DEFAULT_SHINGLE_WORDS) -> Column:
+    """Distinct word n-gram shingles of the normalized text (``text`` is
+    SQL expression text)."""
+    return F.expr(_word_shingle_set_spark_sql(text, n))
 
 
 def minhash_signatures(
@@ -332,25 +340,11 @@ def minhash_signatures(
     projection so the shingling itself also runs once, not per k.
 
     Both projections are built as SQL text and parsed with one
-    ``selectExpr`` each (r16 optimization round, the ``signlsh``/
-    ``simhash`` discipline): the Column-API form paid ~0.3s of py4j tree
-    construction per plan build — every run of every minhash consumer —
-    for the identical parsed tree (same CASE/transform shingle shape,
-    same conv/md5 hash chain, same int literals; value parity pinned by
-    ``test_minhash_signatures_expr_parity`` and the oracle sweep)."""
-    from inbev_data_engineering_case_spark.functions import (
-        portable_hash64_spark_sql,
-        sql_ident,
-        word_ngrams_spark_sql,
-    )
-
-    norm = (
-        f"regexp_replace(lower(trim({sql_ident(text_col)})),"
-        f" {_sql_str_dedup(WS_RE)}, ' ')"
-    )
-    shingles = (
-        f"array_distinct({word_ngrams_spark_sql(norm, shingle_words)})"
-    )
+    ``selectExpr`` each — a py4j Column tree of the same expression cost
+    ~0.3s of driver time per plan build. Values are pinned against the
+    DuckDB oracle by ``test_minhash_signatures_expr_parity`` and the
+    oracle sweep."""
+    shingles = _word_shingle_set_spark_sql(sql_ident(text_col), shingle_words)
     base = (
         f"transform({shingles},"
         f" s -> {portable_hash64_spark_sql('s')} % {MH_RANGE})"
@@ -369,8 +363,6 @@ def _band_keys(sig_col: str, band_size: int) -> Column:
     the identical tree (r16 — the minhash_signatures discipline;
     ``sig_col`` is an unqualified column name by the string-fast-path
     contract)."""
-    from inbev_data_engineering_case_spark.functions import sql_ident
-
     sig = sql_ident(sig_col)
     return F.expr(
         f"transform(sequence(0, CAST(floor(size({sig}) / {band_size})"
@@ -566,7 +558,8 @@ def jaccard_similarity(
     |A ∩ B| / |A ∪ B| over distinct shingle sets. Shingling is the
     compute-heavy part — parallelism-guarded like the signature stages."""
     sh = _ensure_parallelism(docs).select(
-        F.col(id_col).alias("id"), shingle_set(text_col, shingle).alias("sh")
+        F.col(id_col).alias("id"),
+        shingle_set(sql_ident(text_col), shingle).alias("sh"),
     )
     a = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
@@ -579,111 +572,85 @@ def jaccard_similarity(
     )
 
 
-def token_hashes(text: Column | str) -> Column:
-    """array<long> of per-token portable hashes over the lowercased text —
-    the (md5-bearing, expensive) half of SimHash, split out so callers can
-    project it ONCE before computing the signature. Folding it into the
-    signature expression would embed the md5 transform in every per-bit
-    vote and hash each token ``bits`` times."""
-    from inbev_data_engineering_case_spark.functions import tokens
+def token_hashes_spark_sql(text: str) -> str:
+    """array<long> of per-token portable hashes over the lowercased text
+    (SQL text in, SQL text out) — the (md5-bearing, expensive) half of
+    SimHash, split out so callers can project it ONCE before computing
+    the signature. Folding it into the signature expression would embed
+    the md5 transform in every per-bit vote and hash each token ``bits``
+    times."""
+    toks = tokens_spark_sql(f"lower({text})")
+    return f"transform({toks}, t -> {portable_hash64_spark_sql('t')})"
 
-    toks = tokens(F.lower(F.col(text) if isinstance(text, str) else text))
-    return F.transform(toks, lambda t: portable_hash64(t))
+
+def token_hashes(text: str) -> Column:
+    """``F.expr`` of ``token_hashes_spark_sql``."""
+    return F.expr(token_hashes_spark_sql(text))
 
 
-def simhash_from_hashes(hashes: Column | str, bits: int = 60) -> Column:
-    """SimHash signature from a token-hash array column: bit b of the
+def simhash_spark_sql(hashes: str, bits: int = 60) -> str:
+    """SimHash signature of a token-hash array (SQL text): bit b of the
     output is the sign of the majority vote of bit b over all hashes.
     One array aggregate with an array<long> vote accumulator — a single
-    pass over the tokens regardless of ``bits``.
+    pass over the tokens regardless of ``bits`` — and the votes array is
+    referenced once. Votes are integers; a NULL token array hashes to 0
+    through the explicit coalesce.
 
     Default 60 bits = the full width of ``portable_hash64`` (see module
     docstring): at billions of documents a 32-bit signature
     under-discriminates (birthday collisions at ~2^16 docs), while wider
     than 60 is impossible for this hash family — those hash bits are
-    never set, so their majority vote is constant.
-
-    With a string column name the expression is built as ONE ``F.expr``
-    parse (r15 wave 3): the Column-API form cost 0.89s of py4j
-    round-trips per plan build (60 mask literals + a 60-term sum chain,
-    each term re-referencing the votes subtree), while the SQL form
-    parses in milliseconds and references the votes array exactly once
-    (bit-for-bit identical: integer votes, same per-bit majority rule,
-    NULL token arrays still hash to 0 via the explicit coalesce —
-    parity-tested against the Column path). The string form treats the
-    name as one UNQUALIFIED top-level column — it is backtick-quoted as
-    a single identifier, so a dotted name is NOT resolved as a struct
-    field or alias-qualified path the way ``F.col`` would (r15 ADVICE);
-    pass a Column for nested references."""
-    if isinstance(hashes, str):
-        h = "`" + hashes.replace("`", "``") + "`"
-        masks_sql = ",".join(f"{1 << b}L" for b in range(bits))
-        votes_sql = (
-            f"aggregate({h}, array_repeat(CAST(0 AS BIGINT), {bits}),"
-            f" (acc, hh) -> zip_with(acc, transform(array({masks_sql}),"
-            " m -> CASE WHEN (hh & m) != 0 THEN CAST(1 AS BIGINT)"
-            " ELSE CAST(-1 AS BIGINT) END), (a, v) -> a + v))"
-        )
-        return F.expr(
-            f"coalesce(aggregate(zip_with({votes_sql},"
-            f" sequence(0, {bits - 1}),"
-            " (v, b) -> CASE WHEN v > 0 THEN"
-            " shiftleft(CAST(1 AS BIGINT), b)"
-            " ELSE CAST(0 AS BIGINT) END),"
-            " CAST(0 AS BIGINT), (acc, x) -> acc + x),"
-            " CAST(0 AS BIGINT))"
-        )
-    masks = F.array(*[F.lit(1 << b).cast("long") for b in range(bits)])
-
-    votes = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0).cast("long"), bits),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.transform(
-                masks,
-                lambda m: F.when(
-                    h.bitwiseAND(m) != 0, F.lit(1).cast("long")
-                ).otherwise(F.lit(-1).cast("long")),
-            ),
-            lambda a, v: a + v,
-        ),
+    never set, so their majority vote is constant."""
+    masks_sql = ",".join(f"{1 << b}L" for b in range(bits))
+    votes_sql = (
+        f"aggregate({hashes}, array_repeat(CAST(0 AS BIGINT), {bits}),"
+        f" (acc, hh) -> zip_with(acc, transform(array({masks_sql}),"
+        " m -> CASE WHEN (hh & m) != 0 THEN CAST(1 AS BIGINT)"
+        " ELSE CAST(-1 AS BIGINT) END), (a, v) -> a + v))"
     )
-    out = F.lit(0).cast("long")
-    for b in range(bits):
-        out = out + F.when(
-            F.element_at(votes, b + 1) > 0, F.lit(1 << b).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-    return out
+    return (
+        f"coalesce(aggregate(zip_with({votes_sql},"
+        f" sequence(0, {bits - 1}),"
+        " (v, b) -> CASE WHEN v > 0 THEN"
+        " shiftleft(CAST(1 AS BIGINT), b)"
+        " ELSE CAST(0 AS BIGINT) END),"
+        " CAST(0 AS BIGINT), (acc, x) -> acc + x),"
+        " CAST(0 AS BIGINT))"
+    )
 
 
-def simhash(text: Column | str, bits: int = 60) -> Column:
-    """SimHash signature of a text column (see ``simhash_from_hashes``).
+def simhash_from_hashes(hashes: str, bits: int = 60) -> Column:
+    """``F.expr`` of ``simhash_spark_sql`` over a token-hash array
+    (``hashes`` is SQL expression text, e.g. the column name of a
+    projected ``token_hashes``)."""
+    return F.expr(simhash_spark_sql(hashes, bits))
+
+
+def simhash(text: str, bits: int = 60) -> Column:
+    """SimHash signature of a text expression (see ``simhash_spark_sql``).
     Prefer the two-step form (project ``token_hashes`` first) in pipelines —
     as a single inline expression the `votes` subtree references the token
     hashing once, so this is safe, but the two-step form keeps the md5 work
     visible and shareable."""
-    return simhash_from_hashes(token_hashes(text), bits)
+    return F.expr(simhash_spark_sql(token_hashes_spark_sql(text), bits))
 
 
-def _truncate_lineage(
-    df: DataFrame, reliable: bool, eager: bool = True
-) -> DataFrame:
+def _truncate_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
     """Cut the plan between iterations so it doesn't grow per round.
-    ``reliable=True`` → fault-tolerant ``checkpoint()`` to the session's
-    checkpoint dir (HDFS/object store on a cluster — survives executor
-    loss); ``False`` → ``localCheckpoint`` (executor-block storage: fast,
-    no filesystem, but recomputes-from-nothing on executor failure — the
-    local/test fast path). EAGER by default: an r15 A/B tried a lazy cut
-    for an intermediate whose first consumer references it TWICE in one
-    plan (the jump join) and measured a 2× loss — under AQE each
-    reference of a not-yet-materialized lazy checkpoint recomputes the
-    subtree instead of sharing blocks. ``eager=False`` is correct ONLY
+    When the SparkContext has a checkpoint dir → fault-tolerant
+    ``checkpoint()`` there (HDFS/object store on a cluster — survives
+    executor loss); otherwise → ``localCheckpoint`` (executor-block
+    storage: fast, no filesystem, but recomputes-from-nothing on
+    executor failure — the local/test fast path). EAGER by default: an
+    r15 A/B tried a lazy cut for an intermediate whose first consumer
+    references it TWICE in one plan (the jump join) and measured a 2×
+    loss — under AQE each reference of a not-yet-materialized lazy
+    checkpoint recomputes the subtree instead of sharing blocks. ``eager=False`` is correct ONLY
     when a single-reference action (e.g. the convergence aggregate)
     runs immediately after and materializes the blocks for every later
     consumer — that fuses the materialization barrier into an action
     the loop pays anyway (r15 wave 3)."""
-    if reliable:
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
 
@@ -706,7 +673,6 @@ COMPONENTS_BROADCAST_NODE_LIMIT = 2_000_000
 def dedup_components_with_stats(
     pairs: DataFrame,
     max_iter: int = 25,
-    reliable_checkpoint: bool | None = None,
     require_convergence: bool = False,
 ) -> tuple[DataFrame, int]:
     """Connected components of the near-dup pair graph → ((node, comp),
@@ -722,19 +688,13 @@ def dedup_components_with_stats(
     (the 100 TB failure mode: organic near-dup chains through shared
     boilerplate can be arbitrarily long; with jumping, 25 iterations cover
     diameter ~2^25). Each round is two shuffle joins + one groupBy, with
-    lineage truncated per round.
-
-    ``reliable_checkpoint``: None → auto (reliable iff the SparkContext has
-    a checkpoint dir configured); True forces ``checkpoint()`` (cluster
-    mode, requires ``sc.setCheckpointDir``); False forces
-    ``localCheckpoint`` (single-node fast path).
+    lineage truncated per round (``_truncate_lineage``: a reliable
+    ``checkpoint()`` when the SparkContext has a checkpoint dir, else
+    ``localCheckpoint``).
 
     This is the canonical iterative-algorithm shape Spark SQL cannot express
     in one query; the DuckDB oracle uses a recursive CTE instead.
     """
-    if reliable_checkpoint is None:
-        sc = pairs.sparkSession.sparkContext
-        reliable_checkpoint = sc.getCheckpointDir() is not None
     edges = pairs.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     )
@@ -787,7 +747,6 @@ def dedup_components_with_stats(
             )
         )
         .distinct(),
-        reliable_checkpoint,
         eager=False,
     )
     # Fused first propagation (r15 optimization round): under identity
@@ -803,7 +762,6 @@ def dedup_components_with_stats(
         edges.select(F.col("dst").alias("node"), F.col("src").alias("comp"))
         .groupBy("node")
         .agg(F.min("comp").alias("comp")),
-        reliable_checkpoint,
         eager=False,
     )
 
@@ -859,7 +817,6 @@ def dedup_components_with_stats(
             .select(F.col("dst").alias("node"), "comp")
             .groupBy("node")
             .agg(F.min("comp").alias("comp")),
-            reliable_checkpoint,
             eager=False,
         )
         cur_sum, _ = label_sum(neighbor_min)
@@ -889,7 +846,6 @@ def dedup_components_with_stats(
                 "node",
                 F.coalesce("jcomp", "comp").alias("comp"),
             ),
-            reliable_checkpoint,
             eager=False,
         )
         labels = jumped
@@ -909,13 +865,12 @@ def dedup_components_with_stats(
 def dedup_components(
     pairs: DataFrame,
     max_iter: int = 25,
-    reliable_checkpoint: bool | None = None,
     require_convergence: bool = False,
 ) -> DataFrame:
     """See ``dedup_components_with_stats`` — this is the DataFrame-only
     convenience wrapper."""
     labels, _ = dedup_components_with_stats(
-        pairs, max_iter, reliable_checkpoint, require_convergence
+        pairs, max_iter, require_convergence
     )
     return labels
 
@@ -924,7 +879,6 @@ def dedup_components_incremental(
     stored_labels: DataFrame,
     new_pairs: DataFrame,
     max_iter: int = 25,
-    reliable_checkpoint: bool | None = None,
 ) -> DataFrame:
     """Delta maintenance of a ``dedup_components`` labeling → the full
     updated ``(node, comp)`` table, row-identical to re-running the
@@ -964,9 +918,6 @@ def dedup_components_incremental(
     node-sized store — no full-graph work anywhere. Same output
     contract as ``dedup_components``: one row per node that appears
     in (stored ∪ delta)."""
-    if reliable_checkpoint is None:
-        sc = new_pairs.sparkSession.sparkContext
-        reliable_checkpoint = sc.getCheckpointDir() is not None
     lab_a = stored_labels.select(
         F.col("node").alias("_na"), F.col("comp").alias("_ca")
     )
@@ -980,8 +931,7 @@ def dedup_components_incremental(
         new_pairs.select(
             F.col("id_a").cast("long").alias("id_a"),
             F.col("id_b").cast("long").alias("id_b"),
-        ),
-        reliable_checkpoint,
+        )
     )
     mapped = (
         e.join(lab_a, e["id_a"] == lab_a["_na"], "left")
@@ -993,13 +943,10 @@ def dedup_components_incremental(
     )
     # the meta closure is delta-sized: strict convergence costs
     # nothing. Its result is already materialized (every components
-    # round ends in _truncate_lineage, honoring reliable_checkpoint),
-    # so both consumers below read it without extra pinning.
+    # round ends in _truncate_lineage), so both consumers below read it
+    # without extra pinning.
     meta = dedup_components(
-        mapped,
-        max_iter=max_iter,
-        reliable_checkpoint=reliable_checkpoint,
-        require_convergence=True,
+        mapped, max_iter=max_iter, require_convergence=True
     )
     remap = F.broadcast(
         meta.select(F.col("node").alias("_mn"), F.col("comp").alias("_mc"))
@@ -1055,9 +1002,7 @@ def embedding_near_dup_pairs(
     )
 
     base = _ensure_parallelism(emb)
-    # literal plane weights via a 1-row dim probe (r15): bit-identical
-    # buckets, per-row cost drops from planes·d md5 hashes to plain
-    # multiplications
+    # one 1-row dim probe sizes the literal plane weights for every seed
     dim = _vec_dim(emb, vec_col)
     per_probe = []
     for seed in range(n_probes):
@@ -1066,7 +1011,7 @@ def embedding_near_dup_pairs(
                 F.col(id_col).alias("id"),
                 F.col(vec_col).alias("v"),
                 signlsh_bucket(
-                    vec_col, num_planes, seed=seed, dim=dim
+                    sql_ident(vec_col), num_planes, seed=seed, dim=dim
                 ).alias("bucket"),
             ),
             materialize_mode,
@@ -1231,7 +1176,7 @@ def build_embedding_sig_table(
             F.col(id_col).alias("id"),
             F.col(vec_col).alias("v"),
             signlsh_bucket(
-                vec_col, num_planes, seed=seed, dim=dim
+                sql_ident(vec_col), num_planes, seed=seed, dim=dim
             ).alias("bucket"),
             # build geometry rides the state (the CMS wrong-geometry
             # discipline): the incremental path raises in-plan on a
@@ -1286,7 +1231,7 @@ def build_embedding_sig_tables_normalized(
             F.lit(seed).alias("seed"),
             F.col(id_col).alias("id"),
             signlsh_bucket(
-                vec_col, num_planes, seed=seed, dim=dim
+                sql_ident(vec_col), num_planes, seed=seed, dim=dim
             ).alias("bucket"),
             F.lit(num_planes).alias("num_planes"),
             F.lit(n_probes).alias("n_probes"),
@@ -1474,7 +1419,7 @@ def incremental_embedding_near_dup_normalized(
             F.lit(seed).alias("seed"),
             F.col(id_col).alias("id"),
             signlsh_bucket(
-                vec_col, num_planes, seed=seed, dim=dim
+                sql_ident(vec_col), num_planes, seed=seed, dim=dim
             ).alias("bucket"),
         )
         for seed in range(n_probes)
@@ -1597,7 +1542,8 @@ def simhash_near_pairs(
     are equal by construction); above the cap the bucket star-links to its
     min-id representative, with the same popcount ≤ max_hamming verify."""
     hashed = _ensure_parallelism(df).select(
-        F.col(id_col).alias("id"), token_hashes(text_col).alias("th")
+        F.col(id_col).alias("id"),
+        token_hashes(sql_ident(text_col)).alias("th"),
     )
     sigs = _materialize(
         hashed.select("id", simhash_from_hashes("th", bits).alias("sh"))
@@ -1661,7 +1607,8 @@ def build_simhash_table(
     historical corpus (``build_gram_table``'s stored-state contract,
     SimHash flavor). Bucket by ``bucket`` at scale."""
     hashed = df.select(
-        F.col(id_col).alias("id"), token_hashes(text_col).alias("th")
+        F.col(id_col).alias("id"),
+        token_hashes(sql_ident(text_col)).alias("th"),
     )
     return (
         hashed.select("id", simhash_from_hashes("th", bits).alias("sh"))
@@ -1818,7 +1765,7 @@ def dedup_spans(
         raise ValueError("dedup_spans: max_docs must be >= 1")
     k = span_tokens
     arr = documents.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col), tokens(F.col(text_col)).alias("_toks")
+        F.col(id_col), tokens(sql_ident(text_col)).alias("_toks")
     )
     # size(_toks) >= 1 always holds today (split(trim(x)) yields at
     # least ['']), but sequence(0, -1) would auto-step DOWNWARD and
@@ -1841,7 +1788,7 @@ def dedup_spans(
         id_col,
         F.col("s.seg_no").alias("seg_no"),
         F.col("s.seg").alias("seg"),
-        portable_hash64(F.lower(F.col("s.seg"))).alias("fp"),
+        portable_hash64("lower(s.seg)").alias("fp"),
     )
     hot = (
         segs.groupBy("fp")
@@ -1903,12 +1850,10 @@ def build_gram_table(
     choice rides the state as a geometry column so a delta built with
     the other hash raises in-plan instead of silently matching
     nothing)."""
-    from inbev_data_engineering_case_spark.functions import (
-        portable_hash64,
-        word_ngrams,
+    from inbev_data_engineering_case_spark.operators.decontaminate import (
+        _gram_hash_sql,
     )
 
-    gram = F.col("gram")
     # the gram pass is compute-bound per row (tokenize → windows → md5
     # per gram) — inherit the signature stages' parallelism guard so a
     # 1-2-split input file doesn't pin it to 1-2 cores (no-op at
@@ -1921,22 +1866,18 @@ def build_gram_table(
     # 2.6s on the incremental containment line before the opt-out.
     if parallelism_guard:
         documents = _ensure_parallelism(documents)
-    return documents.select(
-        F.col(id_col),
-        F.explode(
-            F.array_distinct(word_ngrams(F.lower(F.col(text_col)), n))
-        ).alias("gram"),
-    ).select(
-        id_col,
-        (portable_hash64(gram) if portable else F.xxhash64(gram)).alias(
-            "gram_h"
-        ),
+    grams = word_ngrams_spark_sql(f"lower({sql_ident(text_col)})", n)
+    return documents.selectExpr(
+        sql_ident(id_col), f"explode(array_distinct({grams})) AS gram"
+    ).selectExpr(
+        sql_ident(id_col),
+        f"{_gram_hash_sql('gram', portable)} AS gram_h",
         # build geometry rides the state (the CMS wrong-geometry
         # discipline): the incremental path raises in-plan on a
         # mismatched n (mixed gram spaces) or a mismatched hash kind
         # (a delta hashed differently would match NOTHING, silently)
-        F.lit(n).alias("n"),
-        F.lit(int(portable)).alias("portable"),
+        f"{n} AS n",
+        f"{int(portable)} AS portable",
     )
 
 

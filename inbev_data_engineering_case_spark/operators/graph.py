@@ -239,7 +239,6 @@ def multi_source_bfs(
     src_col: str = "src",
     dst_col: str = "dst",
     directed: bool = False,
-    reliable_checkpoint: bool | None = None,
 ) -> DataFrame:
     """Level-synchronous multi-source BFS → ``(node, dist)`` for every
     node within ``max_hops`` of ANY seed (``dist`` = hops to the
@@ -276,9 +275,6 @@ def multi_source_bfs(
 
     if max_hops < 0:
         raise ValueError("multi_source_bfs: max_hops must be >= 0")
-    if reliable_checkpoint is None:
-        sc = edges.sparkSession.sparkContext
-        reliable_checkpoint = sc.getCheckpointDir() is not None
     sym = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     )
@@ -301,7 +297,7 @@ def multi_source_bfs(
     # count fully materializes the frontier's blocks, so the next hop's
     # two references (frontier join + dist union) read blocks instead
     # of racing to recompute straggler partitions.
-    sym = _truncate_lineage(sym.distinct(), reliable_checkpoint, eager=False)
+    sym = _truncate_lineage(sym.distinct(), eager=False)
 
     # Deliberate join strategy (guide §3.1, the components loop's gate):
     # the frontier and visited tables are checkpoint-backed (no size
@@ -326,7 +322,6 @@ def multi_source_bfs(
         seeds.select(F.col(seed_col).cast("long").alias("node"))
         .distinct()
         .withColumn("dist", F.lit(0)),
-        reliable_checkpoint,
     )
     # one count over the just-materialized seed blocks: the size fact
     # both hop-1 join gates need
@@ -345,7 +340,6 @@ def multi_source_bfs(
                 on="node",
                 how="left_anti",
             ).withColumn("dist", F.lit(hop)),
-            reliable_checkpoint,
             eager=False,
         )
         frontier_n = new.count()  # the hop's one action; materializes `new`
@@ -353,7 +347,7 @@ def multi_source_bfs(
             break
         dist_n += frontier_n
         dist = _truncate_lineage(
-            dist.unionByName(new), reliable_checkpoint, eager=False
+            dist.unionByName(new), eager=False
         )
         frontier = new.select("node")
     return dist
@@ -368,7 +362,6 @@ def multi_source_bfs_incremental(
     src_col: str = "src",
     dst_col: str = "dst",
     directed: bool = False,
-    reliable_checkpoint: bool | None = None,
 ) -> DataFrame:
     """Delta maintenance of a ``multi_source_bfs`` result → the full
     updated ``(node, dist)`` table, row-identical to re-running the
@@ -419,9 +412,6 @@ def multi_source_bfs_incremental(
         raise ValueError(
             "multi_source_bfs_incremental: max_hops must be >= 0"
         )
-    if reliable_checkpoint is None:
-        sc = all_edges.sparkSession.sparkContext
-        reliable_checkpoint = sc.getCheckpointDir() is not None
 
     def _raw(edges: DataFrame) -> DataFrame:
         return edges.select(
@@ -446,7 +436,6 @@ def multi_source_bfs_incremental(
         _symmetrize(
             _raw(all_edges).unionByName(_raw(new_edges))
         ).distinct(),
-        reliable_checkpoint,
     )
     seed_col = new_seeds.columns[0]
     seeds0 = (
@@ -464,7 +453,6 @@ def multi_source_bfs_incremental(
         stored.unionByName(seeds0)
         .groupBy("node")
         .agg(F.min("dist").alias("dist")),
-        reliable_checkpoint,
     )
     # change frontier: new seeds + new-edge endpoints that already
     # carry a distance (their dist may now propagate across the delta)
@@ -478,7 +466,6 @@ def multi_source_bfs_incremental(
         seeds0.unionByName(touched)
         .groupBy("node")
         .agg(F.min("dist").alias("dist")),
-        reliable_checkpoint,
     )
     for _ in range(max_hops):
         cand = (
@@ -497,14 +484,12 @@ def multi_source_bfs_incremental(
                 F.col("dist").isNull() | (F.col("_cand") < F.col("dist"))
             )
             .select("node", F.col("_cand").alias("dist")),
-            reliable_checkpoint,
         )
         if not improved.take(1):
             break
         dist = _truncate_lineage(
             dist.join(improved.select("node"), on="node", how="left_anti")
             .unionByName(improved),
-            reliable_checkpoint,
         )
         frontier = improved
     return dist

@@ -170,11 +170,17 @@ def heavy_hitters(
     and no silent wrap can disagree between engines. Returns
     ``(item, cnt, share_ppm)``.
     """
-    from inbev_data_engineering_case_spark.functions import portable_hash64
+    from inbev_data_engineering_case_spark.functions import (
+        portable_hash64,
+        sql_ident,
+        sql_str,
+    )
 
     n = df.agg(F.count("*").alias("_n"))
     sampled = df.filter(
-        portable_hash64(F.concat(F.lit(seed), F.col(id_col).cast("string")))
+        portable_hash64(
+            f"concat({sql_str(seed)}, CAST({sql_ident(id_col)} AS STRING))"
+        )
         % 1_000_000
         < sample_ppm
     )

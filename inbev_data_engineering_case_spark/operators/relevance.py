@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from inbev_data_engineering_case_spark.functions import tokens
+from inbev_data_engineering_case_spark.functions import sql_ident, tokens
 
 
 def term_frequencies(
@@ -46,7 +46,7 @@ def term_frequencies(
     return (
         documents.select(
             F.col(id_col),
-            F.explode(tokens(F.lower(F.col(text_col)))).alias("term"),
+            F.explode(tokens(f"lower({sql_ident(text_col)})")).alias("term"),
         )
         .groupBy(id_col, "term")
         .agg(F.count("*").alias("tf"))
@@ -80,7 +80,7 @@ def bigram_lm_scores(
     integers — bit-identical on any engine (the same discipline as the
     PQ ADC distances)."""
     arr = documents.select(
-        F.col(id_col), tokens(F.lower(F.col(text_col))).alias("_toks")
+        F.col(id_col), tokens(f"lower({sql_ident(text_col)})").alias("_toks")
     )
     # bigrams formed IN-ROW from the token array (lambda over the tail
     # slice, predecessor by index — no posexplode self-join, no
@@ -221,14 +221,14 @@ def bm25_topk(
     terms = sorted({t.lower() for t in query_terms})
     toks = documents.select(
         F.col(id_col),
-        F.explode(tokens(F.lower(F.col(text_col)))).alias("term"),
+        F.explode(tokens(f"lower({sql_ident(text_col)})")).alias("term"),
     )
     # dl in-row: size(tokens) equals the explode count exactly (empty
     # text tokenizes to [''] -> size 1; NULL text -> NULL dl, excluded
     # from avg the same way explode excluded the row)
     doc_len = documents.select(
         F.col(id_col),
-        F.size(tokens(F.lower(F.col(text_col)))).alias("dl"),
+        F.size(tokens(f"lower({sql_ident(text_col)})")).alias("dl"),
     )
     stats = documents.agg(F.count("*").alias("_n")).join(
         doc_len.agg(F.avg("dl").alias("_avgdl"))
@@ -330,7 +330,7 @@ def pmi_collocations(
     # exchanges in the whole operator are the gram-keyed aggregations
     pairs = (
         documents.select(
-            tokens(F.lower(F.col(text_col))).alias("_toks")
+            tokens(f"lower({sql_ident(text_col)})").alias("_toks")
         )
         .select(
             F.explode(
@@ -525,7 +525,7 @@ def build_text_index(
 
     toks = documents.select(
         F.col(id_col),
-        F.explode(tokens(F.lower(F.col(text_col)))).alias("term"),
+        F.explode(tokens(f"lower({sql_ident(text_col)})")).alias("term"),
     )
     tf = toks.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
     spark = documents.sparkSession
@@ -697,7 +697,7 @@ def update_text_index(
 
     toks = changed_docs.select(
         F.col(id_col),
-        F.explode(tokens(F.lower(F.col(text_col)))).alias("term"),
+        F.explode(tokens(f"lower({sql_ident(text_col)})")).alias("term"),
     )
     delta_tf = toks.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
     delta_doclen = delta_tf.groupBy(id_col).agg(F.sum("tf").alias("dl"))

@@ -21,17 +21,19 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from inbev_data_engineering_case_spark.functions import portable_hash64
+from inbev_data_engineering_case_spark.functions import (
+    portable_hash64,
+    sql_ident,
+)
 
 SAMPLE_BUCKETS = 1_000_000
 
 
-def sample_predicate(
-    id_col: Column | str, fraction: float, salt: int = 0
-) -> Column:
-    """Deterministic Bernoulli membership: true for ~``fraction`` of ids.
-    Different ``salt`` values draw independent samples."""
-    bucket = portable_hash64(id_col, seed=salt) % SAMPLE_BUCKETS
+def sample_predicate(id_col: str, fraction: float, salt: int = 0) -> Column:
+    """Deterministic Bernoulli membership: true for ~``fraction`` of ids
+    (``id_col`` is a column name). Different ``salt`` values draw
+    independent samples."""
+    bucket = portable_hash64(sql_ident(id_col), seed=salt) % SAMPLE_BUCKETS
     return bucket < int(fraction * SAMPLE_BUCKETS)
 
 
@@ -50,7 +52,7 @@ def stratified_sample(
     The per-stratum threshold is a small CASE expression (fractions are
     config, not data), so the whole filter is one codegen'd predicate over
     the scan: no join, no shuffle, prunes before anything downstream."""
-    bucket = portable_hash64(id_col, seed=salt) % SAMPLE_BUCKETS
+    bucket = portable_hash64(sql_ident(id_col), seed=salt) % SAMPLE_BUCKETS
     threshold: Column = F.lit(int(default_fraction * SAMPLE_BUCKETS))
     for value, frac in sorted(fractions.items()):
         threshold = F.when(
@@ -820,7 +822,7 @@ def mixture_sample(
     ``weight_col`` switches the targeted composition from rows to
     per-row units (tokens/chars) — see ``mixture_rates``."""
     rates = mixture_rates(df, strata_col, target_ppm, weight_col)
-    bucket = portable_hash64(id_col, seed=salt) % SAMPLE_BUCKETS
+    bucket = portable_hash64(sql_ident(id_col), seed=salt) % SAMPLE_BUCKETS
     return (
         df.join(F.broadcast(rates.select(strata_col, "rate_ppm")), strata_col)
         .filter(bucket < F.col("rate_ppm"))
@@ -841,7 +843,7 @@ def deterministic_shuffle(
     total-order exchange (sampled range boundaries keep partitions even
     because the hash is uniform). ``keep_key=True`` surfaces the sort key
     as a ``shuffle_key`` column (auditing / oracle checks)."""
-    key = portable_hash64(id_col, seed=salt)
+    key = portable_hash64(sql_ident(id_col), seed=salt)
     if keep_key:
         return df.withColumn("shuffle_key", key).orderBy("shuffle_key")
     return df.orderBy(key)
@@ -885,7 +887,9 @@ def weighted_sample(
     """
     w = F.col(weight_col) if isinstance(weight_col, str) else weight_col
     u = (
-        (portable_hash64(id_col, seed=salt) % SAMPLE_BUCKETS).cast("double")
+        (
+            portable_hash64(sql_ident(id_col), seed=salt) % SAMPLE_BUCKETS
+        ).cast("double")
         + 0.5
     ) / SAMPLE_BUCKETS
     key = -F.log(u) / w.cast("double")
@@ -943,9 +947,6 @@ def cap_per_source(
     """
     from pyspark.sql.window import Window
 
-    from inbev_data_engineering_case_spark.functions import (
-        portable_hash64,
-    )
     from inbev_data_engineering_case_spark.operators.textops import (
         quality_score,
     )
@@ -957,7 +958,7 @@ def cap_per_source(
     qexpr = (
         F.col(quality_col)
         if quality_col is not None
-        else quality_score(text_col)
+        else quality_score(sql_ident(text_col))
     )
     scored = documents.select(
         F.col(id_col),
@@ -967,7 +968,10 @@ def cap_per_source(
     if presalt:
         wpre = Window.partitionBy(
             group_col,
-            F.pmod(portable_hash64(F.col(id_col).cast("string")), F.lit(presalt)),
+            F.pmod(
+                portable_hash64(f"CAST({sql_ident(id_col)} AS STRING)"),
+                F.lit(presalt),
+            ),
         ).orderBy(F.col("quality_r").desc(), F.col(id_col).asc())
         scored = (
             scored.withColumn("_pre", F.row_number().over(wpre))

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from inbev_data_engineering_case_spark.functions import cosine
+from inbev_data_engineering_case_spark.functions import cosine, sql_ident
 
 # Upper bound on K*d for collect()-based Lloyd training: ~32 MB of doubles
 # on the driver per iteration. Above this, the "model" stops being small.
@@ -101,26 +101,15 @@ def cosine_topk(
     return _cosine_scored_topk(corpus, queries, k, id_col, vec_col)
 
 
-def _plane_weight(plane: int, dim: Column, seed: int = 0) -> Column:
-    """Deterministic pseudo-random hyperplane weight in [-1, 1):
-    portable_hash64 of 'p:d' (seed 0) / 's{seed}:p:d' scaled into the unit
-    interval. Seed 0 keeps the original key format so existing oracles and
-    bucket assignments are unchanged."""
-    from inbev_data_engineering_case_spark.functions import portable_hash64
-
-    prefix = f"{plane}:" if seed == 0 else f"s{seed}:{plane}:"
-    key = F.concat(F.lit(prefix), dim.cast("string"))
-    return (portable_hash64(key) % 2000001 - 1000000) / 1000000.0
-
-
 def _plane_weight_value(plane: int, dim: int, seed: int = 0) -> float:
-    """Driver-side twin of ``_plane_weight`` — bit-identical by
-    construction (same md5-of-'p:d' 60-bit hash, same integer scaling,
-    same IEEE division; parity-tested against the in-plan expression):
-    the weight is a pure function of (plane, dim index, seed), so it
-    can be computed ONCE at plan-build time instead of per element per
-    row (r15 optimization round, guide §4 — hoist per-row work that
-    doesn't depend on the row)."""
+    """Deterministic pseudo-random hyperplane weight in [-1, 1):
+    ``portable_hash64`` of 'p:d' (seed 0) / 's{seed}:p:d' — the same
+    md5-of-key 60-bit hash the DuckDB oracle computes in-query — scaled
+    into the unit interval by integer modulus and one IEEE division. Seed
+    0 keeps the original key format so existing oracles and bucket
+    assignments are unchanged. The weight is a pure function of (plane,
+    dim index, seed), so it is computed ONCE at plan-build time and
+    embedded as a literal instead of hashed per element per row."""
     import hashlib
 
     prefix = f"{plane}:" if seed == 0 else f"s{seed}:{plane}:"
@@ -131,11 +120,11 @@ def _plane_weight_value(plane: int, dim: int, seed: int = 0) -> float:
 
 
 def _vec_dim(df: DataFrame, vec_col: str) -> int | None:
-    """Vector dimensionality probed from ONE row (None on an empty
-    input — callers then fall back to the runtime-hash bucket path).
-    A 1-row, column-pruned read: the model-metadata-sized action that
-    lets every sign-LSH site embed its plane-weight matrix as plan
-    literals instead of md5-hashing (plane, dim) per element per row.
+    """Vector dimensionality probed from the first non-NULL vector (None
+    when the input has none — ``signlsh_bucket`` then buckets every row
+    to 0, the bucket of a NULL vector). A 1-row, column-pruned read: the
+    model-metadata-sized action that lets every sign-LSH site embed its
+    plane-weight matrix as plan literals.
 
     Memoized per (session, canonical plan, column) — r16, the VERDICT
     r15 watch item: each sign-LSH call site paid this driver-side
@@ -162,8 +151,12 @@ def _vec_dim(df: DataFrame, vec_col: str) -> int | None:
         cache = spark._graft_vec_dim_cache = {}
     if key is not None and key in cache:
         return cache[key]
-    row = df.select(F.size(F.col(vec_col)).alias("_d")).first()
-    if row is None or row["_d"] is None or row["_d"] < 0:
+    row = (
+        df.filter(F.col(vec_col).isNotNull())
+        .select(F.size(F.col(vec_col)).alias("_d"))
+        .first()
+    )
+    if row is None:
         return None
     dim = int(row["_d"])
     if key is not None:
@@ -171,32 +164,27 @@ def _vec_dim(df: DataFrame, vec_col: str) -> int | None:
     return dim
 
 
-def _signlsh_bucket_expr(
-    vec_name: str, num_planes: int, seed: int, dim: int
-) -> Column:
-    """The literal-weight bucket built as ONE ``F.expr`` parse instead of
-    a Column-API tree (r15 optimization round, wave 3): constructing the
-    per-plane zip_with/aggregate tree through py4j costs one driver
-    round-trip per node — ~1.9s per 3-seed bucketing at 8 planes × 64
-    dims, measured — while building the same expression as a SQL string
-    and parsing it once is ~0.1s. Semantics are bit-identical to the
-    Column form (same weights via ``repr`` round-trip, same ascending-i
-    float-add order, same in-plan dim guard and message, NULL vectors
-    still bucket 0); the parity test drives both forms."""
-    v = "`" + vec_name.replace("`", "``") + "`"
+def _signlsh_bucket_spark_sql(
+    vec: str, num_planes: int, seed: int, dim: int
+) -> str:
+    """The bucket as Spark SQL text over the vector expression ``vec``:
+    per plane, a dot product with the literal weight array (``repr``
+    round-trips each double exactly; the float adds run in ascending-i
+    order), guarded in-plan against a vector whose length is not
+    ``dim``. NULL vectors take bucket 0 (a NULL dot is not > 0)."""
     parts = []
     for p in range(num_planes):
         w = ",".join(
             repr(_plane_weight_value(p, i, seed)) + "D" for i in range(dim)
         )
         dot = (
-            f"aggregate(zip_with({v}, array({w}),"
+            f"aggregate(zip_with({vec}, array({w}),"
             " (x, wt) -> CAST(x AS DOUBLE) * wt),"
             " 0.0D, (acc, vv) -> acc + vv)"
         )
         guarded = (
-            f"CASE WHEN size({v}) != {dim} THEN CAST(raise_error(concat("
-            f"'signlsh_bucket: vector length ', CAST(size({v}) AS STRING),"
+            f"CASE WHEN size({vec}) != {dim} THEN CAST(raise_error(concat("
+            f"'signlsh_bucket: vector length ', CAST(size({vec}) AS STRING),"
             f" ' != probed dim {dim} — mixed-dimension embeddings cannot"
             f" share one bucket geometry')) AS DOUBLE) ELSE {dot} END"
         )
@@ -204,113 +192,38 @@ def _signlsh_bucket_expr(
             f"(CASE WHEN ({guarded}) > 0D THEN CAST({1 << p} AS BIGINT)"
             " ELSE CAST(0 AS BIGINT) END)"
         )
-    return F.expr(" + ".join(parts))
+    return " + ".join(parts)
 
 
 def signlsh_bucket(
-    vec: Column | str, num_planes: int = 8, seed: int = 0,
-    dim: int | None = None,
+    vec: str, num_planes: int = 8, seed: int = 0, *, dim: int | None
 ) -> Column:
     """h-bit sign-LSH bucket id: bit p = sign(dot(vec, plane_p)) with
     deterministic hyperplanes (see module docstring). Different ``seed``
     values give independent bucketings — the multi-probe recall lever.
 
-    ``dim`` (default None) selects how the plane weights reach the dot
-    product (r15 optimization round; bucket VALUES are identical either
-    way, so stored bucket tables stay compatible):
+    ``vec`` is Spark SQL expression text (a plain column name, or
+    ``functions.sql_ident`` of any other name). ``dim`` is the vector
+    length, probed by ``_vec_dim``: the plane weights are computed once
+    driver-side (``_plane_weight_value``) and embedded as literal arrays,
+    so the per-row work is num_planes·d multiplications, and the whole
+    expression is one ``F.expr`` parse (``_signlsh_bucket_spark_sql``).
+    A row whose vector length differs from ``dim`` raises in-plan rather
+    than bucketing in another geometry; NULL vectors take bucket 0.
+    ``dim=None`` (an input with no non-NULL vector) buckets every row
+    to 0.
 
-    - ``None`` — the original runtime form: weight p,i is re-derived
-      in-plan via portable_hash64('p:i') per element per row. Works
-      for any (even mixed) vector length.
-    - an int — the weights are computed ONCE driver-side
-      (``_plane_weight_value``, bit-identical) and embedded as literal
-      arrays; the per-row work drops from num_planes·d md5 hashes to
-      num_planes·d multiplications. A row whose vector length differs
-      from ``dim`` raises in-plan (the guard-family discipline: under
-      the runtime form it would silently bucket in a different
-      geometry); NULL vectors take bucket 0 exactly as before. With a
-      string column name the whole expression is built by ONE
-      ``F.expr`` parse (``_signlsh_bucket_expr``) — the py4j-per-node
-      Column construction was the dominant cost of every bucketing
-      plan build (wave 3). The string form treats the name as one
-      UNQUALIFIED top-level column (a dotted name is backtick-quoted
-      as a single identifier, not resolved as a struct path — pass a
-      Column for nested references).
-
-    ``num_planes`` is capped at 63 so the bucket id stays a valid
-    signed BIGINT on both build paths (r15 ADVICE: past 63 the expr
-    form's ``1 << p`` literal overflows at parse/ANSI-cast while the
-    Column form's ``F.shiftleft`` silently wraps — failing loudly and
-    identically here beats that divergence).
+    ``num_planes`` is capped at 63 so the bucket id stays a valid signed
+    BIGINT (past 63 the ``1 << p`` literal overflows).
     """
     if not 1 <= num_planes <= 63:
         raise ValueError(
             "signlsh_bucket: num_planes must be in [1, 63] — the bucket"
             f" id is a signed 64-bit integer (got {num_planes})"
         )
-    if dim is not None and isinstance(vec, str):
-        return _signlsh_bucket_expr(vec, num_planes, seed, dim)
-    vec = F.col(vec) if isinstance(vec, str) else vec
-
-    def weighted(plane: int):
-        # closure factory (a default-arg lambda would change the arity
-        # PySpark infers for zip_with and break the call)
-        return lambda x, i: x.cast("double") * _plane_weight(plane, i, seed)
-
-    bits = []
-    for p in range(num_planes):
-        if dim is None:
-            dot_p = F.aggregate(
-                F.zip_with(
-                    vec,
-                    F.sequence(F.lit(0), F.size(vec) - 1),
-                    weighted(p),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-        else:
-            weights = F.array(
-                *[
-                    F.lit(_plane_weight_value(p, i, seed))
-                    for i in range(dim)
-                ]
-            )
-            dot_p = F.when(
-                F.size(vec) != dim,
-                F.raise_error(
-                    F.concat(
-                        F.lit(
-                            "signlsh_bucket: vector length "
-                        ),
-                        F.size(vec).cast("string"),
-                        F.lit(
-                            f" != probed dim {dim} — mixed-dimension"
-                            " embeddings cannot share one bucket"
-                            " geometry"
-                        ),
-                    )
-                ).cast("double"),
-            ).otherwise(
-                F.aggregate(
-                    F.zip_with(
-                        vec,
-                        weights,
-                        lambda x, w: x.cast("double") * w,
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                )
-            )
-        bits.append(
-            F.when(dot_p > 0, F.shiftleft(F.lit(1).cast("long"), p)).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
+    if dim is None:
+        return F.expr("CAST(0 AS BIGINT)")
+    return F.expr(_signlsh_bucket_spark_sql(vec, num_planes, seed, dim))
 
 
 def ivf_assign(
@@ -583,9 +496,7 @@ def ann_bucketed_topk(
     n_probes× rows anyway)."""
     from pyspark.sql import Window
 
-    # literal plane weights (one 1-row dim probe; bit-identical
-    # buckets) — per-row cost drops from planes·d md5 hashes to
-    # multiplications across every probe seed
+    # one 1-row dim probe sizes the literal plane weights for every seed
     dim = _vec_dim(corpus, vec_col)
 
     def _probed(df: DataFrame, out_id: str, out_vec: str) -> DataFrame:
@@ -598,7 +509,10 @@ def ann_bucketed_topk(
                         F.struct(
                             F.lit(seed).alias("probe"),
                             signlsh_bucket(
-                                vec_col, num_planes, seed=seed, dim=dim
+                                sql_ident(vec_col),
+                                num_planes,
+                                seed=seed,
+                                dim=dim,
                             ).alias("bucket"),
                         )
                         for seed in range(n_probes)
@@ -816,7 +730,7 @@ def pq_sampled_codebook(
 
     seeds = (
         corpus.select(id_col, vec_col)
-        .withColumn("_h", portable_hash64(F.col(id_col), seed=seed))
+        .withColumn("_h", portable_hash64(sql_ident(id_col), seed=seed))
         .orderBy("_h", id_col)
         .limit(k)
     )

@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from inbev_data_engineering_case_spark.functions import sql_ident
+
 # lg_k = 12 -> 4 KiB registers, ~1.6% relative standard error; the
 # documented DataSketches default trade for analytics rollups.
 DEFAULT_LG_K = 12
@@ -135,8 +137,9 @@ CMS_DEPTH = 4
 CMS_WIDTH = 256
 
 
-def _cms_cells(item: F.Column, depth: int, width: int) -> F.Column:
-    """Array of (r, c) cells an item touches — one per hash row."""
+def _cms_cells(item: str, depth: int, width: int) -> F.Column:
+    """Array of (r, c) cells an item touches — one per hash row
+    (``item`` is SQL expression text)."""
     from inbev_data_engineering_case_spark.functions import portable_hash64
 
     return F.array(
@@ -180,7 +183,7 @@ def cms_partials(
         events.select(
             F.date_trunc(unit, F.col(ts_col)).alias("bucket_ts"),
             F.explode(
-                _cms_cells(F.col(item_col), depth, width)
+                _cms_cells(sql_ident(item_col), depth, width)
             ).alias("rc"),
         )
         .groupBy("bucket_ts", F.col("rc.r").alias("r"), F.col("rc.c").alias("c"))
@@ -237,7 +240,7 @@ def cms_estimate(
     merged = partials.groupBy("r", "c").agg(F.sum("cnt").alias("cnt"))
     probes = items.select(
         F.col(item_col).alias("item"),
-        F.explode(_cms_cells(F.col(item_col), depth, width)).alias("rc"),
+        F.explode(_cms_cells(sql_ident(item_col), depth, width)).alias("rc"),
     ).select("item", F.col("rc.r").alias("r"), F.col("rc.c").alias("c"))
     return (
         probes.join(F.broadcast(merged), ["r", "c"], "left")

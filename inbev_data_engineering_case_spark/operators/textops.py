@@ -2,11 +2,14 @@
 extensions, SURVEY.md §7.2-7): token counting, quality scoring, language ID,
 document fingerprinting.
 
-All pure Column expressions over ``documents.text`` — JVM-side, zero UDFs,
-so they run inside whole-stage codegen and scale linearly with rows (no
-shuffle at all until an aggregation consumes them). Every function has an
-exact ANSI-SQL twin used by the oracles (see queries.py), which is why the
-hashes are md5-based (portable) rather than Spark's murmur3.
+All pure expressions over ``documents.text`` — JVM-side, zero UDFs, so they
+run inside whole-stage codegen and scale linearly with rows (no shuffle at
+all until an aggregation consumes them). The language CASE, the quality
+formula and the fingerprint normalization are Spark SQL fragment builders
+(``*_spark_sql``) that ``score_documents`` and the standalone Column
+functions both use; every function has an independent ANSI-SQL twin used by
+the oracles (see queries.py), which is why the hashes are md5-based
+(portable) rather than Spark's murmur3.
 """
 
 from __future__ import annotations
@@ -16,10 +19,10 @@ from pyspark.sql import functions as F
 
 from inbev_data_engineering_case_spark.functions import (
     WS_RE,
-    portable_hash64,
-    sql_ident as _sql_ident,
-    sql_str as _sql_str,
-    tokens,
+    portable_hash64_spark_sql,
+    sql_ident,
+    sql_str,
+    tokens_spark_sql,
 )
 
 # Tiny per-language stopword inventories for the n-gram/stopword language-ID
@@ -38,10 +41,81 @@ STOPWORDS_QUALITY = LANG_STOPWORDS["en"]
 PUNCT_CLASS = "[.!?,;:]"
 
 
-def token_count(text: Column | str) -> Column:
+# --- Spark SQL fragment builders (arguments are SQL expression text) ------
+
+
+def _lower_tokens_spark_sql(text: str) -> str:
+    return tokens_spark_sql(f"lower({text})")
+
+
+def _hits_spark_sql(toks: str, words: list[str]) -> str:
+    """Count of the token array's elements that are in ``words``."""
+    listed = ", ".join(sql_str(w) for w in words)
+    return f"size(filter({toks}, t -> t IN ({listed})))"
+
+
+def _and_chain(conds: list[str]) -> str:
+    """Left-nested ``AND`` (the parser balances an unparenthesized chain;
+    the explicit nesting keeps the ``&``-chain tree)."""
+    out = conds[0]
+    for c in conds[1:]:
+        out = f"({out} AND {c})"
+    return out
+
+
+def _lang_id_spark_sql(hits: dict[str, str]) -> str:
+    """Argmax over per-language hit counts (``hits[lang]`` is SQL text);
+    'und' when every count is zero; ties break by LANG_PRIORITY."""
+    all_zero = _and_chain([f"(({hits[lang]}) = 0)" for lang in LANG_PRIORITY])
+    branches = [f"WHEN {all_zero} THEN 'und'"]
+    for i, lang in enumerate(LANG_PRIORITY):
+        conds = [
+            f"(({hits[lang]}) > ({hits[other]}))"
+            for other in LANG_PRIORITY[:i]
+        ] + [
+            f"(({hits[lang]}) >= ({hits[other]}))"
+            for other in LANG_PRIORITY[i + 1 :]
+        ]
+        branches.append(f"WHEN {_and_chain(conds)} THEN '{lang}'")
+    return "CASE " + " ".join(branches) + " END"
+
+
+def _punct_ratio_spark_sql(text: str) -> str:
+    non_punct = sql_str(f"[^{PUNCT_CLASS[1:-1]}]")
+    return (
+        f"(length(regexp_replace({text}, {non_punct}, ''))"
+        f" / length({text}))"
+    )
+
+
+def _quality_spark_sql(text: str, stop_hits: str, toks: str) -> str:
+    """Composite quality from the text, its STOPWORDS_QUALITY hit count and
+    its lowercased token array (all SQL text)."""
+    return (
+        f"((({stop_hits}) / size({toks})) * 0.5D"
+        f" + least(length({text}) / 500.0D, 1.0D) * 0.3D"
+        f" + (1 - least({_punct_ratio_spark_sql(text)} * 10, 1.0D)) * 0.2D)"
+    )
+
+
+def normalize_spark_sql(text: str) -> str:
+    """Canonical form for fingerprinting: lowercase, collapse all
+    whitespace runs to single spaces, trim."""
+    return f"regexp_replace(lower(trim({text})), {sql_str(WS_RE)}, ' ')"
+
+
+# --- Column functions ------------------------------------------------------
+# Where a function is built from the fragments above, ``text`` is Spark SQL
+# expression text (a plain column name is valid text; ``functions.sql_ident``
+# quotes any other name). The regex-only helpers (``bpe_token_count``,
+# ``line_repetition_ratio``, ``scrub_pii``, ``html_to_text``) take a Column
+# or a column name.
+
+
+def token_count(text: str) -> Column:
     """Whitespace token count (the cheap proxy; a BPE-ish regex variant is
     ``bpe_token_count``)."""
-    return F.size(tokens(text))
+    return F.expr(f"size({tokens_spark_sql(text)})")
 
 
 def bpe_token_count(text: Column | str) -> Column:
@@ -60,75 +134,49 @@ def bpe_token_count(text: Column | str) -> Column:
     )
 
 
-def punct_ratio(text: Column | str) -> Column:
+def punct_ratio(text: str) -> Column:
     """Punctuation chars / total chars.
 
     Deliberately NOT rounded: both engines compute the identical IEEE
     division of identical ints, so the raw double is bit-identical, whereas
     round() rules differ between engines exactly at the tie values that
     small-denominator ratios constantly produce."""
-    text = F.col(text) if isinstance(text, str) else text
-    return F.length(
-        F.regexp_replace(text, f"[^{PUNCT_CLASS[1:-1]}]", "")
-    ) / F.length(text)
+    return F.expr(_punct_ratio_spark_sql(text))
 
 
-def stopword_ratio(text: Column | str, stopwords: list[str] | None = None) -> Column:
+def stopword_ratio(text: str, stopwords: list[str] | None = None) -> Column:
     """Stopword tokens / total tokens (lowercased)."""
-    stopwords = stopwords or STOPWORDS_QUALITY
-    toks = tokens(F.lower(F.col(text) if isinstance(text, str) else text))
-    return F.size(F.filter(toks, _isin(stopwords))) / F.size(toks)
+    toks = _lower_tokens_spark_sql(text)
+    hits = _hits_spark_sql(toks, stopwords or STOPWORDS_QUALITY)
+    return F.expr(f"({hits} / size({toks}))")
 
 
-def quality_score(text: Column | str) -> Column:
+def quality_score(text: str) -> Column:
     """Composite document-quality score in [0,1]: rewards stopword presence
     (natural language), moderate length, and penalizes punctuation density.
     Deterministic, expression-only; weights are engine policy, not learned."""
-    text = F.col(text) if isinstance(text, str) else text
-    length_score = F.least(F.length(text) / F.lit(500.0), F.lit(1.0))
-    return (
-        0.5 * stopword_ratio(text)
-        + 0.3 * length_score
-        + 0.2 * (1 - F.least(punct_ratio(text) * 10, F.lit(1.0)))
-    )
+    toks = _lower_tokens_spark_sql(text)
+    hits = _hits_spark_sql(toks, STOPWORDS_QUALITY)
+    return F.expr(_quality_spark_sql(text, hits, toks))
 
 
-def _isin(words: list[str]):
-    # Closure factory, NOT a default-arg lambda: PySpark counts a lambda's
-    # parameters (defaults included) to decide the higher-order-function
-    # arity, so `lambda t, sw=sw:` would receive the element *index* as sw.
-    return lambda t: t.isin(*words)
-
-
-
-
-def lang_scores(text: Column | str) -> dict[str, Column]:
+def lang_scores(text: str) -> dict[str, Column]:
     """Stopword-hit count per language over the lowercased token set."""
-    toks = tokens(F.lower(F.col(text) if isinstance(text, str) else text))
+    toks = _lower_tokens_spark_sql(text)
     return {
-        lang: F.size(F.filter(toks, _isin(sw)))
+        lang: F.expr(_hits_spark_sql(toks, sw))
         for lang, sw in LANG_STOPWORDS.items()
     }
 
 
-def lang_id(text: Column | str) -> Column:
+def lang_id(text: str) -> Column:
     """Deterministic argmax over per-language stopword scores; 'und'
     (undetermined) when every score is zero; ties break by LANG_PRIORITY."""
-    scores = lang_scores(text)
-    all_zero = None
-    for c in scores.values():
-        all_zero = c == 0 if all_zero is None else all_zero & (c == 0)
-    expr = F.when(all_zero, F.lit("und"))
-    for i, lang in enumerate(LANG_PRIORITY):
-        cond = None
-        for other in LANG_PRIORITY[:i]:
-            c = scores[lang] > scores[other]
-            cond = c if cond is None else cond & c
-        for other in LANG_PRIORITY[i + 1 :]:
-            c = scores[lang] >= scores[other]
-            cond = c if cond is None else cond & c
-        expr = expr.when(cond, F.lit(lang))
-    return expr
+    toks = _lower_tokens_spark_sql(text)
+    hits = {
+        lang: _hits_spark_sql(toks, sw) for lang, sw in LANG_STOPWORDS.items()
+    }
+    return F.expr(_lang_id_spark_sql(hits))
 
 
 def score_documents(
@@ -142,7 +190,7 @@ def score_documents(
     through unchanged (e.g. the source/domain column the per-source
     cap partitions on) — pure projection passthrough, no extra scan.
 
-    ``lang_id(text)`` and ``quality_score(text)`` as standalone Column
+    ``lang_id(text)`` and ``quality_score(text)`` as standalone
     expressions each embed their own ``tokens(lower(text))`` subtree, and
     the language argmax references every per-language score several times
     — Spark's subexpression elimination skips lambda-bearing expressions,
@@ -150,9 +198,13 @@ def score_documents(
     stages the plan instead: project the token array once, then the
     per-language hit counts, then the argmax/quality over plain attribute
     references (CollapseProject keeps non-cheap multiply-referenced
-    aliases staged, so each runs once). Values are bit-identical to the
-    standalone expressions; measured ~1.45× faster on the curation scan —
-    the stage that reads the full 100 TB corpus.
+    aliases staged, so each runs once). The stages are built from the
+    same fragment builders as the standalone expressions, with the
+    staged attributes in place of the inline subtrees, so the values are
+    bit-identical (pinned by
+    ``test_score_documents_matches_standalone_expressions``); measured
+    ~1.45× faster on the curation scan — the stage that reads the full
+    100 TB corpus. Each stage is one ``selectExpr`` parse.
 
     The input inherits the signature stages' parallelism guard
     (``dedup._ensure_parallelism``): scoring is compute-bound per row
@@ -161,29 +213,16 @@ def score_documents(
     1-2 cores — measured 2.0s single-core vs ~0.3s guarded on the sf0.1
     curation fixture. On a cluster scan yielding thousands of splits the
     guard is a metadata-only no-op (r15 optimization round, guide §2).
-
-    The three staged projections are built as SQL text and parsed with
-    one ``selectExpr`` each (r16 optimization round): the Column-API
-    form paid one py4j round-trip per node — the four ``F.filter``
-    lambdas plus the argmax when-chain cost ~0.25-1.1s of driver-side
-    tree construction per plan build, every run, on the operator every
-    curation entry calls first — where the parse of identical SQL text
-    is ~20ms. Semantics are bit-identical (same staged plan, same
-    expression trees out of the parser; ``t IN (...)`` is the same
-    ``In`` node ``Column.isin`` builds, ``0.5D`` the same double
-    literal as ``F.lit(0.5)``) and remain pinned by
-    ``test_score_documents_matches_standalone_expressions``.
     """
     from inbev_data_engineering_case_spark.operators.dedup import (
         _ensure_parallelism,
     )
 
-    id_q = _sql_ident(id_col)
-    t_q = _sql_ident(text_col)
-    extra_q = [_sql_ident(c) for c in extra_cols]
-    toks_sql = f"split(trim(lower({t_q})), {_sql_str(WS_RE)})"
+    id_q = sql_ident(id_col)
+    t_q = sql_ident(text_col)
+    extra_q = [sql_ident(c) for c in extra_cols]
     toks = _ensure_parallelism(df).selectExpr(
-        id_q, t_q, *extra_q, f"{toks_sql} AS _toks"
+        id_q, t_q, *extra_q, f"{_lower_tokens_spark_sql(t_q)} AS _toks"
     )
     scored = toks.selectExpr(
         id_q,
@@ -191,51 +230,32 @@ def score_documents(
         *extra_q,
         "_toks",
         *[
-            "size(filter(_toks, t -> t IN ("
-            + ", ".join(_sql_str(w) for w in sw)
-            + f"))) AS _s_{lang}"
+            f"{_hits_spark_sql('_toks', sw)} AS _s_{lang}"
             for lang, sw in LANG_STOPWORDS.items()
         ],
     )
-    all_zero = " AND ".join(f"(_s_{lang} = 0)" for lang in LANG_PRIORITY)
-    branches = [f"WHEN {all_zero} THEN 'und'"]
-    for i, lang in enumerate(LANG_PRIORITY):
-        conds = [
-            f"(_s_{lang} > _s_{other})" for other in LANG_PRIORITY[:i]
-        ] + [
-            f"(_s_{lang} >= _s_{other})" for other in LANG_PRIORITY[i + 1 :]
-        ]
-        branches.append(f"WHEN {' AND '.join(conds)} THEN '{lang}'")
-    lang_sql = "CASE " + " ".join(branches) + " END"
     # STOPWORDS_QUALITY is LANG_STOPWORDS["en"], so the quality stopword
-    # count IS the English language score — reuse the attribute. The
-    # punctuation class is PUNCT_CLASS negated, the same text
-    # punct_ratio embeds.
-    punct_sql = (
-        f"(length(regexp_replace({t_q}, '[^.!?,;:]', '')) / length({t_q}))"
-    )
-    quality_sql = (
-        "(0.5D * (_s_en / size(_toks))"
-        f" + 0.3D * least(length({t_q}) / 500.0D, 1.0D)"
-        f" + 0.2D * (1 - least({punct_sql} * 10, 1.0D)))"
-    )
+    # count IS the English language score — reuse the attribute
+    lang_sql = _lang_id_spark_sql({lang: f"_s_{lang}" for lang in LANG_PRIORITY})
     return scored.selectExpr(
         id_q,
         t_q,
         f"{lang_sql} AS lang",
-        f"{quality_sql} AS quality",
+        f"{_quality_spark_sql(t_q, '_s_en', '_toks')} AS quality",
         *extra_q,
     )
 
 
-def token_repetition_ratio(text: Column | str) -> Column:
+def token_repetition_ratio(text: str) -> Column:
     """Fraction of repeated tokens: 1 - distinct/total over the lowercased
     whitespace tokens (0 = all unique). The Gopher/C4-family intra-document
     repetition signal — boilerplate and SEO spam score high. Kept as the
     exact integer-difference division so both engines produce the
     identical IEEE double (same reasoning as ``punct_ratio``)."""
-    toks = tokens(F.lower(F.col(text) if isinstance(text, str) else text))
-    return (F.size(toks) - F.size(F.array_distinct(toks))) / F.size(toks)
+    toks = _lower_tokens_spark_sql(text)
+    return F.expr(
+        f"((size({toks}) - size(array_distinct({toks}))) / size({toks}))"
+    )
 
 
 def line_repetition_ratio(text: Column | str) -> Column:
@@ -263,16 +283,14 @@ def scrub_pii(text: Column | str) -> Column:
     return F.regexp_replace(no_email, PII_PHONE_RE, "<PHONE>")
 
 
-def normalize_for_fingerprint(text: Column | str) -> Column:
-    """Canonical form for fingerprinting: lowercase, collapse all whitespace
-    runs to single spaces, trim."""
-    text = F.col(text) if isinstance(text, str) else text
-    return F.regexp_replace(F.lower(F.trim(text)), WS_RE, " ")
+def normalize_for_fingerprint(text: str) -> Column:
+    """``F.expr`` of ``normalize_spark_sql``."""
+    return F.expr(normalize_spark_sql(text))
 
 
-def fingerprint(text: Column | str) -> Column:
+def fingerprint(text: str) -> Column:
     """64-bit portable content fingerprint of the normalized text."""
-    return portable_hash64(normalize_for_fingerprint(text))
+    return F.expr(portable_hash64_spark_sql(normalize_spark_sql(text)))
 
 
 # ---------------------------------------------------------------------------

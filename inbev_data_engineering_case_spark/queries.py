@@ -7123,7 +7123,7 @@ def q_curation_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_days = 24
     day = F.date_add(
         F.to_date(F.lit("2024-01-01")),
-        (portable_hash64(F.col("doc_id")) % n_days).cast("int"),
+        (portable_hash64("doc_id") % n_days).cast("int"),
     )
     scored = _t(spark, sf_dir, "documents").select(
         day.alias("day"),
@@ -7376,7 +7376,7 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "documents")
         .select(
             "doc_id",
-            F.posexplode(tokens(F.lower(F.col("text")))).alias(
+            F.posexplode(tokens("lower(text)")).alias(
                 "pos", "term"
             ),
         )
@@ -8482,7 +8482,7 @@ def _containment_frag(spark: SparkSession, sf_dir: str):
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     frag = (
         docs.filter(F.col("doc_id") % 50 == 0)
-        .select(F.col("doc_id"), tokens(F.col("text")).alias("_toks"))
+        .select(F.col("doc_id"), tokens("text").alias("_toks"))
         .select(
             (F.col("doc_id") + 500000).alias("doc_id"),
             F.array_join(

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from inbev_data_engineering_case_spark.functions import dsum
+from inbev_data_engineering_case_spark.functions import dsum, sql_ident
 
 
 _CLEANUP_REGISTERED: set[str] = set()
@@ -897,7 +897,7 @@ def stream_cms_partials(
         .select(
             F.col(ts_col),
             F.explode(
-                _cms_cells(F.col(item_col), depth, width)
+                _cms_cells(sql_ident(item_col), depth, width)
             ).alias("rc"),
         )
         .groupBy(

@@ -164,7 +164,7 @@ def test_morton_key_properties(spark):
             .withColumn("ba", morton_bucket_expr("a", "_lo_a", "_hi_a", bits))
             .withColumn("bb", morton_bucket_expr("b", "_lo_b", "_hi_b", bits))
             .withColumn(
-                "z", bit_interleave([F.col("ba"), F.col("bb")], bits)
+                "z", bit_interleave(["ba", "bb"], bits)
             )
             .collect()
         )

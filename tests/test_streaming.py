@@ -1328,7 +1328,7 @@ def test_stream_artifact_update_maintains_gram_table(spark, tmp_path):
         F.lit(900000).alias("doc_id"),
         F.array_join(
             F.slice(
-                tokens(F.col("text")),
+                tokens("text"),
                 1,
                 20,
             ),

@@ -337,9 +337,7 @@ def test_dedup_components_reliable_checkpoint_and_rounds(spark, tmp_path):
     )
     expected = {i: 0 for i in range(5)}
 
-    local_labels, local_rounds = dedup_components_with_stats(
-        pairs, reliable_checkpoint=False
-    )
+    local_labels, local_rounds = dedup_components_with_stats(pairs)
     assert {r["node"]: r["comp"] for r in local_labels.collect()} == expected
     assert local_rounds == 3
 
@@ -865,59 +863,86 @@ def test_vec_dim_memo_sees_an_overwritten_parquet_path(spark, tmp_path):
 
 
 def test_signlsh_literal_weights_match_runtime_path(spark):
-    """The r15 literal-weight bucket path (dim known → plane weights
-    embedded as plan literals) is bit-identical to the runtime
-    portable_hash64 path for every (seed, vector), the driver-side
-    weight twin reproduces the in-plan expression exactly, and a
-    vector whose length differs from the probed dim raises in-plan
-    instead of silently bucketing in a different geometry."""
+    """The literal-weight bucket equals an independent reference for
+    every (seed, vector): the plane weights md5-hashed the way the
+    DuckDB oracle hashes them in-query, the dot products summed in
+    ascending-i IEEE order in Python. NULL vectors take bucket 0; an
+    input whose FIRST vector is NULL still probes the dimension from the
+    first non-NULL one; an input with no non-NULL vector buckets every
+    row to 0; a vector whose length differs from the probed dim raises
+    in-plan instead of silently bucketing in a different geometry."""
     import math
 
+    import duckdb
     import pytest
 
     from inbev_data_engineering_case_spark.operators.similarity import (
-        _plane_weight,
         _plane_weight_value,
         _vec_dim,
         signlsh_bucket,
     )
 
     d = 16
-    df = spark.createDataFrame(
-        [
-            (j, [math.sin(j * 37.0 + i * 13.0) for i in range(d)])
-            for j in range(60)
-        ]
-        + [(999, None)],  # NULL vector: bucket 0 on both paths
-        "vec_id long, embedding array<double>",
-    )
-    assert _vec_dim(df, "embedding") == d
-    for seed in (0, 1, 2):
-        rows = df.select(
-            signlsh_bucket("embedding", 8, seed=seed).alias("rt"),
-            signlsh_bucket("embedding", 8, seed=seed, dim=d).alias("lit"),
-        ).collect()
-        assert all(r["rt"] == r["lit"] for r in rows), seed
+    vecs = [
+        (j, [math.sin(j * 37.0 + i * 13.0) for i in range(d)])
+        for j in range(60)
+    ]
 
-    # the driver twin == the in-plan weight expression, element-wise
-    got = spark.range(1).select(
-        *[
-            _plane_weight(p, F.lit(i), seed).alias(f"w_{p}_{i}_{seed}")
-            for p in (0, 3)
-            for i in (0, 7, 15)
-            for seed in (0, 2)
-        ]
-    ).collect()[0]
+    def reference(v, seed):
+        if v is None:
+            return 0
+        out = 0
+        for p in range(8):
+            dot = 0.0
+            for i, x in enumerate(v):
+                dot += float(x) * _plane_weight_value(p, i, seed)
+            if dot > 0:
+                out += 1 << p
+        return out
+
+    schema = "vec_id long, embedding array<double>"
+    for rows in (
+        vecs + [(999, None)],  # NULL vector: bucket 0
+        [(999, None)] + vecs,  # NULL first row: dim from the next one
+    ):
+        df = spark.createDataFrame(rows, schema)
+        assert _vec_dim(df, "embedding") == d
+        want = {j: v for j, v in rows}
+        for seed in (0, 1, 2):
+            got = df.select(
+                "vec_id",
+                signlsh_bucket("embedding", 8, seed=seed, dim=d).alias("b"),
+            ).collect()
+            assert {r["vec_id"]: r["b"] for r in got} == {
+                j: reference(v, seed) for j, v in want.items()
+            }, seed
+
+    # no non-NULL vector at all: no dim to probe, every row buckets to 0
+    nulls = spark.createDataFrame([(1, None), (2, None)], schema)
+    dim = _vec_dim(nulls, "embedding")
+    assert dim is None
+    assert [
+        r["b"]
+        for r in nulls.select(
+            signlsh_bucket("embedding", 8, seed=0, dim=dim).alias("b")
+        ).collect()
+    ] == [0, 0]
+
+    # the driver-side weight == the md5 weight the DuckDB oracle derives
+    con = duckdb.connect()
     for p in (0, 3):
         for i in (0, 7, 15):
             for seed in (0, 2):
-                assert got[f"w_{p}_{i}_{seed}"] == _plane_weight_value(
-                    p, i, seed
-                ), (p, i, seed)
+                key = f"{p}:{i}" if seed == 0 else f"s{seed}:{p}:{i}"
+                duck = con.execute(
+                    "SELECT ((('0x' || substr(md5(?), 1, 15)))::BIGINT"
+                    " % 2000001 - 1000000) / 1000000.0",
+                    [key],
+                ).fetchone()[0]
+                assert _plane_weight_value(p, i, seed) == duck, (p, i, seed)
 
     bad = spark.createDataFrame(
-        [(1, [1.0] * d), (2, [1.0] * (d + 1))],
-        "vec_id long, embedding array<double>",
+        [(1, [1.0] * d), (2, [1.0] * (d + 1))], schema
     )
     with pytest.raises(Exception, match="mixed-dimension"):
         bad.select(
@@ -952,8 +977,8 @@ def test_ann_multiprobe_provably_adds_known_neighbor(spark):
         r["vec_id"]: (r["b0"], r["b1"])
         for r in df.select(
             "vec_id",
-            signlsh_bucket("embedding", 8, seed=0).alias("b0"),
-            signlsh_bucket("embedding", 8, seed=1).alias("b1"),
+            signlsh_bucket("embedding", 8, seed=0, dim=d).alias("b0"),
+            signlsh_bucket("embedding", 8, seed=1, dim=d).alias("b1"),
         ).collect()
     }
     # pick (query, cross, same): `cross` shares the query's seed-1 bucket
@@ -1096,71 +1121,69 @@ def test_score_documents_matches_standalone_expressions(spark):
     assert staged == standalone  # exact float equality, not approx
 
 
-def test_minhash_signatures_expr_parity(spark):
-    """r16: ``minhash_signatures`` builds its two projections as SQL text
-    (one selectExpr parse each) instead of a py4j Column tree. The parsed
-    plan must stay bit-identical to the Column-API form — same shingles,
-    same md5 base hash, same affine mixes — including every whitespace
-    control character the tokenizer class names, quotes/backslashes in
-    the data, and too-short/empty documents (empty shingle set → all-NULL
-    signature slots on both paths)."""
-    from pyspark.sql import functions as F
+def test_sql_literals_refuse_escaped_string_literals_conf(spark):
+    """With ``spark.sql.parser.escapedStringLiterals=true`` Spark keeps
+    the backslashes of a string literal, so the tokenizer regex (and
+    every hash over tokens) would silently change. Building an
+    expression whose literal needs a backslash escape must fail loudly;
+    a literal without one parses the same under either setting."""
+    import pytest
 
-    from inbev_data_engineering_case_spark.functions import (
-        MH_PRIME,
-        MH_RANGE,
-        minhash_mixers,
-        portable_hash64,
-    )
+    from inbev_data_engineering_case_spark.functions import sql_str, tokens
+
+    conf = "spark.sql.parser.escapedStringLiterals"
+    spark.conf.set(conf, "true")
+    try:
+        with pytest.raises(ValueError, match=conf):
+            tokens("text")
+        assert sql_str("the") == "'the'"
+    finally:
+        spark.conf.unset(conf)
+    tokens("text")
+
+
+def test_minhash_signatures_expr_parity(spark):
+    """``minhash_signatures`` (one SQL-text parse per projection) equals
+    the DuckDB oracle's signature CTE over the same documents — same
+    shingles, same md5 base hash, same affine mixes — including every
+    whitespace control character the tokenizer class names,
+    quotes/backslashes in the data, and too-short/empty documents (empty
+    shingle set → all-NULL signature slots in both engines)."""
+    import duckdb
+
     from inbev_data_engineering_case_spark.operators.dedup import (
         minhash_signatures,
-        word_shingle_set,
     )
+    from inbev_data_engineering_case_spark.queries import _sig_ctes
 
-    def column_form(df, text_col="text", id_col="doc_id", num_hashes=8,
-                    shingle_words=3):
-        def mixer(a, b):
-            return lambda x: (F.lit(a) * x + F.lit(b)) % F.lit(MH_PRIME)
-
-        base = F.transform(
-            word_shingle_set(text_col, shingle_words),
-            lambda s: portable_hash64(s) % F.lit(MH_RANGE),
-        )
-        hashed = df.select(F.col(id_col).alias("id"), base.alias("h"))
-        sig = F.array(
-            *[
-                F.array_min(F.transform(F.col("h"), mixer(a, b)))
-                for a, b in minhash_mixers(num_hashes)
-            ]
-        )
-        return hashed.select("id", sig.alias("sig"))
-
-    docs = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog in a field"),
-            (2, "tab\tand\x0bvt\fff\rcr\nnl the of and to"),
-            (3, "   "),
-            (4, "it's a 'quoted' back\\slash the of and to in is"),
-            (5, "one two"),          # shorter than the shingle window
-            (6, ""),
-            (7, "the quick brown fox jumps over the lazy dog in a field"),
-        ],
-        "doc_id long, text string",
-    )
+    rows = [
+        (1, "the quick brown fox jumps over the lazy dog in a field"),
+        (2, "tab\tand\x0bvt\fff\rcr\nnl the of and to"),
+        (3, "   "),
+        (4, "it's a 'quoted' back\\slash the of and to in is"),
+        (5, "one two"),          # shorter than the shingle window
+        (6, ""),
+        (7, "the quick brown fox jumps over the lazy dog in a field"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE docs (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO docs VALUES (?, ?)", rows)
     for k, w in ((8, 3), (4, 2)):
-        new = sorted(
+        got = sorted(
             (r["id"], tuple(r["sig"]))
             for r in minhash_signatures(
                 docs, num_hashes=k, shingle_words=w
             ).collect()
         )
-        old = sorted(
-            (r["id"], tuple(r["sig"]))
-            for r in column_form(
-                docs, num_hashes=k, shingle_words=w
-            ).collect()
+        ctes = _sig_ctes("t", "docs", num_hashes=k, shingle_words=w)
+        want = sorted(
+            (i, tuple(sig))
+            for i, sig in con.execute(
+                f"WITH {ctes} SELECT id, sig FROM sigs_t"
+            ).fetchall()
         )
-        assert new == old, (k, w)
+        assert got == want, (k, w)
 
 
 @pytest.mark.slow
@@ -1774,7 +1797,7 @@ def test_pq_encode_codes_in_range_and_deterministic(spark):
     # seed rows quantize losslessly to their own codeword
     from inbev_data_engineering_case_spark.functions import portable_hash64
     seeds = (
-        emb.withColumn("_h", portable_hash64(F.col("vec_id"), seed=0xC0DE))
+        emb.withColumn("_h", portable_hash64("vec_id", seed=0xC0DE))
         .orderBy("_h", "vec_id").limit(k).collect()
     )
     seed_code = {r["vec_id"]: i for i, r in enumerate(seeds)}
@@ -1804,7 +1827,7 @@ def test_pq_adc_distance_is_exact_on_codebook_rows(spark):
     m, k = 4, 8
     from inbev_data_engineering_case_spark.functions import portable_hash64
     seeds = (
-        emb.withColumn("_h", portable_hash64(F.col("vec_id"), seed=0xC0DE))
+        emb.withColumn("_h", portable_hash64("vec_id", seed=0xC0DE))
         .orderBy("_h", "vec_id").limit(k)
     )
     seed_rows = seeds.collect()
@@ -2958,10 +2981,10 @@ def test_curate_corpus_strip_html_stage(spark):
         html_to_text,
     )
 
-    fps = docs.select(
+    fps = docs.withColumn("stripped", html_to_text("text")).select(
         "doc_id",
         fingerprint("text").alias("raw_fp"),
-        fingerprint(html_to_text("text")).alias("stripped_fp"),
+        fingerprint("stripped").alias("stripped_fp"),
     ).collect()
     by_id = {r["doc_id"]: r for r in fps}
     assert by_id[1]["raw_fp"] != by_id[2]["raw_fp"]
@@ -5200,7 +5223,7 @@ def test_incremental_containment_full_batch_parity(spark):
 
     frag = (
         docs.filter(F.col("doc_id") % 10 == 0)
-        .select("doc_id", tokens(F.col("text")).alias("_toks"))
+        .select("doc_id", tokens("text").alias("_toks"))
         .select(
             (F.col("doc_id") + 500000).alias("doc_id"),
             F.array_join(

@@ -65,7 +65,7 @@ def main() -> None:
 
         # sign-LSH bucket shape
         buckets = (
-            big.select(signlsh_bucket("embedding", 8).alias("b"))
+            big.select(signlsh_bucket("embedding", 8, dim=dim).alias("b"))
             .groupBy("b")
             .count()
             .agg(

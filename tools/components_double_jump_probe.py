@@ -40,14 +40,12 @@ def double_jump_components(pairs, max_iter=25):
             )
         )
         .distinct(),
-        False,
         eager=False,
     )
     labels = _truncate_lineage(
         edges.select(F.col("dst").alias("node"), F.col("src").alias("comp"))
         .groupBy("node")
         .agg(F.min("comp").alias("comp")),
-        False,
         eager=False,
     )
 
@@ -65,7 +63,6 @@ def double_jump_components(pairs, max_iter=25):
             .select(F.col("dst").alias("node"), "comp")
             .groupBy("node")
             .agg(F.min("comp").alias("comp")),
-            False,
             eager=False,
         )
         cur = label_sum(nm)
@@ -78,7 +75,7 @@ def double_jump_components(pairs, max_iter=25):
         # second jump: needs `once` twice in one plan — materialize it
         # first via an eager cut (this is the double-jump's structural
         # cost: one extra action OR one recomputed join per round)
-        once = _truncate_lineage(once, False)
+        once = _truncate_lineage(once)
         j2 = once.select(
             F.col("node").alias("jn"), F.col("comp").alias("jc")
         )
@@ -86,7 +83,6 @@ def double_jump_components(pairs, max_iter=25):
             once.join(j2, once["comp"] == j2["jn"], "left").select(
                 "node", F.coalesce("jc", "comp").alias("comp")
             ),
-            False,
             eager=False,
         )
         prev_sum = cur

@@ -46,9 +46,9 @@ def main() -> None:
     grams = docs.select(
         "doc_id",
         F.explode(
-            F.array_distinct(word_ngrams(F.lower(F.col("text")), 5))
+            F.array_distinct(word_ngrams("lower(text)", 5))
         ).alias("gram"),
-    ).select("doc_id", portable_hash64(F.col("gram")).alias("gram_h"))
+    ).select("doc_id", portable_hash64("gram").alias("gram_h"))
     df_hist = grams.groupBy("gram_h").count().cache()
     n_grams = df_hist.count()
     print(f"{n_docs:,} docs, {n_grams:,} distinct 5-grams")

@@ -49,8 +49,7 @@ def main() -> None:
                 ).otherwise(
                     F.concat(
                         F.lit("cold"),
-                        portable_hash64(F.col("id").cast("string"))
-                        % n_cold,
+                        portable_hash64("CAST(id AS STRING)") % n_cold,
                     )
                 ),
             )
@@ -80,9 +79,7 @@ def main() -> None:
         # sample-then-verify's exchanges: sampled distinct + candidates
         sampled_distinct = (
             df.filter(
-                portable_hash64(
-                    F.concat(F.lit("hh"), F.col("doc_id").cast("string"))
-                )
+                portable_hash64("concat('hh', CAST(doc_id AS STRING))")
                 % 1_000_000
                 < 100_000
             )
